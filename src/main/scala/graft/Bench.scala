@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-query wall-time bench over SPARK_GRAFT_SF_DIR. Each query runs
   * once as warmup (Janino codegen compilation + JIT dominate a cold
@@ -15,15 +14,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession(cpus)
     // drop every cached dataset AND persisted RDD (MLlib leaves
     // internal RDD caches that catalog.clearCache misses) so queries
     // neither read stale caches nor accumulate heap across the run

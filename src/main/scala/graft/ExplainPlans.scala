@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round tooling: dump `.explain("formatted")` for the
@@ -18,16 +17,8 @@ object ExplainPlans {
     val suffix = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r15")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
     names.foreach { name =>

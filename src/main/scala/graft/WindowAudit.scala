@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window, Aggregate, Distinct, Generate, Join, GlobalLimit, LocalLimit}
 
 /** Optimization-round tooling (r16, VERDICT r15 item 4): per-query
@@ -27,15 +26,7 @@ object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(logLevel = "ERROR")
     val names: Seq[String] =
       if (args.nonEmpty && args(0).nonEmpty)
         args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.core.{AsrWord, BookWord, EqualRun, VWord}
+import graft.core.{AsrWord, BookWord, EqualRun}
 
-/** J1/J2 — ordered sequence-alignment "join" between two word streams
+/** J1 — ordered sequence-alignment "join" between two word streams
   * (SURVEY.md §2.3). No relational equivalent exists, so the difflib
   * kernel runs per-document inside `cogroup`/`mapGroups`: documents are
   * the unit of parallelism, there is exactly one shuffle (by doc_id) on
@@ -38,31 +38,6 @@ object Align {
             case (bi0, bi1, ai0, ai1) =>
               EqualRun(docId, bi0.toLong, bi1.toLong, ai0.toLong, ai1.toLong)
           }
-      }
-  }
-
-  /** J2: `lcs_pairs(a, b)` consensus between assembled-clip words and
-    * validator words per (doc, group) (claude_research_optimal.py:
-    * 365–371, invoked at :497). Emits all equal runs (min length 1)
-    * keyed by (doc_id, group_id); index spaces are clip-local.
-    */
-  def lcsConsensusPairs(
-      used: Dataset[AsrWord], // idx = position within the clip's word list
-      validator: Dataset[VWord])
-      : Dataset[(Long, Long, Long, Long, Long, Long)] = {
-    val spark = used.sparkSession
-    import spark.implicits._
-    // used words carry group in `doc_id`-major key: callers pre-key by
-    // (doc_id << 20 | group) when needed; here we align per doc_id only.
-    used.groupByKey(_.doc_id)
-      .cogroup(validator.groupByKey(_.doc_id)) { (key, us, vs) =>
-        val a = us.toArray.sortBy(_.idx).map(_.norm).toIndexedSeq
-        val b = vs.toArray.sortBy(_.vidx).map(_.norm).toIndexedSeq
-        if (a.isEmpty || b.isEmpty) Iterator.empty
-        else new SequenceMatcher(a, b).equalRuns(1).iterator.map {
-          case (i1, i2, j1, j2) =>
-            (key, i1.toLong, i2.toLong, j1.toLong, j2.toLong, (i2 - i1).toLong)
-        }
       }
   }
 }

@@ -90,11 +90,7 @@ object DistStats {
     * digit-bounded aggregate; ≤ 9 rows out.
     */
   def benford(df: DataFrame, valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100, 0).cast("long")
-    val obs = df.select(cents.as("__c")).filter(col("__c") > 0L)
-      .select(substring(col("__c").cast("string"), 1, 1).cast("int")
-        .as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("observed"))
+    val obs = firstDigitCounts(df, valueCol)
     val tot = obs.agg(sum(col("observed")).cast("long").as("__n"))
     val pd = log(lit(1.0) + lit(1.0) / col("digit").cast("double")) /
       log(lit(10.0))
@@ -105,6 +101,17 @@ object DistStats {
         round((col("observed").cast("double") - e) *
           (col("observed").cast("double") - e) / e, 6).as("chi2_term"))
   }
+
+  /** (digit, observed): first-digit counts of the positive values
+    * at cent precision — the summary [[benford]] scores.
+    */
+  private[graft] def firstDigitCounts(df: DataFrame, valueCol: String)
+      : DataFrame =
+    df.select(round(col(valueCol) * 100, 0).cast("long").as("__c"))
+      .filter(col("__c") > 0L)
+      .select(substring(col("__c").cast("string"), 1, 1).cast("int")
+        .as("digit"))
+      .groupBy(col("digit")).agg(count(lit(1)).as("observed"))
 
   /** X186 — Otsu's threshold over an integral value column: the cut
     * t maximizing between-class variance σ_b²(t) = (s₀N − Sn₀)² /

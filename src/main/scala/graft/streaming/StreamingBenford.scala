@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+
+import graft.operators.DistStats
 
 /** Streaming face of X185 Benford first-digit QA: each micro-batch's
   * digit counts add into a 9-cell grid, and the conformance report
@@ -15,28 +16,21 @@ import org.apache.spark.sql.functions._
   */
 object StreamingBenford {
 
-  final class Tracker private[StreamingBenford] () {
-    private[streaming] val counts = Array.ofDim[Long](10)
+  final class Tracker private[StreamingBenford] ()
+      extends DriverTracker[Int, Long](_ + _) {
 
     def update(batch: DataFrame, valueCol: String): Unit =
-      batch.select(round(col(valueCol) * 100, 0).cast("long").as("__c"))
-        .filter(col("__c") > 0L)
-        .select(substring(col("__c").cast("string"), 1, 1).cast("int")
-          .as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-        .collect()
-        .foreach(r => counts(r.getAs[Int]("digit")) +=
-          r.getAs[Long]("n"))
+      fold(DistStats.firstDigitCounts(batch, valueCol))(r =>
+        Seq(r.getInt(0) -> r.getLong(1)))
 
     /** (digit, observed, expected, chi2_term) rows — the batch
       * operator's exact double shapes over the accumulated grid.
       */
     def report(): Seq[(Int, Long, Double, Double)] = {
-      val n = counts.sum.toDouble
-      (1 to 9).filter(counts(_) > 0L).map { d =>
+      val n = state.values.sum.toDouble
+      state.toSeq.sorted.map { case (d, obs) =>
         val p = math.log(1.0 + 1.0 / d) / math.log(10.0)
         val e = n * p
-        val obs = counts(d)
         val chi = (obs - e) * (obs - e) / e
         (d, obs, math.floor(e * 1e6 + 0.5) / 1e6,
           math.floor(chi * 1e6 + 0.5) / 1e6)

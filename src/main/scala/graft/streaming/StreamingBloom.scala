@@ -16,42 +16,36 @@ import graft.operators.BloomStore
   * micro-batches is IDENTICAL to `BloomStore.build` over the
   * concatenated batches (spec-asserted, not approximate), and the
   * no-false-negative guarantee holds across batch boundaries: a
-  * value seen in ANY earlier batch always tags `might_be_dup`.
+  * value seen in ANY earlier batch always tags `might_be_dup`. A
+  * replayed batch tags against the filter from before its first
+  * arrival, so a replay does not mark its own values as duplicates.
   *
-  * Driver state: bits/32 longs (4096 bits → 128) — the
-  * [[StreamingDrift]]/[[StreamingHll]] bounded-tracker layout.
+  * Driver state: ≤ bits/32 word → bits entries (4096 bits → 128),
+  * folded by [[DriverTracker]].
   */
 object StreamingBloom {
 
   final class Tracker private[StreamingBloom] (bits: Int, hashes: Int,
-      salt: String) {
-    private[streaming] val words = new Array[Long](bits / 32)
-
-    private def store(spark: org.apache.spark.sql.SparkSession)
-        : DataFrame = {
-      import spark.implicits._
-      words.zipWithIndex.collect { case (w, i) if w != 0L =>
-        ("s", i.toLong, w)
-      }.toSeq.toDF("key", "word_idx", "bits")
-    }
+      salt: String) extends DriverTracker[Int, Long](_ | _) {
 
     /** Tag `batch` against everything seen in EARLIER batches, then
       * fold the batch in. Returns (…batch cols…, might_be_dup).
       */
     def tagAndUpdate(batch: DataFrame, valueCol: String): DataFrame = {
       val spark = batch.sparkSession
-      val tagged = BloomStore.mightContain(store(spark),
+      import spark.implicits._
+      val store = before.toSeq.map { case (i, w) => ("s", i.toLong, w) }
+        .toDF("key", "word_idx", "bits")
+      val tagged = BloomStore.mightContain(store,
           batch.select(lit("s").as("key"), col(valueCol)),
           "key", valueCol, bits, hashes, salt)
         .select(col("value").as(valueCol),
           col("might_contain").as("might_be_dup"))
       val out = batch.join(tagged, Seq(valueCol))
         .localCheckpoint(true) // materialize BEFORE mutating state
-      BloomStore.build(batch.select(lit("s").as("key"), col(valueCol)),
-          "key", valueCol, bits, hashes, salt)
-        .collect().foreach { r =>
-          words(r.getAs[Long]("word_idx").toInt) |= r.getAs[Long]("bits")
-        }
+      fold(BloomStore.build(batch.select(lit("s").as("key"), col(valueCol)),
+          "key", valueCol, bits, hashes, salt))(r =>
+        Seq(r.getAs[Long]("word_idx").toInt -> r.getAs[Long]("bits")))
       out
     }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Cms
@@ -14,32 +14,34 @@ import graft.operators.Cms
   * is IDENTICAL to `Cms.sketch` over the concatenated batches
   * (spec-asserted).
   *
-  * Driver state: depth×width longs (4×64 = 256 by default) — the
-  * bounded-tracker layout shared by the whole streaming suite.
+  * Driver state: ≤ depth×width (row, bucket) → count entries (4×64 =
+  * 256 by default), folded by [[DriverTracker]].
   */
 object StreamingCms {
 
-  final class Tracker private[StreamingCms] (depth: Int, width: Int) {
-    private[streaming] val grid = Array.ofDim[Long](depth, width)
+  final class Tracker private[StreamingCms] (depth: Int, width: Int)
+      extends DriverTracker[(Int, Int), Long](_ + _) {
 
     def update(batch: DataFrame, keyCol: String): Unit =
-      Cms.sketch(batch, keyCol, depth, width).collect().foreach { r =>
-        grid(r.getAs[Int]("hash_row"))(r.getAs[Long]("bucket").toInt) +=
-          r.getAs[Long]("cnt")
-      }
+      fold(Cms.sketch(batch, keyCol, depth, width))(r =>
+        Seq((r.getAs[Int]("hash_row"), r.getAs[Long]("bucket").toInt) ->
+          r.getAs[Long]("cnt")))
 
     /** Point estimate: min over rows of the key's bucket counter —
       * the batch operator's exact arithmetic over the accumulated
-      * grid.
+      * grid. The buckets come from the sketch's own hash columns
+      * projected over a one-row local relation, which Spark folds on
+      * the driver: a lookup launches no job.
       */
     def estimate(key: String): Long = {
-      val spark = org.apache.spark.sql.SparkSession.active
+      val spark = SparkSession.active
       import spark.implicits._
-      val buckets = Cms.sketch(Seq(key).toDF(s"__k"), "__k",
-          depth, width)
-        .collect().map(r => r.getAs[Int]("hash_row") ->
-          r.getAs[Long]("bucket").toInt)
-      buckets.map { case (j, b) => grid(j)(b) }.min
+      val buckets = Seq(key).toDF("__k")
+        .select((0 until depth).map(j =>
+          Cms.bucket(col("__k"), j, width)): _*)
+        .collect()(0)
+      (0 until depth).map(j =>
+        state.getOrElse((j, buckets.getLong(j).toInt), 0L)).min
     }
   }
 

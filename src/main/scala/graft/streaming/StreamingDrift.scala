@@ -12,42 +12,25 @@ import org.apache.spark.sql.functions._
   * score after N batches is IDENTICAL to the batch operator run over
   * the concatenated current slice (spec-asserted, not approximate).
   *
-  * Driver state: `buckets` longs — constant, the [[StreamingHll]] /
-  * [[StreamingHeavyHitters]] bounded-tracker layout.
+  * Driver state: ≤ `buckets` band → count entries, folded by
+  * [[DriverTracker]].
   */
 object StreamingDrift {
 
-  final class Tracker private[StreamingDrift] (
-      private[streaming] val boundaries: Array[Double],
-      private[streaming] val baseline: Array[Long]) {
+  final class Tracker private[StreamingDrift] (boundaries: Array[Double],
+      baseline: Array[Long]) extends DriverTracker[Int, Long](_ + _) {
     private val buckets = baseline.length
-    private val current = new Array[Long](buckets)
-
-    private[StreamingDrift] def bandCounts(batch: DataFrame,
-        valueCol: String): Array[Long] = {
-      val band = boundaries.zipWithIndex
-        .map { case (c, _) =>
-          when(col(valueCol).cast("double") > c, 1).otherwise(0)
-        }.reduce(_ + _)
-      val out = new Array[Long](buckets)
-      batch.groupBy(band.as("__band")).agg(count(lit(1)).as("__c"))
-        .collect().foreach { r =>
-          out(r.getAs[Int]("__band")) = r.getAs[Long]("__c")
-        }
-      out
-    }
 
     /** Add one micro-batch of current-slice values. */
-    def update(batch: DataFrame, valueCol: String): Unit = {
-      val c = bandCounts(batch, valueCol)
-      var i = 0
-      while (i < buckets) { current(i) += c(i); i += 1 }
-    }
+    def update(batch: DataFrame, valueCol: String): Unit =
+      fold(bandCounts(batch, valueCol, boundaries))(r =>
+        Seq(r.getInt(0) -> r.getLong(1)))
 
     /** PSI of the accumulated current histogram vs the baseline
       * (add-one smoothing, the batch operator's exact arithmetic).
       */
     def psi(): Double = {
+      val current = (0 until buckets).map(state.getOrElse(_, 0L))
       val nb = baseline.sum.toDouble + buckets
       val nc = current.sum.toDouble + buckets
       var s = 0.0; var i = 0
@@ -70,6 +53,14 @@ object StreamingDrift {
       else "major"
   }
 
+  /** (band, count) rows: band = number of boundaries below the value. */
+  private def bandCounts(df: DataFrame, valueCol: String,
+      boundaries: Array[Double]): DataFrame =
+    df.groupBy(boundaries.map(c =>
+        when(col(valueCol).cast("double") > c, 1).otherwise(0))
+        .reduce(_ + _).as("__band"))
+      .agg(count(lit(1)).as("__c"))
+
   /** Fit the baseline: equal-population quantile boundaries + band
     * counts from the reference snapshot.
     */
@@ -81,9 +72,9 @@ object StreamingDrift {
       .agg(percentile(col(valueCol).cast("double"),
         typedlit(probs)).as("__c"))
       .collect().head.getSeq[Double](0).toArray
-    val tracker = new Tracker(cuts, new Array[Long](buckets))
-    val base = tracker.bandCounts(reference, valueCol)
-    System.arraycopy(base, 0, tracker.baseline, 0, buckets)
-    tracker
+    val base = new Array[Long](buckets)
+    bandCounts(reference, valueCol, cuts).collect()
+      .foreach(r => base(r.getInt(0)) = r.getLong(1))
+    new Tracker(cuts, base)
   }
 }

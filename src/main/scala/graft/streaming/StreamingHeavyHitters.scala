@@ -1,10 +1,6 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.HeavyHitters
 
@@ -31,42 +27,42 @@ import graft.operators.HeavyHitters
   * mapPartitions (no shuffle) producing ≤ partitions·k skinny rows;
   * driver state is ≤ k counters + one long, independent of stream
   * length — the state-store-free analogue of a stateful top-k.
+  *
+  * Wiring: `DriverTracker.foreachBatch(items, tracker)` with a body
+  * that calls `update` and then reads `n` and `candidates`. A
+  * replayed batch is not folded again, so those reads repeat the
+  * values of the first attempt.
   */
 object StreamingHeavyHitters {
 
-  /** Driver-held cumulative MG summary (≤ k counters + prefix count).
-    * Thread-safe under foreachBatch's serial batch execution; `merge`
-    * consumes pass-1 summary rows ((item, est) with a null-item
-    * sentinel per partition carrying its element count).
+  /** Driver-held cumulative MG summary: ≤ k `Some(item)` counters plus
+    * the prefix count under `None` (pass 1's null-item sentinel rows —
+    * misraGries drops null ITEMS, so no counter row carries null).
     */
-  final class Tracker(val k: Int) {
+  final class Tracker(val k: Int)
+      extends DriverTracker[Option[String], Long](_ + _) {
     require(k >= 1, s"k must be >= 1, got $k")
-    private val counts = mutable.HashMap.empty[String, Long]
-    private var total = 0L
 
-    def n: Long = total
-    def size: Int = counts.size
+    def n: Long = state.getOrElse(None, 0L)
+    def size: Int = (state - None).size
 
-    private[streaming] def merge(rows: Iterator[(String, Long)]): Unit = {
-      // the null key can only be the per-partition count sentinel:
-      // misraGries drops null ITEMS before they reach the sketch (and
-      // excludes them from n), so no counter row ever carries null
-      rows.foreach {
-        case (null, np) => total += np
-        case (item, est) =>
-          counts.update(item, counts.getOrElse(item, 0L) + est)
-      }
-      // MG compaction back to <= k counters: subtract the (k+1)-th
-      // largest value from every counter, drop non-positive — the
-      // standard mergeable-summary reduction (error adds, stays
-      // <= N/(k+1) cumulatively)
-      if (counts.size > k) {
-        val cut = counts.values.toArray.sorted(Ordering[Long].reverse)(k)
-        val dead = mutable.ArrayBuffer.empty[String]
-        counts.foreachEntry { (item, c) =>
-          if (c - cut <= 0L) dead += item else counts.update(item, c - cut)
-        }
-        dead.foreach(counts.remove)
+    /** Fold one batch of items. */
+    def update(batch: DataFrame, itemCol: String): Unit =
+      fold(HeavyHitters.summaries(batch, itemCol, k))(r =>
+        Seq(Option(r.getString(0)) -> r.getLong(1)))
+
+    // MG compaction back to <= k counters: subtract the (k+1)-th
+    // largest value from every counter, drop non-positive — the
+    // standard mergeable-summary reduction (error adds, stays
+    // <= N/(k+1) cumulatively)
+    override protected def settle(s: Map[Option[String], Long])
+        : Map[Option[String], Long] = {
+      val items = s - None
+      if (items.size <= k) s
+      else {
+        val cut = items.values.toArray.sorted(Ordering[Long].reverse)(k)
+        items.collect { case (i, c) if c > cut => i -> (c - cut) } ++
+          s.get(None).map(None -> _)
       }
     }
 
@@ -78,35 +74,13 @@ object StreamingHeavyHitters {
     def candidates(minFraction: Double): Seq[(String, Long)] = {
       require(minFraction > 1.0 / (k + 1),
         s"minFraction=$minFraction must exceed 1/(k+1)=${1.0 / (k + 1)}")
-      val minCount = math.ceil(minFraction * total).toLong
-      val slack = total / (k + 1)
-      counts.iterator
-        .filter { case (_, est) => est >= minCount - slack }
-        .toSeq.sortBy { case (item, est) => (-est, item) }
-    }
-  }
-
-  /** Wire a streaming frame into a foreachBatch writer that folds each
-    * micro-batch into `tracker` and hands (batchId, prefix N, current
-    * candidates) to `sink`. Caller adds trigger/checkpoint and starts.
-    */
-  def track(items: DataFrame, itemCol: String, tracker: Tracker,
-      minFraction: Double)(
-      sink: (Long, Long, Seq[(String, Long)]) => Unit)
-      : DataStreamWriter[Row] = {
-    // fail at wiring time, not asynchronously inside batch 0 (the
-    // same up-front check as the batch twin exactByFraction)
-    require(minFraction > 1.0 / (tracker.k + 1),
-      s"minFraction=$minFraction must exceed " +
-        s"1/(k+1)=${1.0 / (tracker.k + 1)}")
-    items.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val rows = HeavyHitters.summaries(batch, itemCol, tracker.k)
-        .collect()
-        .iterator
-        .map(r => (if (r.isNullAt(0)) null else r.getString(0),
-          r.getLong(1)))
-      tracker.merge(rows)
-      sink(batchId, tracker.n, tracker.candidates(minFraction))
+      val minCount = math.ceil(minFraction * n).toLong
+      val slack = n / (k + 1)
+      state.toSeq
+        .collect { case (Some(item), est) if est >= minCount - slack =>
+          (item, est)
+        }
+        .sortBy { case (item, est) => (-est, item) }
     }
   }
 }

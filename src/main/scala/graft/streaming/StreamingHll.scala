@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Hll
@@ -20,36 +18,27 @@ import graft.operators.Hll
   * equality now), and tracks the exact count at the configured
   * precision.
   *
-  * Driver state: one 2^p int array per group — independent of stream
+  * Driver state: 2^p registers per group — independent of stream
   * length and of per-group cardinality (the point of HLL).
   */
 object StreamingHll {
 
-  final class Tracker(val p: Int = Hll.DefaultP) {
-    private val regs = mutable.HashMap.empty[String, Array[Int]]
+  final class Tracker(val p: Int = Hll.DefaultP)
+      extends DriverTracker[String, IndexedSeq[Int]](
+        _.lazyZip(_).map((a, b) => math.max(a, b))) {
 
     /** Merge one micro-batch: `batch` must have (groupCol, keyCol). */
-    def update(batch: DataFrame, groupCol: String, keyCol: String): Unit = {
-      val parts = Hll.groupSketches(batch, groupCol, keyCol, p)
-        .select(groupCol, "sketch").collect()
-      parts.foreach { r =>
-        val g = r.get(0).toString
-        val sk = r.getSeq[Int](1).toArray
-        val cur = regs.getOrElseUpdate(g, new Array[Int](1 << p))
-        var i = 0
-        while (i < cur.length) {
-          if (sk(i) > cur(i)) cur(i) = sk(i)
-          i += 1
-        }
-      }
-    }
+    def update(batch: DataFrame, groupCol: String, keyCol: String): Unit =
+      fold(Hll.groupSketches(batch, groupCol, keyCol, p)
+          .select(groupCol, "sketch"))(r =>
+        Seq(r.get(0).toString -> r.getSeq[Int](1).toIndexedSeq))
 
     /** Current per-group estimates (the batch operator's integer
       * estimator, bit-identical to [[Hll.estimateFromRegisters]]).
       */
     def estimates(): Map[String, Long] =
-      regs.map { case (g, r) =>
-        g -> Hll.estimateFromRegisters(r, p)
-      }.toMap
+      state.map { case (g, r) =>
+        g -> Hll.estimateFromRegisters(r.toArray, p)
+      }
   }
 }

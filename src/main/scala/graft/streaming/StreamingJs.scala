@@ -16,43 +16,33 @@ import org.apache.spark.sql.functions._
   *
   * Driver state: one long per OBSERVED category (category-bounded,
   * with a loud cap guard — a drifting stream inventing unbounded
-  * categories is itself the alarm).
+  * categories is itself the alarm). The guard runs before the batch
+  * is committed, so a rejected batch leaves the state untouched.
   */
 object StreamingJs {
 
-  final class Tracker private[StreamingJs] (
-      private[streaming] val baseline: Map[String, Long],
-      maxCategories: Int) {
-    private[streaming] val current =
-      scala.collection.mutable.Map.empty[String, Long]
+  final class Tracker private[StreamingJs] (baseline: Map[String, Long],
+      maxCategories: Int) extends DriverTracker[String, Long](_ + _) {
 
-    private def counts(batch: DataFrame, categoryCol: String)
-        : Seq[(String, Long)] =
-      batch.groupBy(col(categoryCol).cast("string").as("__cat"))
-        .agg(count(lit(1)).as("__c"))
-        .collect().map(r => r.getString(0) -> r.getAs[Long]("__c"))
-        .toSeq
+    def update(batch: DataFrame, categoryCol: String): Unit =
+      fold(counts(batch, categoryCol))(r => Seq(r.getString(0) -> r.getLong(1)))
 
-    def update(batch: DataFrame, categoryCol: String): Unit = {
-      counts(batch, categoryCol).foreach { case (cat, c) =>
-        current(cat) = current.getOrElse(cat, 0L) + c
-      }
-      require(current.size <= maxCategories,
-        s"category blow-up: ${current.size} > $maxCategories — " +
+    override protected def validate(next: Map[String, Long]): Unit =
+      require(next.size <= maxCategories,
+        s"category blow-up: ${next.size} > $maxCategories — " +
           "the stream is inventing categories; investigate upstream")
-    }
 
     /** JSD (nats) of accumulated current vs baseline — the batch
       * operator's exact per-category arithmetic.
       */
     def jsdNats(): Double = {
       val nb = baseline.values.sum.toDouble
-      val nc = current.values.sum.toDouble
-      val cats = (baseline.keySet ++ current.keySet).toSeq.sorted
+      val nc = state.values.sum.toDouble
+      val cats = (baseline.keySet ++ state.keySet).toSeq.sorted
       var s = 0.0
       cats.foreach { cat =>
         val cb = baseline.getOrElse(cat, 0L)
-        val cc = current.getOrElse(cat, 0L)
+        val cc = state.getOrElse(cat, 0L)
         val p = if (nb > 0) cb / nb else 0.0
         val q = if (nc > 0) cc / nc else 0.0
         val m = (p + q) / 2.0
@@ -65,14 +55,16 @@ object StreamingJs {
     def jsdBits(): Double = jsdNats() / math.log(2.0)
   }
 
+  /** (category, count) rows of one slice. */
+  private def counts(df: DataFrame, categoryCol: String): DataFrame =
+    df.groupBy(col(categoryCol).cast("string").as("__cat"))
+      .agg(count(lit(1)).as("__c"))
+
   /** Freeze the baseline distribution from a reference snapshot. */
   def fitBaseline(reference: DataFrame, categoryCol: String,
       maxCategories: Int = 10000): Tracker = {
-    val base = reference
-      .groupBy(col(categoryCol).cast("string").as("__cat"))
-      .agg(count(lit(1)).as("__c"))
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("__c"))
-      .toMap
+    val base = counts(reference, categoryCol).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     require(base.size <= maxCategories,
       s"baseline has ${base.size} categories > cap $maxCategories")
     new Tracker(base, maxCategories)

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+
+import graft.operators.Kmv
 
 /** X245 — streaming face of the X244 KMV bottom-k distinct sketch:
   * each micro-batch contributes its per-group bottom-k hash set, and
@@ -10,41 +12,30 @@ import org.apache.spark.sql.functions._
   * bottom-k alone) makes the tracker after N batches IDENTICAL to
   * [[graft.operators.Kmv.sketch]] over the concatenated input
   * (spec-asserted), so the live distinct-count monitor and the batch
-  * audit can never disagree. State: ≤ k longs per group.
+  * audit can never disagree. Each batch's summary is `Kmv.sketch`
+  * itself. State: ≤ k longs per group.
   */
 object StreamingKmv {
 
-  final class Tracker private[StreamingKmv] (k: Int, salt: String) {
+  final class Tracker private[StreamingKmv] (k: Int, salt: String)
+      extends DriverTracker[String, Vector[Long]](
+        (a, b) => (a ++ b).distinct.sorted.take(k)) {
     require(k >= 4 && k <= 65536, s"bad k $k")
-    private[streaming] val bottom =
-      scala.collection.mutable.Map.empty[String, Vector[Long]]
 
+    // the batch's own bottom-k is enough — anything below rank k in
+    // the union is below rank k in its own batch
     def update(batch: DataFrame, groupCol: String, keyCol: String)
-        : Unit = {
-      val h = conv(substring(md5(concat(lit(s"$salt:"),
-        col(keyCol).cast("string"))), 1, 8), 16, 10).cast("long")
-      // per-batch bottom-k is enough — anything below rank k in the
-      // union is below rank k in its own batch
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("__g")).orderBy(col("__h"))
-      batch.select(col(groupCol).cast("string").as("__g"), h.as("__h"))
-        .distinct()
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= k)
-        .collect()
-        .groupBy(_.getAs[String]("__g"))
-        .foreach { case (g, rows) =>
-          val merged = (bottom.getOrElse(g, Vector.empty) ++
-            rows.map(_.getAs[Long]("__h"))).distinct.sorted.take(k)
-          bottom(g) = merged
-        }
-    }
+        : Unit =
+      fold(Kmv.sketch(
+          batch.withColumn(groupCol, col(groupCol).cast("string")),
+          groupCol, keyCol, k, salt))(r =>
+        Seq(r.getString(0) -> Vector(r.getLong(1))))
 
     /** (group, n_kept, est_distinct) — exact below k, the batch
       * operator's (k−1)·2³²/h₍k₎ shape at k.
       */
     def report(): Seq[(String, Int, Double)] =
-      bottom.toSeq.sortBy(_._1).map { case (g, hs) =>
+      state.toSeq.sortBy(_._1).map { case (g, hs) =>
         val est =
           if (hs.length < k) hs.length.toDouble
           else (k - 1).toDouble * 4294967296.0 / hs.last.toDouble

@@ -15,23 +15,18 @@ import graft.operators.LogHistogram
   * from constant state.
   *
   * Driver state: one long per OCCUPIED bucket (≤ 16·octaves ≈ a few
-  * hundred for any realistic value range) — the bounded-tracker
-  * layout of [[StreamingDrift]]/[[StreamingHll]]/[[StreamingBloom]].
+  * hundred for any realistic value range), folded by
+  * [[DriverTracker]].
   */
 object StreamingLogHistogram {
 
-  final class Tracker private[StreamingLogHistogram] (subBits: Int) {
-    private[streaming] val buckets =
-      scala.collection.mutable.Map.empty[Long, Long]
+  final class Tracker private[StreamingLogHistogram] (subBits: Int)
+      extends DriverTracker[Long, Long](_ + _) {
 
     def update(batch: DataFrame, valueCol: String): Unit =
-      LogHistogram.build(
+      fold(LogHistogram.build(
           batch.select(lit("s").as("k"), col(valueCol)), "k", valueCol,
-          subBits)
-        .collect().foreach { r =>
-          val b = r.getAs[Long]("bucket")
-          buckets(b) = buckets.getOrElse(b, 0L) + r.getAs[Long]("cnt")
-        }
+          subBits))(r => Seq(r.getAs[Long]("bucket") -> r.getAs[Long]("cnt")))
 
     /** Quantile estimate from the accumulated store — the batch
       * operator's exact walk (rank floor(q·(n−1))+1, bucket
@@ -39,11 +34,11 @@ object StreamingLogHistogram {
       */
     def quantile(q: Double): Double = {
       require(q >= 0 && q <= 1, s"bad q $q")
-      val n = buckets.values.sum
+      val n = state.values.sum
       require(n > 0, "empty tracker")
       val target = math.floor(q * (n - 1).toDouble).toLong + 1
       var cum = 0L
-      val sorted = buckets.toSeq.sortBy(_._1)
+      val sorted = state.toSeq.sortBy(_._1)
       val idx = sorted.find { case (_, c) => cum += c; cum >= target }
         .get._1
       val cap = 1L << subBits

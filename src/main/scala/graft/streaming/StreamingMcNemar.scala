@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+
+import graft.operators.Hypothesis
 
 /** X246 — streaming face of X227 McNemar: the 2×2 paired-verdict
   * grid is four longs of tracker state (the smallest member of the
@@ -14,26 +15,22 @@ import org.apache.spark.sql.functions._
   */
 object StreamingMcNemar {
 
-  final class Tracker private[StreamingMcNemar] () {
-    private[streaming] var n00, n01, n10, n11 = 0L
+  /** State: cell index 2·a + b → count, for verdicts a, b ∈ {0, 1};
+    * the summary is the batch operator's own four cell counts.
+    */
+  final class Tracker private[StreamingMcNemar] ()
+      extends DriverTracker[Int, Long](_ + _) {
 
-    def update(batch: DataFrame, aCol: Column, bCol: Column): Unit = {
-      val r = batch.agg(
-        sum(when(!aCol && !bCol, 1L).otherwise(0L)).as("c00"),
-        sum(when(!aCol && bCol, 1L).otherwise(0L)).as("c01"),
-        sum(when(aCol && !bCol, 1L).otherwise(0L)).as("c10"),
-        sum(when(aCol && bCol, 1L).otherwise(0L)).as("c11")).head()
-      n00 += Option(r.getAs[Long]("c00")).getOrElse(0L)
-      n01 += Option(r.getAs[Long]("c01")).getOrElse(0L)
-      n10 += Option(r.getAs[Long]("c10")).getOrElse(0L)
-      n11 += Option(r.getAs[Long]("c11")).getOrElse(0L)
-    }
+    def update(batch: DataFrame, aCol: Column, bCol: Column): Unit =
+      fold(Hypothesis.mcnemar(batch, aCol, bCol)
+        .select("n00", "n01", "n10", "n11"))(DriverTracker.cells)
 
     /** (n00, n01, n10, n11, chi2, shareAOnly) — the batch operator's
       * double shapes; chi2/share None when no disagreement yet.
       */
     def report(): (Long, Long, Long, Long, Option[Double],
         Option[Double]) = {
+      val Seq(n00, n01, n10, n11) = (0 until 4).map(state.getOrElse(_, 0L))
       val b = n10.toDouble
       val c = n01.toDouble
       if (n01 + n10 == 0L) (n00, n01, n10, n11, None, None)

@@ -26,35 +26,23 @@ object StreamingPii {
       if (nDocs == 0) 0.0 else nFlagged.toDouble / nDocs
   }
 
-  final class Tracker {
-    private var census = Census(0L, 0L, 0L, 0L, 0L, 0L)
+  /** State: census field index → count. */
+  final class Tracker extends DriverTracker[Int, Long](_ + _) {
 
     /** Merge one micro-batch of (docCol, textCol) rows. */
     def update(batch: DataFrame, docCol: String, textCol: String)
         : Unit = {
-      val r = Privacy.piiScan(batch, docCol, textCol)
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(when(col("has_pii"), 1L).otherwise(0L)).cast("long")
-            .as("f"),
-          sum(col("n_emails")).cast("long").as("e"),
-          sum(col("n_phones")).cast("long").as("p"),
-          sum(col("n_ipv4")).cast("long").as("i"),
-          sum(col("n_ssn")).cast("long").as("s"))
-        .head()
-      census = Census(
-        census.nDocs + r.getAs[Long]("n"),
-        census.nFlagged + Option(r.get(1)).map(_ => r.getAs[Long]("f"))
-          .getOrElse(0L),
-        census.nEmails + Option(r.get(2)).map(_ => r.getAs[Long]("e"))
-          .getOrElse(0L),
-        census.nPhones + Option(r.get(3)).map(_ => r.getAs[Long]("p"))
-          .getOrElse(0L),
-        census.nIpv4 + Option(r.get(4)).map(_ => r.getAs[Long]("i"))
-          .getOrElse(0L),
-        census.nSsn + Option(r.get(5)).map(_ => r.getAs[Long]("s"))
-          .getOrElse(0L))
+      val sums = Seq(count(lit(1)),
+        sum(when(col("has_pii"), 1L).otherwise(0L)), sum(col("n_emails")),
+        sum(col("n_phones")), sum(col("n_ipv4")), sum(col("n_ssn")))
+        .map(_.cast("long"))
+      fold(Privacy.piiScan(batch, docCol, textCol)
+        .agg(sums.head, sums.tail: _*))(DriverTracker.cells)
     }
 
-    def current: Census = census
+    def current: Census = {
+      val Seq(d, f, e, p, i, s) = (0 until 6).map(state.getOrElse(_, 0L))
+      Census(d, f, e, p, i, s)
+    }
   }
 }

@@ -9,44 +9,42 @@ import org.apache.spark.sql.functions._
   * driver-held cumulative panel, readable after any batch.
   *
   * All state is plain long counters (\|gates\|² for ablation, three
-  * for the clip panel) — constant regardless of stream length, the
-  * [[StreamingDrift]]/[[StreamingHll]] bounded-tracker layout — and
-  * because every counter is an exact integer, the cumulative panel
-  * after N batches is IDENTICAL to the batch operator over the
-  * concatenated input (parity spec-asserted, not approximate).
+  * for the clip panel) — constant regardless of stream length, folded
+  * by [[DriverTracker]] — and because every counter is an exact
+  * integer, the cumulative panel after N batches is IDENTICAL to the
+  * batch operator over the concatenated input (parity spec-asserted,
+  * not approximate).
   */
 object StreamingQa {
 
   /** Cumulative kill-overlap matrix: the streaming twin of
     * `CorpusOps.filterAblation`. Gates are fixed at construction
     * (plan literals — per batch ONE aggregate, no shuffle of rows).
+    * State: pair index → docs killed by both gates of the pair, and
+    * index `pairs.size` → docs seen.
     */
-  final class AblationTracker(gates: Seq[(String, Column)]) {
+  final class AblationTracker(gates: Seq[(String, Column)])
+      extends DriverTracker[Int, Long](_ + _) {
     require(gates.size >= 2 && gates.size <= 32,
       s"need 2..32 gates, got ${gates.size}")
     require(gates.map(_._1).distinct.size == gates.size,
       "duplicate gate names")
     private val names = gates.map(_._1)
-    private var nDocs = 0L
-    private val both =
-      scala.collection.mutable.HashMap.empty[(String, String), Long]
+    private val pairs =
+      for ((na, ga) <- gates; (nb, gb) <- gates if na <= nb)
+        yield (na, nb) -> (ga && gb)
+    private val index = pairs.map(_._1).zipWithIndex.toMap
 
     /** Fold one micro-batch's counters in. */
     def update(batch: DataFrame): Unit = {
-      val aggs = (for {
-        (na, ga) <- gates; (nb, gb) <- gates
-        if na <= nb
-      } yield sum(when(ga && gb, 1L).otherwise(0L)).cast("long")
-        .as(s"__k_${na}__$nb")) :+
-        count(lit(1)).cast("long").as("__n")
-      val r = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
-      nDocs += r.getAs[Long]("__n")
-      for {
-        na <- names; nb <- names
-        if na <= nb
-      } both((na, nb)) = both.getOrElse((na, nb), 0L) +
-        r.getAs[Long](s"__k_${na}__$nb")
+      val aggs = pairs.map { case (_, g) =>
+        sum(when(g, 1L).otherwise(0L)).cast("long")
+      } :+ count(lit(1)).cast("long")
+      fold(batch.agg(aggs.head, aggs.tail: _*))(DriverTracker.cells)
     }
+
+    private def killed(na: String, nb: String): Long =
+      state.getOrElse(index((na, nb)), 0L)
 
     /** The cumulative matrix in the batch operator's row shape:
       * (n_docs, gate_a, gate_b, n_killed_a, n_killed_b,
@@ -57,36 +55,35 @@ object StreamingQa {
         na <- names; nb <- names
         if na < nb
       } yield {
-        val a = both.getOrElse((na, na), 0L)
-        val b = both.getOrElse((nb, nb), 0L)
-        val ab = both.getOrElse((na, nb), 0L)
+        val a = killed(na, na)
+        val b = killed(nb, nb)
+        val ab = killed(na, nb)
         val union = a + b - ab
         val jac: java.lang.Double =
           if (union > 0L)
             BigDecimal(ab.toDouble / union)
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
           else null
-        Row(nDocs, na, nb, a, b, ab, jac)
+        Row(n, na, nb, a, b, ab, jac)
       }
 
-    def n: Long = nDocs
+    def n: Long = state.getOrElse(pairs.size, 0L)
   }
 
   /** Cumulative clip panel: total samples, clipped samples, and the
     * longest clipped run seen in any SINGLE clip (runs never span
     * clips, so the cross-batch max is exact).
     */
-  final class ClipTracker(fullScale: Int = 32767) {
-    private var samples = 0L
-    private var clipped = 0L
-    private var maxRun = 0L
+  final class ClipTracker(fullScale: Int = 32767)
+      extends DriverTracker[Unit, (Long, Long, Long)]((a, b) =>
+        (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3))) {
 
     /** Fold one micro-batch of decoded clips (pcm samples column of
       * array<int>).
       */
     def update(batch: DataFrame, samplesCol: String): Unit = {
       val fs = fullScale
-      val perClip = batch.select(col(samplesCol).as("__s"))
+      fold(batch.select(col(samplesCol).as("__s"))
         .select(
           size(col("__s")).cast("long").as("__n"),
           size(expr(s"filter(__s, v -> abs(v) >= $fs)")).cast("long")
@@ -99,20 +96,17 @@ object StreamingQa {
                      'best', greatest(acc.best, acc.run + 1L)),
                    named_struct('run', 0L, 'best', acc.best)),
                  acc -> acc.best)""").as("__r"))
-        .agg(sum(col("__n")).cast("long").as("__n"),
-          sum(col("__c")).cast("long").as("__c"),
-          max(col("__r")).cast("long").as("__r"))
-        .collect()(0)
-      samples += perClip.getAs[Long]("__n")
-      clipped += perClip.getAs[Long]("__c")
-      if (!perClip.isNullAt(2))
-        maxRun = math.max(maxRun, perClip.getAs[Long]("__r"))
+        .agg(coalesce(sum(col("__n")), lit(0L)).cast("long"),
+          coalesce(sum(col("__c")), lit(0L)).cast("long"),
+          coalesce(max(col("__r")), lit(0L)).cast("long")))(r =>
+        Seq(() -> ((r.getLong(0), r.getLong(1), r.getLong(2)))))
     }
 
-    def nSamples: Long = samples
-    def nClipped: Long = clipped
-    def longestRun: Long = maxRun
+    private def panel = state.getOrElse((), (0L, 0L, 0L))
+    def nSamples: Long = panel._1
+    def nClipped: Long = panel._2
+    def longestRun: Long = panel._3
     def clipRatio: Double =
-      if (samples > 0L) clipped.toDouble / samples else 0.0
+      if (nSamples > 0L) nClipped.toDouble / nSamples else 0.0
   }
 }

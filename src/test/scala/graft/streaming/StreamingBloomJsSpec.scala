@@ -49,8 +49,9 @@ class StreamingBloomJsSpec extends AnyFunSuite {
       batches.flatten.map(("s", _)).toDF("key", "v"), "key", "v")
       .collect().map(r => r.getAs[Long]("word_idx").toInt ->
         r.getAs[Long]("bits")).toMap
-    tracker.words.zipWithIndex.foreach { case (w, i) =>
-      assert(w == whole.getOrElse(i, 0L), s"word $i differs")
+    (0 until 4096 / 32).foreach { i =>
+      assert(tracker.state.getOrElse(i, 0L) == whole.getOrElse(i, 0L),
+        s"word $i differs")
     }
   }
 
@@ -95,5 +96,29 @@ class StreamingBloomJsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       tracker.update((1 to 10).map(i => s"cat$i").toDF("c"), "c")
     }
+  }
+
+  test("a rejected JSD batch leaves score and state as before it, so " +
+    "a retry is not counted twice") {
+    val s = spark
+    import s.implicits._
+    def fresh() = StreamingJs.fitBaseline(
+      Seq("a", "b").toDF("c"), "c", maxCategories = 3)
+    val tracker = fresh()
+    tracker.update(Seq("a", "a", "c").toDF("c"), "c")
+    val jsd = tracker.jsdNats()
+    val state = tracker.state
+    val blowUp = ("a" +: (1 to 10).map(i => s"cat$i")).toDF("c")
+    (1 to 2).foreach { _ =>
+      intercept[IllegalArgumentException](tracker.update(blowUp, "c"))
+      assert(tracker.jsdNats() == jsd)
+      assert(tracker.state == state)
+    }
+    // the next good batch folds in as if the rejected one never came
+    tracker.update(Seq("b").toDF("c"), "c")
+    val once = fresh()
+    once.update(Seq("a", "a", "c", "b").toDF("c"), "c")
+    assert(tracker.state == once.state)
+    assert(tracker.jsdNats() == once.jsdNats())
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkHarness
@@ -25,12 +27,44 @@ class StreamingCmsSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Int]("hash_row"),
         r.getAs[Long]("bucket").toInt) -> r.getAs[Long]("cnt")).toMap
     for (j <- 0 until 4; b <- 0 until 64) {
-      assert(tracker.grid(j)(b) == whole.getOrElse((j, b), 0L),
+      assert(tracker.state.getOrElse((j, b), 0L) ==
+        whole.getOrElse((j, b), 0L),
         s"cell ($j, $b)")
     }
     assert(tracker.estimate("x") >= 50L)
     assert(tracker.estimate("y") >= 6L)
     assert(tracker.estimate("never-seen") <= tracker.estimate("x"))
+  }
+
+  test("streaming CMS point lookups launch no Spark job and equal the " +
+    "batch estimate over the concatenated batches") {
+    val s = spark
+    import s.implicits._
+    val keys = (1 to 40).map(i => s"k${i % 13}")
+    val tracker = StreamingCms.tracker()
+    keys.grouped(15).foreach(b => tracker.update(b.toDF("k"), "k"))
+    val probes = (0 until 13).map(i => s"k$i") :+ "never-seen"
+    val want = Cms.estimate(Cms.sketch(keys.toDF("k"), "k"),
+        probes.toDF("k"), "k")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val group = "cms-point-lookups"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(listener)
+    s.sparkContext.setJobGroup(group, "CMS point lookups")
+    try {
+      val got = probes.map(k => k -> tracker.estimate(k)).toMap
+      ListenerDrain(s.sparkContext)
+      assert(jobs.get == 0, s"${jobs.get} jobs for ${probes.size} lookups")
+      assert(got == want)
+    } finally {
+      s.sparkContext.clearJobGroup()
+      s.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("mutualInformation: independent columns give ~0, identical " +

@@ -36,9 +36,10 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
     val mem = MemoryStream[String]
     val tracker = new StreamingHeavyHitters.Tracker(k)
     var last: (Long, Seq[(String, Long)]) = (0L, Nil)
-    val q = StreamingHeavyHitters.track(
-        mem.toDF().toDF("token"), "token", tracker, minFraction) {
-      (_, prefixN, cands) => last = (prefixN, cands)
+    val q = DriverTracker.foreachBatch(mem.toDF().toDF("token"), tracker) {
+      (batch, _) =>
+        tracker.update(batch, "token")
+        last = (tracker.n, tracker.candidates(minFraction))
     }.start()
     batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     q.stop()
@@ -60,9 +61,10 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
 
   test("tracker: compaction keeps <= k counters and rejects an " +
     "unsafe fraction") {
+    val s = spark
+    import s.implicits._
     val tracker = new StreamingHeavyHitters.Tracker(2)
-    tracker.merge(Iterator((null, 6L),
-      ("a", 3L), ("b", 2L), ("c", 1L)))
+    tracker.update(Seq("a", "a", "a", "b", "b", "c").toDF("t"), "t")
     assert(tracker.size <= 2)
     assert(tracker.n == 6L)
     intercept[IllegalArgumentException] {

@@ -37,7 +37,7 @@ class StreamingKmvMcNemarSpec extends AnyFunSuite {
         g -> rows.map(_.getAs[Long]("h")).sorted.toVector
       }
     got.foreach { case (g, _, _) =>
-      assert(t.bottom(g) == batchSets(g), s"bottom-k diverged for $g")
+      assert(t.state(g) == batchSets(g), s"bottom-k diverged for $g")
     }
   }
 

@@ -60,7 +60,7 @@ class TextCleanSpec extends AnyFunSuite {
       batches.flatten.map(("s", _)).toDF("k", "v"), "k", "v")
     val wholeMap = whole.collect()
       .map(r => r.getLong(1) -> r.getLong(2)).toMap
-    assert(tracker.buckets.toMap == wholeMap)
+    assert(tracker.state == wholeMap)
     // quantile readouts equal the batch operator's estimates
     val batchQ = LogHistogram.quantiles(whole, Seq(0.5, 0.9, 0.99))
       .collect().map(r => r.getAs[Double]("q") ->
