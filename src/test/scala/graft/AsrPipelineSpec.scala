@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.asr.AmplitudeRecognizer
@@ -141,6 +143,80 @@ class AsrPipelineSpec extends AnyFunSuite {
     assert(pcmLen / 2.0 / Sr >= expectMin - 0.05)
     assert(java.nio.file.Files.list(
       java.nio.file.Paths.get(out, "clips_tsv")).count() > 0)
+  }
+
+  /** Two docs: the three-group timeline above, and the two-group
+    * too_short construction (one kept, one rejected) — exercises the
+    * per-doc numbering reset and the next-kept-id quirk together.
+    */
+  private lazy val twoDocResult: Result = {
+    val s = spark
+    import s.implicits._
+    val shortTl = (0 until 6).map(i =>
+      (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
+      (6 until 10).map(i =>
+        (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
+    val text2 = (0 until 10).map(i =>
+      if (i == 5) "zzz" else s"word$i").mkString(" ")
+    val docs = Seq(
+      DocInput(1L, transcript,
+        AmplitudeRecognizer.synthesize(timeline, Sr).bytes, Sr),
+      DocInput(2L, text2,
+        AmplitudeRecognizer.synthesize(shortTl, Sr).bytes, Sr)).toDS()
+    AsrPipeline.run(docs, rec, rec, Config())
+  }
+
+  private def sha(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .take(8).map(x => f"$x%02x").mkString
+
+  test("golden: two-doc segments, rejections and summary") {
+    val segs = twoDocResult.segments.collect()
+      .map(r => (r.doc_id, r.group_id, r.segment, r.text, r.duration_s,
+        r.words, r.pieces, r.avg_conf, r.acoustic_quality, sha(r.pcm)))
+      .sortBy(k => (k._1, k._2)).toSeq
+    val rejs = twoDocResult.rejections.collect()
+      .map(r => (r.doc_id, r.group_id, r.segment, r.reason, r.duration_ms,
+        r.confidence))
+      .sortBy(k => (k._1, k._2)).toSeq
+    val summary = twoDocResult.summary.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("exported"),
+        r.getAs[Long]("rejected"), r.getAs[Long]("equal_runs"),
+        r.getAs[Long]("bridged_groups"),
+        r.getAs[Double]("rejection_rate_pct"), r.getAs[String]("status")))
+      .sortBy(_._1).toSeq
+    def words(r: Range) = r.map(i => s"word$i").mkString(" ")
+    assert(segs == Seq(
+      (1L, 0L, "segment_0000", words(0 until 10), 4.976, 10, 1,
+        0.9000000000000001, "clean", "f8c82492d8cad11d"),
+      (1L, 1L, "segment_0001", words(11 until 20), 4.546, 9, 1,
+        0.9000000000000001, "clean", "bd678dc2a1f423ce"),
+      (1L, 2L, "segment_0002", words(21 until 30), 4.61, 9, 1,
+        0.9000000000000001, "clean", "f438e44ba7077118"),
+      (2L, 0L, "segment_0000", words(0 until 5), 2.476, 5, 1,
+        0.9, "clean", "ef987170c2b47297")))
+    // W6 quirk: the rejected group logs the id of the NEXT kept segment
+    assert(rejs == Seq((2L, 1L, "segment_0001", "too_short", 1150L, 0.9)))
+    assert(summary == Seq(
+      (1L, 3L, 0L, 3L, 3L, 0.0, "success"),
+      (2L, 1L, 1L, 2L, 2L, 50.0, "success")))
+  }
+
+  test("golden: clips.tsv written by writeMetadata (K2 shape)") {
+    val out = java.nio.file.Files.createTempDirectory("graft_k2").toString
+    Sinks.writeMetadata(twoDocResult, out)
+    val csv = java.nio.file.Paths.get(out, "clips_tsv").toFile.listFiles
+      .filter(_.getName.endsWith(".csv")).toSeq
+    val lines = csv.flatMap(f =>
+      java.nio.file.Files.readAllLines(f.toPath).asScala)
+    assert(lines.head == Seq("path", "start", "end", "duration_s", "words",
+      "pieces", "avg_conf", "acoustic_quality", "doc_id", "group_id")
+      .mkString("\t"))
+    assert(lines.tail.sorted == Seq(
+      "clips/segment_0000.wav\t0.000\t2.476\t2.476\t5\t1\t0.900\tclean\t2\t0",
+      "clips/segment_0000.wav\t0.000\t4.976\t4.976\t10\t1\t0.900\tclean\t1\t0",
+      "clips/segment_0001.wav\t0.000\t4.546\t4.546\t9\t1\t0.900\tclean\t1\t1",
+      "clips/segment_0002.wav\t0.000\t4.610\t4.610\t9\t1\t0.900\tclean\t1\t2"))
   }
 
   test("fused run() equals the staged assemble->judge->number path") {
