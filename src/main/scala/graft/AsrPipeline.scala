@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.asr.{RecWord, WordRecognizer}
@@ -21,7 +20,7 @@ import graft.operators.{Align, SequenceMatcher, Sessionize}
   * cross the shuffle exactly once (the plan⋈audio join); every
   * per-group stage after assembly is a narrow map. No driver-side
   * state anywhere — kept/rejected accumulators are replaced by the
-  * W6 running-count window.
+  * W6 per-doc running counter.
   */
 object AsrPipeline {
 
@@ -65,22 +64,14 @@ object AsrPipeline {
       groups: Seq[(Long, Seq[(Long, Long)])],
       words: Seq[UsedWord])
 
-  /** Per-group outcome before numbering: kept payload or rejection. */
+  /** Per-group outcome: kept payload or rejection, plus its W6
+    * segment label ("" until `run`'s per-doc counter numbers it).
+    */
   final case class ClipOutcome(doc_id: Long, group_id: Long,
       kept: Boolean, reason: String, // "" when kept
       text: String, pcm: Array[Byte], sample_rate: Int,
       duration_s: Double, words: Int, pieces: Int, avg_conf: Double,
-      acoustic_quality: String, duration_ms: Long)
-
-  /** ClipOutcome + its W6 segment label, as produced by the fused
-    * assemble→judge→number pass (numbering needs only within-doc
-    * group order, so it never costs a shuffle).
-    */
-  final case class NumberedOutcome(doc_id: Long, group_id: Long,
-      kept: Boolean, reason: String, segment: String,
-      text: String, pcm: Array[Byte], sample_rate: Int,
-      duration_s: Double, words: Int, pieces: Int, avg_conf: Double,
-      acoustic_quality: String, duration_ms: Long)
+      acoustic_quality: String, duration_ms: Long, segment: String = "")
 
   final case class SegmentRow(doc_id: Long, group_id: Long,
       segment: String, text: String, pcm: Array[Byte], sample_rate: Int,
@@ -92,8 +83,7 @@ object AsrPipeline {
       confidence: Double)
 
   final case class Result(segments: Dataset[SegmentRow],
-      rejections: Dataset[RejectionRow], summary: DataFrame,
-      clipsTsv: DataFrame)
+      rejections: Dataset[RejectionRow], summary: DataFrame)
 
   // ------------------------------------------------------------ stages
 
@@ -140,19 +130,6 @@ object AsrPipeline {
     }
   }
 
-  /** W4 — per-doc slicing plan + assembly. The cogroup(asr, runs)
-    * emits pure-metadata slice plans; audio bytes join in once per
-    * doc and a narrow flatMap does the byte work.
-    */
-  def assembleClips(asr: Dataset[AsrWord], groups: Dataset[GroupedRun],
-      audio: Dataset[DocInput], cfg: Config): Dataset[AssembledClip] = {
-    val spark = asr.sparkSession
-    import spark.implicits._
-    val plans = planClips(asr, groups)
-    plans.joinWith(audio, plans("doc_id") === audio("doc_id"))
-      .flatMap { case (plan, doc) => clipsForDoc(plan, doc, cfg) }
-  }
-
   /** The metadata half of W4: cogroup(asr, runs) into per-doc slice
     * plans (tiny rows — no audio bytes).
     */
@@ -173,9 +150,12 @@ object AsrPipeline {
       }
   }
 
-  /** The byte half of W4: execute one doc's slice plan against its
-    * audio. Groups come out in ascending group_id order (the plan is
-    * built sorted), which the fused numbering pass relies on.
+  /** W4 — clip assembly, the byte half: execute one doc's slice plan
+    * (built by `planClips`, joined to its audio once per doc) against
+    * the audio. Each run is sliced with the first/last pads, faded
+    * (D4), and seamed with `seamSilenceMs` of silence. Groups come out
+    * in ascending group_id order (the plan is built sorted), which the
+    * W6 counter in `run` relies on.
     */
   private[graft] def clipsForDoc(plan: DocPlan, doc: DocInput,
       cfg: Config): Iterator[AssembledClip] = {
@@ -193,15 +173,7 @@ object AsrPipeline {
         if (k == runs.length - 1 && cfg.endPadMs > 0)
           eMs += cfg.endPadMs
         if (eMs <= sMs) eMs = sMs + 1
-        var seg = Pcm.sliceMs(pcm, sMs, eMs)
-        if (cfg.fadeMs > 0) {
-          val len = seg.lengthMs
-          val fIn = math.min(math.max(5, cfg.fadeMs / 3), len / 4)
-          val fOut = math.min(cfg.fadeMs.toLong, len / 4)
-          if (fIn > 0) seg = Pcm.fadeIn(seg, fIn)
-          if (fOut > 0) seg = Pcm.fadeOut(seg, fOut)
-        }
-        pieces += seg
+        pieces += faded(Pcm.sliceMs(pcm, sMs, eMs), cfg.fadeMs)
         used ++= (ai0.toInt until ai1.toInt).map(words)
         if (k != runs.length - 1 && cfg.seamSilenceMs > 0)
           pieces += Pcm.silence(cfg.seamSilenceMs, doc.sample_rate)
@@ -212,24 +184,28 @@ object AsrPipeline {
     }
   }
 
-  /** Stages 7–14 of the reference loop, per assembled clip (narrow
-    * map, no shuffle): validator re-transcription (S4) → LCS
+  /** D4 fades: `max(5, fade/3)` ms in and `fade` ms out, each capped
+    * at a quarter of the slice.
+    */
+  private def faded(seg: Pcm, fadeMs: Int): Pcm = {
+    if (fadeMs <= 0) return seg
+    val len = seg.lengthMs
+    val fIn = math.min(math.max(5, fadeMs / 3), len / 4)
+    val fOut = math.min(fadeMs.toLong, len / 4)
+    val in = if (fIn > 0) Pcm.fadeIn(seg, fIn) else seg
+    if (fOut > 0) Pcm.fadeOut(in, fOut) else in
+  }
+
+  /** Stages 7–14 of the reference loop, per assembled clip (a narrow
+    * step, no shuffle): validator re-transcription (S4) → LCS
     * consensus (J2) → longest span (A4) + min-valid-words (F4) →
     * first-match confidence (J3+A3) → boundary math (P4–P7, W3) →
     * min-duration (F5) → slice + fades (D6/D4) → acoustic gate with
-    * one retry (F6/D3). Faithful to the reference's quirks: the
-    * adaptive guard reads the VALIDATOR word's confidence (always
-    * 1.0 → 70% branch), and the leakage-retry slice skips re-fading.
+    * one retry (F6/D3). None when the clip is empty or no validator
+    * span survives. Faithful to the reference's quirks: the adaptive
+    * guard reads the VALIDATOR word's confidence (always 1.0 → 70%
+    * branch), and the leakage-retry slice skips re-fading.
     */
-  def judgeClips(clips: Dataset[AssembledClip], validator: WordRecognizer,
-      cfg: Config): Dataset[ClipOutcome] = {
-    val spark = clips.sparkSession
-    import spark.implicits._
-    clips.mapPartitions { it =>
-      it.flatMap { c => judgeOne(c, validator, cfg).iterator }
-    }
-  }
-
   private[graft] def judgeOne(c: AssembledClip, validator: WordRecognizer,
       cfg: Config): Option[ClipOutcome] = {
     val baseClip = Pcm(c.clip, c.sample_rate)
@@ -293,14 +269,7 @@ object AsrPipeline {
     if (eMs - sMs < minDurMs)
       return reject("too_short", eMs - sMs, avgConf)
 
-    var piece = Pcm.sliceMs(baseClip, sMs, eMs)
-    if (cfg.fadeMs > 0) {
-      val len = piece.lengthMs
-      val fIn = math.min(math.max(5, cfg.fadeMs / 3), len / 4)
-      val fOut = math.min(cfg.fadeMs.toLong, len / 4)
-      if (fIn > 0) piece = Pcm.fadeIn(piece, fIn)
-      if (fOut > 0) piece = Pcm.fadeOut(piece, fOut)
-    }
+    var piece = faded(Pcm.sliceMs(baseClip, sMs, eMs), cfg.fadeMs)
 
     // F6/D3 acoustic gate, one bounded retry (retry slice unfaded —
     // reference quirk, claude_research_optimal.py:624–635)
@@ -329,79 +298,48 @@ object AsrPipeline {
       keep.length, c.n_runs, avgConf, quality, eMs - sMs))
   }
 
-  /** W6 — segment numbering: `segment_{kept:04d}` in group order per
-    * doc; a rejected group logs the id of the NEXT kept segment
-    * (reference quirk, claude_research_optimal.py:591 vs 661).
-    * One window = one count of kept rows strictly before the row.
-    */
-  def numberOutcomes(outcomes: Dataset[ClipOutcome])
-      : (Dataset[SegmentRow], Dataset[RejectionRow]) = {
-    val spark = outcomes.sparkSession
-    import spark.implicits._
-    val w = Window.partitionBy($"doc_id").orderBy($"group_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val numbered = outcomes.toDF()
-      .withColumn("kept_before",
-        coalesce(sum(when($"kept", 1L).otherwise(0L)).over(w), lit(0L)))
-      .withColumn("segment", format_string("segment_%04d", $"kept_before"))
-    val segments = numbered.filter($"kept")
-      .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",
-        $"sample_rate", $"duration_s", $"words", $"pieces", $"avg_conf",
-        $"acoustic_quality")
-      .as[SegmentRow]
-    val rejections = numbered.filter(!$"kept")
-      .select($"doc_id", $"group_id", $"segment",
-        $"reason", $"duration_ms", $"avg_conf".as("confidence"))
-      .as[RejectionRow]
-    (segments, rejections)
-  }
-
   /** Full pipeline: sources → align → sessionize → assemble → judge →
-    * number → summary/TSV frames (sinks are separate, graft.Sinks).
+    * number → segment/rejection/summary frames (sinks are separate,
+    * graft.Sinks).
+    *
+    * `docs` is read by three branches: the transcript words, base ASR
+    * and the audio join. It is not cached here; a caller whose source
+    * is expensive (decoding, synthesis) should pass a persisted frame.
+    * Base ASR output (`asr`) and the numbered outcomes are cached, so
+    * every output and sink action reuses them: base inference runs
+    * once per doc and validator inference once per clip.
     */
   def run(docs: Dataset[DocInput], base: WordRecognizer,
       validator: WordRecognizer, cfg: Config = Config()): Result = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // `docs` (audio + text) and `asr` fan out to several downstream
-    // branches (alignment, sessionization joins, assembly, audio
-    // join) — cache both or the source synthesis/inference re-runs
-    // once per branch. On a cluster these would be persisted
-    // MEMORY_AND_DISK after the (expensive) inference stage.
-    val docsC = docs.cache()
-    val books = bookWords(docsC.map(d => (d.doc_id, d.text)),
+    val books = bookWords(docs.map(d => (d.doc_id, d.text)),
       cfg.numbersToWords)
-    val asr = asrWords(docsC, base, cfg.numbersToWords).cache()
+    val asr = asrWords(docs, base, cfg.numbersToWords).cache()
     val runs = Align.lcsEqualRuns(books, asr, cfg.minRun, cfg.lcsMaxChunk)
     val groups = Sessionize.mergeWithSmallGaps(runs, asr,
       cfg.maxGapWords, cfg.maxGapTime)
-    // Fused W4→F6→W6: assemble, judge, and number each doc's clips in
-    // ONE narrow pass after the single audio join. The staged
-    // equivalents (assembleClips → judgeClips → numberOutcomes) remain
-    // the inspectable public API and are spec-checked equal; fusing
-    // keeps clip bytes out of the numbering window's exchange — audio
-    // crosses the network exactly once (the plan⋈audio join).
+    // Fused W4→F6→W6: assemble, judge and number each doc's clips in
+    // ONE narrow pass after the single audio join, so clip bytes never
+    // cross an exchange — audio crosses the network exactly once.
     val plans = planClips(asr, groups)
-    val numbered: Dataset[NumberedOutcome] =
-      plans.joinWith(docsC, plans("doc_id") === docsC("doc_id"))
-        .flatMap { case (plan, doc) =>
-          // clipsForDoc emits ascending group_id, so the W6 window
-          // (count of kept rows strictly before, in group order) is a
-          // running counter; a rejected group labels the NEXT kept
-          // segment's id — same formula, reference quirk preserved.
-          var keptBefore = 0L
-          clipsForDoc(plan, doc, cfg)
-            .flatMap(c => judgeOne(c, validator, cfg))
-            .map { o =>
-              val seg = "segment_%04d".format(keptBefore)
-              if (o.kept) keptBefore += 1
-              NumberedOutcome(o.doc_id, o.group_id, o.kept, o.reason,
-                seg, o.text, o.pcm, o.sample_rate, o.duration_s,
-                o.words, o.pieces, o.avg_conf, o.acoustic_quality,
-                o.duration_ms)
-            }
-        }
+    val numbered = plans.joinWith(docs, plans("doc_id") === docs("doc_id"))
+      .flatMap { case (plan, doc) =>
+        // W6 — segment numbering: `segment_{kept:04d}` in group order
+        // per doc. clipsForDoc emits ascending group_id, so the count
+        // of kept rows strictly before is a running counter; a
+        // rejected group logs the id of the NEXT kept segment
+        // (reference quirk, claude_research_optimal.py:591 vs 661).
+        var keptBefore = 0L
+        clipsForDoc(plan, doc, cfg)
+          .flatMap(c => judgeOne(c, validator, cfg))
+          .map { o =>
+            val seg = "segment_%04d".format(keptBefore)
+            if (o.kept) keptBefore += 1
+            o.copy(segment = seg)
+          }
+      }.cache()
     val segments = numbered.filter($"kept")
       .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",
         $"sample_rate", $"duration_s", $"words", $"pieces", $"avg_conf",
@@ -432,16 +370,6 @@ object AsrPipeline {
       .withColumn("status",
         when($"exported" > 0, "success").otherwise("failed"))
 
-    // K2 clips.tsv shape (claude_research_optimal.py:477, 666)
-    val clipsTsv = segments.toDF().select(
-      concat(lit("clips/"), $"segment", lit(".wav")).as("path"),
-      format_string("%.3f", lit(0.0)).as("start"),
-      format_string("%.3f", $"duration_s").as("end"),
-      format_string("%.3f", $"duration_s").as("duration_s"),
-      $"words", $"pieces",
-      format_string("%.3f", $"avg_conf").as("avg_conf"),
-      $"acoustic_quality", $"doc_id", $"group_id")
-
-    Result(segments, rejections, summary, clipsTsv)
+    Result(segments, rejections, summary)
   }
 }

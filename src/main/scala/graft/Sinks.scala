@@ -83,9 +83,18 @@ object Sinks {
     }
   }
 
-  /** K2 + K4 — clips.tsv, rejections.json, summary.json per run. */
+  /** K2 + K4 — clips.tsv (claude_research_optimal.py:477, 666),
+    * rejections.json, summary.json per run.
+    */
   def writeMetadata(result: Result, outDir: String): Unit = {
-    result.clipsTsv
+    result.segments.select(
+        concat(lit("clips/"), col("segment"), lit(".wav")).as("path"),
+        format_string("%.3f", lit(0.0)).as("start"),
+        format_string("%.3f", col("duration_s")).as("end"),
+        format_string("%.3f", col("duration_s")).as("duration_s"),
+        col("words"), col("pieces"),
+        format_string("%.3f", col("avg_conf")).as("avg_conf"),
+        col("acoustic_quality"), col("doc_id"), col("group_id"))
       .coalesce(1).write.mode("overwrite")
       .option("sep", "\t").option("header", true)
       .csv(s"$outDir/clips_tsv")

@@ -2,11 +2,22 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.asr.AmplitudeRecognizer
+import graft.asr.{AmplitudeRecognizer, RecWord, WordRecognizer}
 import graft.audio.Pcm
 import graft.AsrPipeline._
+
+/** Counts calls to the wrapped recognizer across executors. */
+final case class CountingRecognizer(inner: WordRecognizer,
+    calls: LongAccumulator) extends WordRecognizer {
+  def transcribe(key: String, audio: Pcm): Seq[RecWord] = {
+    calls.add(1L)
+    inner.transcribe(key, audio)
+  }
+}
 
 /** End-to-end pipeline test (SURVEY.md §5.2 item 4): synthetic docs
   * whose audio encodes the word sequence (AmplitudeRecognizer), a
@@ -149,7 +160,7 @@ class AsrPipelineSpec extends AnyFunSuite {
     * too_short construction (one kept, one rejected) — exercises the
     * per-doc numbering reset and the next-kept-id quirk together.
     */
-  private lazy val twoDocResult: Result = {
+  private lazy val twoDocs: Dataset[DocInput] = {
     val s = spark
     import s.implicits._
     val shortTl = (0 until 6).map(i =>
@@ -158,13 +169,15 @@ class AsrPipelineSpec extends AnyFunSuite {
         (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
     val text2 = (0 until 10).map(i =>
       if (i == 5) "zzz" else s"word$i").mkString(" ")
-    val docs = Seq(
+    Seq(
       DocInput(1L, transcript,
         AmplitudeRecognizer.synthesize(timeline, Sr).bytes, Sr),
       DocInput(2L, text2,
         AmplitudeRecognizer.synthesize(shortTl, Sr).bytes, Sr)).toDS()
-    AsrPipeline.run(docs, rec, rec, Config())
   }
+
+  private lazy val twoDocResult: Result =
+    AsrPipeline.run(twoDocs, rec, rec, Config())
 
   private def sha(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(b)
@@ -219,50 +232,20 @@ class AsrPipelineSpec extends AnyFunSuite {
       "clips/segment_0002.wav\t0.000\t4.610\t4.610\t9\t1\t0.900\tclean\t1\t2"))
   }
 
-  test("fused run() equals the staged assemble->judge->number path") {
-    val s = spark
-    import s.implicits._
-    // two docs so the per-doc numbering reset is exercised; doc 2
-    // includes a too-short group (words 0-2 only) to get a rejection
-    val audio1 = AmplitudeRecognizer.synthesize(timeline, Sr)
-    // doc 2 = the too_short construction from the quirk test above:
-    // two groups, the second squeezed under min_dur -> one rejection
-    val shortTl = (0 until 6).map(i =>
-      (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
-      (6 until 10).map(i =>
-        (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
-    val audio2 = AmplitudeRecognizer.synthesize(shortTl, Sr)
-    val text2 = (0 until 10).map(i =>
-      if (i == 5) "zzz" else s"word$i").mkString(" ")
-    val docs = Seq(
-      DocInput(1L, transcript, audio1.bytes, Sr),
-      DocInput(2L, text2, audio2.bytes, Sr)
-    ).toDS().cache()
-    val cfg = Config()
-    val fused = AsrPipeline.run(docs, rec, rec, cfg)
-
-    val books = AsrPipeline.bookWords(
-      docs.map(d => (d.doc_id, d.text)), cfg.numbersToWords)
-    val asr = AsrPipeline.asrWords(docs, rec, cfg.numbersToWords).cache()
-    val runs = graft.operators.Align.lcsEqualRuns(
-      books, asr, cfg.minRun, cfg.lcsMaxChunk)
-    val groups = graft.operators.Sessionize.mergeWithSmallGaps(
-      runs, asr, cfg.maxGapWords, cfg.maxGapTime)
-    val clips = AsrPipeline.assembleClips(asr, groups, docs, cfg)
-    val outcomes = AsrPipeline.judgeClips(clips, rec, cfg)
-    val (segStaged, rejStaged) = AsrPipeline.numberOutcomes(outcomes)
-
-    def segKey(r: SegmentRow) = (r.doc_id, r.group_id, r.segment, r.text,
-      r.pcm.toSeq, r.sample_rate, r.duration_s, r.words, r.pieces,
-      r.avg_conf, r.acoustic_quality)
-    def rejKey(r: RejectionRow) = (r.doc_id, r.group_id, r.segment,
-      r.reason, r.duration_ms, r.confidence)
-    assert(fused.segments.collect().map(segKey).sortBy(k => (k._1, k._2))
-      .toSeq == segStaged.collect().map(segKey).sortBy(k => (k._1, k._2))
-      .toSeq)
-    assert(fused.rejections.collect().map(rejKey).sortBy(k => (k._1, k._2))
-      .toSeq == rejStaged.collect().map(rejKey).sortBy(k => (k._1, k._2))
-      .toSeq)
-    assert(fused.rejections.count() >= 1)
+  test("inference runs once per doc and once per clip across all sinks") {
+    val sc = spark.sparkContext
+    val base = CountingRecognizer(rec, sc.longAccumulator("base_calls"))
+    val validator = CountingRecognizer(rec,
+      sc.longAccumulator("validator_calls"))
+    val r = AsrPipeline.run(twoDocs, base, validator, Config())
+    val out = java.nio.file.Files.createTempDirectory("graft_once").toString
+    Sinks.writeClips(r.segments, out)
+    Sinks.writeFullCorpus(r.segments, out, 500)
+    Sinks.writeMetadata(r, out)
+    Sinks.writeWordCoverage(r.segments, out)
+    val groups = r.summary.collect().map(_.getAs[Long]("bridged_groups")).sum
+    assert(groups == 5L)
+    assert(base.calls.value == 2L)
+    assert(validator.calls.value == groups)
   }
 }
