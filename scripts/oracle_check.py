@@ -7,10 +7,13 @@ Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 
 Mimics the described driver behavior: per query, load the Spark parquet
 result and the DuckDB oracle result, sort columns by name, sort rows,
-and compare values (floats to 9 significant digits).
+and compare values (floats to 9 significant digits). A query listed in
+Verify's failures.json (query -> exception message) is reported as
+THREW, never compared: its output directory is missing or stale.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -42,13 +45,22 @@ def main(sf_dir, out_dir, only=None):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet')")
     oracle_sql = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failures_path = f"{out_dir}/failures.json"
+    threw = (json.load(open(failures_path))
+             if os.path.exists(failures_path) else {})
     if only:
         # subset mode for per-change iteration: check only the named
         # queries (a subset graft.Verify run leaves the other output
         # dirs unwritten, which full mode would flood as FAILs)
         oracle_sql = {k: v for k, v in oracle_sql.items() if k in only}
+        threw = {k: v for k, v in threw.items() if k in only}
+    for name, msg in sorted(threw.items()):
+        print(f"THREW {name}: {msg}")
     failures = 0
     for name, sql in sorted(oracle_sql.items()):
+        if name in threw:
+            failures += 1
+            continue
         try:
             got = canon(con.sql(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')"
@@ -101,11 +113,10 @@ def main(sf_dir, out_dir, only=None):
     # array/map/struct cells make lexsort_indexer throw — so even the
     # rows-only count comes back null. Fail here, before the driver
     # ever sees a non-scalar column on a query with no oracle SQL.
-    import os
     declared = set(oracle_sql)
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
-        if not os.path.isdir(path) or name in declared:
+        if not os.path.isdir(path) or name in declared or name in threw:
             continue
         if only is not None and name not in only:
             continue
@@ -128,7 +139,9 @@ def main(sf_dir, out_dir, only=None):
         else:
             print(f"OK    {name} (rows-only shape: all scalar)")
     print(f"\n{len(oracle_sql) - failures}/{len(oracle_sql)} oracle queries match")
-    return 1 if failures else 0
+    if threw:
+        print(f"{len(threw)} queries threw (listed as THREW above)")
+    return 1 if failures or threw else 0
 
 
 if __name__ == "__main__":

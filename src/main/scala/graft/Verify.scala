@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and failures.json (query →
+  * exception message) for every query that threw, so a thrown query is
+  * never mistaken for an oracle mismatch. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -27,11 +29,14 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> e.toString)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -46,9 +51,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(kv: Iterable[(String, String)]) =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), json(failures))
     spark.stop()
   }
 }

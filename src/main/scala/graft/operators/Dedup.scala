@@ -340,9 +340,6 @@ object Dedup {
       .withColumn("label", col("id")).localCheckpoint()
     var i = 0
     var converged = false
-    // the frame actually holding this round's checkpoint blocks (the
-    // public `labels` view projects the __old column away)
-    var labelsCk = labels
     while (i < maxIters && !converged) {
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
@@ -368,8 +365,6 @@ object Dedup {
         .localCheckpoint()
       converged = updated
         .filter(col("label") =!= col("__old")).isEmpty
-      labelsCk.unpersist(blocking = false)
-      labelsCk = updated
       labels = updated.select(col("id"), col("label"))
       i += 1
     }
@@ -378,14 +373,11 @@ object Dedup {
     // non-convergence must be loud, not a silent wrong answer. With
     // pointer jumping, maxIters=20 covers component diameters up to
     // ~2^20; hitting this means the input is pathological.
-    if (!converged) {
-      edges.unpersist(blocking = false)
+    if (!converged)
       throw new IllegalStateException(
         s"resolveClusters did not converge within $maxIters rounds — " +
         "component diameter exceeds the pointer-jumping budget; " +
         "raise maxIters")
-    }
-    edges.unpersist(blocking = false)
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 

@@ -109,7 +109,6 @@ object GraphStats {
       val c = next.count()
       fixed = c == prevCount
       prevCount = c
-      e.unpersist(blocking = false)
       e = next
       it += 1
     }

@@ -191,7 +191,6 @@ object PageRank {
         .select($"node", coalesce($"__seed", $"__vote").as("lab"))
       labels = next.localCheckpoint(true)
     }
-    nodeSeed.unpersist(blocking = false)
     e.unpersist(); nodes.unpersist(); sd.unpersist()
     labels.select($"node", $"lab".as("label"))
   }

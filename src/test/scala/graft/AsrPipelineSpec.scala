@@ -248,4 +248,25 @@ class AsrPipelineSpec extends AnyFunSuite {
     assert(base.calls.value == 2L)
     assert(validator.calls.value == groups)
   }
+
+  test("debug dumps (K7) hold each doc's ASR words in idx order") {
+    val asr = AsrPipeline.asrWords(twoDocs, rec, numbersToWords = false)
+    val out = java.nio.file.Files.createTempDirectory("graft_k7").toString
+    Sinks.writeDebugDumps(asr, out)
+    val dumps = spark.read.json(s"$out/asr_dumps").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("asr_full_raw"),
+        r.getAs[String]("asr_full_norm")))
+      .sortBy(_._1).toSeq
+    def words(n: Int) = (0 until n).map(i => s"word$i").mkString(" ")
+    assert(dumps == Seq((1L, words(30), words(30)),
+      (2L, words(10), words(10))))
+    val conf = spark.read.json(s"$out/asr_confidence").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("word"),
+        r.getAs[Double]("confidence")))
+    assert(conf.length == 40)
+    assert(conf.groupBy(_._1).map { case (d, rs) => d -> rs.length } ==
+      Map(1L -> 30, 2L -> 10))
+    assert(conf.map(c => (c._1, c._2)).distinct.length == 40)
+    assert(conf.forall(_._3 == 0.9))
+  }
 }
