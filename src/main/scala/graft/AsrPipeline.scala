@@ -13,8 +13,8 @@ import graft.operators.{Align, SequenceMatcher, Sessionize}
   * main(), :389–696) as one lazily-built Spark DAG — SURVEY.md §3.1's
   * target shape. The per-document sequential loop becomes
   * set-at-a-time operators keyed by (doc_id, group_id); the only
-  * shuffles are the doc-keyed cogroups/joins and the final
-  * segment-numbering window.
+  * shuffles are the doc-keyed cogroups/joins (plus the per-doc summary
+  * counts).
   *
   * Scale design: documents are the unit of parallelism; audio bytes
   * cross the shuffle exactly once (the plan⋈audio join); every
@@ -196,8 +196,8 @@ object AsrPipeline {
     if (fOut > 0) Pcm.fadeOut(in, fOut) else in
   }
 
-  /** Stages 7–14 of the reference loop, per assembled clip (a narrow
-    * step, no shuffle): validator re-transcription (S4) → LCS
+  /** Stages 7–14 of the reference loop, per assembled clip (narrow
+    * map, no shuffle): validator re-transcription (S4) → LCS
     * consensus (J2) → longest span (A4) + min-valid-words (F4) →
     * first-match confidence (J3+A3) → boundary math (P4–P7, W3) →
     * min-duration (F5) → slice + fades (D6/D4) → acoustic gate with

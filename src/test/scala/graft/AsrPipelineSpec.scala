@@ -45,6 +45,18 @@ class AsrPipelineSpec extends AnyFunSuite {
     ws.mkString(" ")
   }
 
+  /** Two LCS runs (word5 substituted in the transcript) separated by a
+    * 0.6s time gap → two groups; the second run's words are squeezed
+    * into a 0.86s span → too_short under min_dur 1.5.
+    */
+  private def shortTimeline: Seq[(String, Double, Double)] =
+    (0 until 6).map(i => (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
+      (6 until 10).map(i =>
+        (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
+
+  private def shortTranscript: String =
+    (0 until 10).map(i => if (i == 5) "zzz" else s"word$i").mkString(" ")
+
   private lazy val result: Result = {
     val s = spark
     import s.implicits._
@@ -105,16 +117,8 @@ class AsrPipelineSpec extends AnyFunSuite {
   test("short group is rejected as too_short with next-kept id quirk") {
     val s = spark
     import s.implicits._
-    // Two LCS runs (word5 substituted in the transcript) separated
-    // by a 0.6s time gap → two groups; the second run's words are
-    // squeezed into a 0.86s span → too_short under min_dur 1.5.
-    val tl = (0 until 6).map(i => (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
-      (6 until 10).map(i =>
-        (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
-    val audio = AmplitudeRecognizer.synthesize(tl, Sr)
-    val text = (0 until 10).map(i =>
-      if (i == 5) "zzz" else s"word$i").mkString(" ")
-    val docs = Seq(DocInput(7L, text, audio.bytes, Sr)).toDS()
+    val audio = AmplitudeRecognizer.synthesize(shortTimeline, Sr)
+    val docs = Seq(DocInput(7L, shortTranscript, audio.bytes, Sr)).toDS()
     val r = AsrPipeline.run(docs, rec, rec, Config())
     val segs = r.segments.collect()
     val rejs = r.rejections.collect()
@@ -163,17 +167,11 @@ class AsrPipelineSpec extends AnyFunSuite {
   private lazy val twoDocs: Dataset[DocInput] = {
     val s = spark
     import s.implicits._
-    val shortTl = (0 until 6).map(i =>
-      (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
-      (6 until 10).map(i =>
-        (s"word$i", 3.0 + (i - 6) * 0.22, 3.0 + (i - 6) * 0.22 + 0.2))
-    val text2 = (0 until 10).map(i =>
-      if (i == 5) "zzz" else s"word$i").mkString(" ")
     Seq(
       DocInput(1L, transcript,
         AmplitudeRecognizer.synthesize(timeline, Sr).bytes, Sr),
-      DocInput(2L, text2,
-        AmplitudeRecognizer.synthesize(shortTl, Sr).bytes, Sr)).toDS()
+      DocInput(2L, shortTranscript,
+        AmplitudeRecognizer.synthesize(shortTimeline, Sr).bytes, Sr)).toDS()
   }
 
   private lazy val twoDocResult: Result =
