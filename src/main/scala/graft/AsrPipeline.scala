@@ -1,26 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.asr.{RecWord, WordRecognizer}
+import graft.asr.WordRecognizer
 import graft.audio.{Dsp, Pcm}
 import graft.core._
 import graft.functions.TextFunctions
 import graft.operators.{Align, SequenceMatcher, Sessionize}
 
 /** The reference's end-to-end dataflow (claude_research_optimal.py
-  * main(), :389–696) as one lazily-built Spark DAG — SURVEY.md §3.1's
-  * target shape. The per-document sequential loop becomes
-  * set-at-a-time operators keyed by (doc_id, group_id); the only
-  * shuffles are the doc-keyed cogroups/joins (plus the per-doc summary
-  * counts).
+  * main(), :389–696) as ONE narrow pass over the documents. The
+  * reference's per-document loop stays a per-document function
+  * (`outcomesOf`) mapped over `docs`: no shuffle; audio never moves;
+  * `docs` is read once.
   *
-  * Scale design: documents are the unit of parallelism; audio bytes
-  * cross the shuffle exactly once (the plan⋈audio join); every
-  * per-group stage after assembly is a narrow map. No driver-side
-  * state anywhere — kept/rejected accumulators are replaced by the
-  * W6 per-doc running counter.
+  * Scale design: documents are the unit of parallelism. Every stage
+  * after decoding — alignment, gap bridging, assembly, validator
+  * inference, numbering — reads only its own document, so one task
+  * carries a document from its audio to its outcomes. The one cached
+  * frame is the per-document outcome table; the segment, rejection and
+  * summary frames are narrow projections of it. Nothing is kept
+  * outside the tasks: kept/rejected accumulators are replaced by the W6
+  * per-doc running counter.
   */
 object AsrPipeline {
 
@@ -51,27 +53,29 @@ object AsrPipeline {
   final case class DocInput(doc_id: Long, text: String,
       pcm: Array[Byte], sample_rate: Int)
 
-  /** Per-(doc,group) assembled base clip (W4 output). */
+  /** Per-(doc,group) assembled base clip (W4 output) and the base-ASR
+    * words it covers.
+    */
   final case class AssembledClip(doc_id: Long, group_id: Long,
       clip: Array[Byte], sample_rate: Int, n_runs: Int,
-      used: Seq[UsedWord])
-
-  final case class UsedWord(text: String, norm: String,
-      start: Double, end: Double, confidence: Double)
-
-  /** Per-doc slicing plan: pure metadata, tiny vs the audio bytes. */
-  final case class DocPlan(doc_id: Long,
-      groups: Seq[(Long, Seq[(Long, Long)])],
-      words: Seq[UsedWord])
+      used: Seq[AsrWord])
 
   /** Per-group outcome: kept payload or rejection, plus its W6
-    * segment label ("" until `run`'s per-doc counter numbers it).
+    * segment label ("" until `outcomesOf`'s per-doc counter numbers it).
     */
   final case class ClipOutcome(doc_id: Long, group_id: Long,
       kept: Boolean, reason: String, // "" when kept
       text: String, pcm: Array[Byte], sample_rate: Int,
       duration_s: Double, words: Int, pieces: Int, avg_conf: Double,
       acoustic_quality: String, duration_ms: Long, segment: String = "")
+
+  /** One document's outcomes in group order, with the counts the A5
+    * summary reports as plain columns, so the summary never reads clip
+    * bytes.
+    */
+  final case class DocOutcomes(doc_id: Long, equal_runs: Long,
+      bridged_groups: Long, exported: Long, rejected: Long,
+      outcomes: Seq[ClipOutcome])
 
   final case class SegmentRow(doc_id: Long, group_id: Long,
       segment: String, text: String, pcm: Array[Byte], sample_rate: Int,
@@ -87,99 +91,87 @@ object AsrPipeline {
 
   // ------------------------------------------------------------ stages
 
-  /** Book scan + normalize (claude_research_optimal.py:434–438):
-    * P1 tokenize → P2 normalize → drop empties, position-indexed.
+  /** Book scan + normalize of one document
+    * (claude_research_optimal.py:434–438): P1 tokenize → P2 normalize →
+    * drop empties, position-indexed.
     */
+  private[graft] def bookWordsOf(docId: Long, text: String,
+      numbersToWords: Boolean): IndexedSeq[BookWord] =
+    TextFunctions.tokenizeScala(text)
+      .flatMap(t => TextFunctions.normalizeScala(t, numbersToWords)
+        .map(n => (t, n)))
+      .zipWithIndex
+      .map { case ((t, n), i) => BookWord(docId, i.toLong, t, n) }
+      .toIndexedSeq
+
+  /** `bookWordsOf` over every document. */
   def bookWords(docs: Dataset[(Long, String)], numbersToWords: Boolean)
       : Dataset[BookWord] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap { case (docId, text) =>
-      TextFunctions.tokenizeScala(text)
-        .flatMap(t => TextFunctions.normalizeScala(t, numbersToWords)
-          .map(n => (t, n)))
-        .zipWithIndex
-        .map { case ((t, n), i) => BookWord(docId, i.toLong, t, n) }
+      bookWordsOf(docId, text, numbersToWords)
     }
   }
 
-  /** S3 — base ASR inference + normalization + empty-drop
-    * (claude_research_optimal.py:254–277): one recognizer call per
-    * doc inside mapPartitions (model handle amortized per partition).
+  /** S3 — base ASR inference + normalization + empty-drop of one
+    * document (claude_research_optimal.py:254–277): one recognizer
+    * call; `idx` is the word's position.
     */
+  private[graft] def asrWordsOf(d: DocInput, recognizer: WordRecognizer,
+      numbersToWords: Boolean): IndexedSeq[AsrWord] =
+    recognizer.transcribe(s"doc:${d.doc_id}", Pcm(d.pcm, d.sample_rate))
+      .iterator
+      .map(w => (w, w.text.trim))
+      .filter(_._2.nonEmpty)
+      .flatMap { case (w, t) =>
+        TextFunctions.normalizeScala(t, numbersToWords)
+          .map(n => (t, n, w.start, w.end, w.confidence))
+      }
+      .zipWithIndex
+      .map { case ((t, n, s, e, c), i) =>
+        AsrWord(d.doc_id, i.toLong, t, n, s, e, c)
+      }
+      .toIndexedSeq
+
+  /** `asrWordsOf` over every document. */
   def asrWords(audio: Dataset[DocInput], recognizer: WordRecognizer,
       numbersToWords: Boolean): Dataset[AsrWord] = {
     val spark = audio.sparkSession
     import spark.implicits._
-    audio.mapPartitions { it =>
-      it.flatMap { d =>
-        val recognized = recognizer.transcribe(s"doc:${d.doc_id}",
-          Pcm(d.pcm, d.sample_rate))
-        recognized.iterator
-          .map(w => (w, w.text.trim))
-          .filter(_._2.nonEmpty)
-          .flatMap { case (w, t) =>
-            TextFunctions.normalizeScala(t, numbersToWords)
-              .map(n => (t, n, w.start, w.end, w.confidence))
-          }
-          .zipWithIndex
-          .map { case ((t, n, s, e, c), i) =>
-            AsrWord(d.doc_id, i.toLong, t, n, s, e, c)
-          }
-      }
-    }
+    audio.flatMap(asrWordsOf(_, recognizer, numbersToWords))
   }
 
-  /** The metadata half of W4: cogroup(asr, runs) into per-doc slice
-    * plans (tiny rows — no audio bytes).
+  /** W4 — clip assembly for one document, in the task that holds its
+    * audio (no shuffle; audio never moves). Each bridged group's runs
+    * are sliced with the first/last pads, faded (D4), and seamed with
+    * `seamSilenceMs` of silence. `words` are the doc's base-ASR words
+    * (`idx` = position) and `groups` come from `Sessionize.bridge` in
+    * ai0 order, so clips come out in ascending group_id order, which
+    * the W6 counter in `outcomesOf` relies on.
     */
-  private[graft] def planClips(asr: Dataset[AsrWord],
-      groups: Dataset[GroupedRun]): Dataset[DocPlan] = {
-    val spark = asr.sparkSession
-    import spark.implicits._
-    asr.groupByKey(_.doc_id)
-      .cogroup(groups.groupByKey(_.doc_id)) { (docId, ws, gs) =>
-        val words = ws.toArray.sortBy(_.idx)
-        val byGroup = gs.toArray.sortBy(r => (r.group_id, r.ai0))
-          .groupBy(_.group_id).toSeq.sortBy(_._1)
-          .map { case (g, rs) => (g, rs.map(r => (r.ai0, r.ai1)).toSeq) }
-        if (words.isEmpty || byGroup.isEmpty) Iterator.empty
-        else Iterator.single(DocPlan(docId, byGroup,
-          words.map(w => UsedWord(w.text, w.norm, w.start, w.end,
-            w.confidence)).toSeq))
-      }
-  }
-
-  /** W4 — clip assembly, the byte half: execute one doc's slice plan
-    * (built by `planClips`, joined to its audio once per doc) against
-    * the audio. Each run is sliced with the first/last pads, faded
-    * (D4), and seamed with `seamSilenceMs` of silence. Groups come out
-    * in ascending group_id order (the plan is built sorted), which the
-    * W6 counter in `run` relies on.
-    */
-  private[graft] def clipsForDoc(plan: DocPlan, doc: DocInput,
-      cfg: Config): Iterator[AssembledClip] = {
+  private[graft] def clipsForDoc(doc: DocInput, words: IndexedSeq[AsrWord],
+      groups: Seq[GroupedRun], cfg: Config): Iterator[AssembledClip] = {
     val pcm = Pcm(doc.pcm, doc.sample_rate)
-    val words = plan.words.toIndexedSeq
-    plan.groups.iterator.map { case (gid, runs) =>
+    val byGroup = groups.groupBy(_.group_id).toSeq.sortBy(_._1)
+    byGroup.iterator.map { case (gid, runs) =>
       val pieces = Seq.newBuilder[Pcm]
-      val used = Seq.newBuilder[UsedWord]
-      runs.zipWithIndex.foreach { case ((ai0, ai1), k) =>
-        val w0 = words(ai0.toInt); val w1 = words(ai1.toInt - 1)
-        var sMs = TextFunctions.secToMsScala(w0.start)
+      val used = Seq.newBuilder[AsrWord]
+      runs.zipWithIndex.foreach { case (r, k) =>
+        var sMs = TextFunctions.secToMsScala(r.start_time)
         if (k == 0 && cfg.startPadMs > 0)
           sMs = math.max(0L, sMs - cfg.startPadMs)
-        var eMs = TextFunctions.secToMsScala(w1.end)
+        var eMs = TextFunctions.secToMsScala(r.end_time)
         if (k == runs.length - 1 && cfg.endPadMs > 0)
           eMs += cfg.endPadMs
         if (eMs <= sMs) eMs = sMs + 1
         pieces += faded(Pcm.sliceMs(pcm, sMs, eMs), cfg.fadeMs)
-        used ++= (ai0.toInt until ai1.toInt).map(words)
+        used ++= words.slice(r.ai0.toInt, r.ai1.toInt)
         if (k != runs.length - 1 && cfg.seamSilenceMs > 0)
           pieces += Pcm.silence(cfg.seamSilenceMs, doc.sample_rate)
       }
       val clip = Pcm.concat(pieces.result(), doc.sample_rate)
-      AssembledClip(plan.doc_id, gid, clip.bytes, doc.sample_rate,
+      AssembledClip(doc.doc_id, gid, clip.bytes, doc.sample_rate,
         runs.length, used.result())
     }
   }
@@ -298,77 +290,74 @@ object AsrPipeline {
       keep.length, c.n_runs, avgConf, quality, eMs - sMs))
   }
 
+  /** The reference loop body (claude_research_optimal.py:430–666) for
+    * one document: book and base-ASR words → J1 LCS runs → W2 gap
+    * bridging → W4 assembly → stages 7–14 per clip → W6 numbering.
+    * A document's outcomes depend on its own row only, so this runs
+    * as a narrow map.
+    */
+  private def outcomesOf(d: DocInput, base: WordRecognizer,
+      validator: WordRecognizer, cfg: Config): DocOutcomes = {
+    val asr = asrWordsOf(d, base, cfg.numbersToWords)
+    val book = bookWordsOf(d.doc_id, d.text, cfg.numbersToWords)
+    val runs = Align.equalRunsOf(d.doc_id, book.map(_.norm), asr.map(_.norm),
+      cfg.minRun, cfg.lcsMaxChunk)
+    val groups = Sessionize.bridge(runs, asr, cfg.maxGapWords, cfg.maxGapTime)
+    // W6 — segment numbering: `segment_{kept:04d}` in group order.
+    // clipsForDoc emits ascending group_id, so the count of kept rows
+    // strictly before is a running counter; a rejected group logs the
+    // id of the NEXT kept segment (reference quirk,
+    // claude_research_optimal.py:591 vs 661).
+    var keptBefore = 0L
+    val outcomes = clipsForDoc(d, asr, groups, cfg)
+      .flatMap(c => judgeOne(c, validator, cfg))
+      .map { o =>
+        val seg = "segment_%04d".format(keptBefore)
+        if (o.kept) keptBefore += 1
+        o.copy(segment = seg)
+      }.toVector
+    DocOutcomes(d.doc_id, runs.size, groups.map(_.group_id).distinct.size,
+      keptBefore, outcomes.size - keptBefore, outcomes)
+  }
+
   /** Full pipeline: sources → align → sessionize → assemble → judge →
     * number → segment/rejection/summary frames (sinks are separate,
     * graft.Sinks).
     *
-    * `docs` is read by three branches: the transcript words, base ASR
-    * and the audio join. It is not cached here; a caller whose source
-    * is expensive (decoding, synthesis) should pass a persisted frame.
-    * Base ASR output (`asr`) and the numbered outcomes are cached, so
-    * every output and sink action reuses them: base inference runs
-    * once per doc and validator inference once per clip.
+    * One narrow map of `outcomesOf` over `docs`: no shuffle; audio
+    * never moves; `docs` is read once. Its output is the one cached
+    * frame, and `segments`, `rejections` and `summary` are projections
+    * of it, so base inference runs once per doc and validator inference
+    * once per clip across every output and sink. Building the result
+    * launches no job.
     */
   def run(docs: Dataset[DocInput], base: WordRecognizer,
       validator: WordRecognizer, cfg: Config = Config()): Result = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val books = bookWords(docs.map(d => (d.doc_id, d.text)),
-      cfg.numbersToWords)
-    val asr = asrWords(docs, base, cfg.numbersToWords).cache()
-    val runs = Align.lcsEqualRuns(books, asr, cfg.minRun, cfg.lcsMaxChunk)
-    val groups = Sessionize.mergeWithSmallGaps(runs, asr,
-      cfg.maxGapWords, cfg.maxGapTime)
-    // Fused W4→F6→W6: assemble, judge and number each doc's clips in
-    // ONE narrow pass after the single audio join, so clip bytes never
-    // cross an exchange — audio crosses the network exactly once.
-    val plans = planClips(asr, groups)
-    val numbered = plans.joinWith(docs, plans("doc_id") === docs("doc_id"))
-      .flatMap { case (plan, doc) =>
-        // W6 — segment numbering: `segment_{kept:04d}` in group order
-        // per doc. clipsForDoc emits ascending group_id, so the count
-        // of kept rows strictly before is a running counter; a
-        // rejected group logs the id of the NEXT kept segment
-        // (reference quirk, claude_research_optimal.py:591 vs 661).
-        var keptBefore = 0L
-        clipsForDoc(plan, doc, cfg)
-          .flatMap(c => judgeOne(c, validator, cfg))
-          .map { o =>
-            val seg = "segment_%04d".format(keptBefore)
-            if (o.kept) keptBefore += 1
-            o.copy(segment = seg)
-          }
-      }.cache()
-    val segments = numbered.filter($"kept")
+    val perDoc = docs.map(outcomesOf(_, base, validator, cfg)).cache()
+    val outcomes = perDoc.select(explode($"outcomes").as("o")).select($"o.*")
+    val segments = outcomes.filter($"kept")
       .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",
         $"sample_rate", $"duration_s", $"words", $"pieces", $"avg_conf",
         $"acoustic_quality")
       .as[SegmentRow]
-    val rejections = numbered.filter(!$"kept")
+    val rejections = outcomes.filter(!$"kept")
       .select($"doc_id", $"group_id", $"segment",
         $"reason", $"duration_ms", $"avg_conf".as("confidence"))
       .as[RejectionRow]
 
-    // A5 summary (claude_research_optimal.py:684–694) + run counts
-    val runCounts = runs.groupBy($"doc_id")
-      .agg(count(lit(1)).as("equal_runs"))
-    val groupCounts = groups.select($"doc_id", $"group_id").distinct()
-      .groupBy($"doc_id").agg(count(lit(1)).as("bridged_groups"))
-    val outcomeCounts = numbered.groupBy($"doc_id").agg(
-      sum(when($"kept", 1L).otherwise(0L)).as("exported"),
-      sum(when($"kept", 0L).otherwise(1L)).as("rejected"))
-    val summary = outcomeCounts
-      .join(runCounts, Seq("doc_id"), "left")
-      .join(groupCounts, Seq("doc_id"), "left")
-      .withColumn("rejection_rate_pct",
-        when($"exported" + $"rejected" > 0,
-          round($"rejected" * 100.0 / ($"exported" + $"rejected"), 2))
-          .otherwise(0.0))
-      // F7 — batch success gating (batch_processor.py:88–98): a doc
-      // "fails" when it exports zero segments
-      .withColumn("status",
-        when($"exported" > 0, "success").otherwise("failed"))
+    // A5 summary (claude_research_optimal.py:684–694) + run counts, for
+    // the docs with at least one outcome
+    val summary = perDoc.filter($"exported" + $"rejected" > 0)
+      .select($"doc_id", $"exported", $"rejected", $"equal_runs",
+        $"bridged_groups",
+        round($"rejected" * 100.0 / ($"exported" + $"rejected"), 2)
+          .as("rejection_rate_pct"),
+        // F7 — batch success gating (batch_processor.py:88–98): a doc
+        // "fails" when it exports zero segments
+        when($"exported" > 0, "success").otherwise("failed").as("status"))
 
     Result(segments, rejections, summary)
   }

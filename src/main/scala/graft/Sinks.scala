@@ -14,6 +14,13 @@ import graft.AsrPipeline.{Result, SegmentRow}
   * concatenated corpus is an ordered per-doc fold, the one genuinely
   * ordered aggregation (A7), done per-doc inside mapGroups so each
   * task folds only its documents' clips.
+  *
+  * Every sink reads the frames of one `AsrPipeline.run`, which are
+  * projections of its one cached outcome table: the pipeline runs with
+  * no shuffle, its audio never moves and `docs` is read once, however
+  * many sinks follow. The corpus fold is the one sink whose shuffle
+  * carries clip audio; the single-file writes shuffle only their small
+  * metadata rows into one task.
   */
 object Sinks {
 
@@ -60,13 +67,16 @@ object Sinks {
 
   /** K3 — per-doc concatenated corpus: kept clips in segment order
     * with `fullGapMs` silence after each, plus newline-joined texts.
+    * Segment order is group order (W6 numbers kept clips by group);
+    * sorting by the `segment` string would put `segment_10000` before
+    * `segment_1001`.
     */
   def writeFullCorpus(segments: Dataset[SegmentRow], outDir: String,
       fullGapMs: Int): Unit = {
     val spark = segments.sparkSession
     import spark.implicits._
     segments.groupByKey(_.doc_id).mapGroups { (docId, it) =>
-      val segs = it.toArray.sortBy(_.segment)
+      val segs = it.toArray.sortBy(_.group_id)
       val sr = segs.head.sample_rate
       val parts = segs.flatMap(s =>
         Seq(Pcm(s.pcm, sr), Pcm.silence(fullGapMs, sr))).toSeq
@@ -84,7 +94,11 @@ object Sinks {
   }
 
   /** K2 + K4 — clips.tsv (claude_research_optimal.py:477, 666),
-    * rejections.json, summary.json per run.
+    * rejections.json, summary.json per run, one file each.
+    * `repartition(1)`, not `coalesce(1)`: a coalesce would pull the
+    * whole upstream stage into one task, so when this is the first sink
+    * a caller runs, every document's inference would fill the
+    * pipeline cache serially.
     */
   def writeMetadata(result: Result, outDir: String): Unit = {
     result.segments.select(
@@ -95,13 +109,13 @@ object Sinks {
         col("words"), col("pieces"),
         format_string("%.3f", col("avg_conf")).as("avg_conf"),
         col("acoustic_quality"), col("doc_id"), col("group_id"))
-      .coalesce(1).write.mode("overwrite")
+      .repartition(1).write.mode("overwrite")
       .option("sep", "\t").option("header", true)
       .csv(s"$outDir/clips_tsv")
     result.rejections.toDF()
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/rejections_json")
+      .repartition(1).write.mode("overwrite").json(s"$outDir/rejections_json")
     result.summary
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/summary_json")
+      .repartition(1).write.mode("overwrite").json(s"$outDir/summary_json")
   }
 
   /** K7 — optional debug dumps (claude_research_optimal.py:448–454):
@@ -125,7 +139,9 @@ object Sinks {
   }
 
   /** K5 — word-coverage CSV (batch_processor.py:39–45): whitespace
-    * tokens of exported segment texts, (count asc, word asc).
+    * tokens of exported segment texts, (count asc, word asc). The one
+    * output file is sorted within its partition, so no range-partition
+    * sampling job runs.
     */
   def writeWordCoverage(segments: Dataset[SegmentRow], outDir: String): Unit = {
     val spark = segments.sparkSession
@@ -134,8 +150,8 @@ object Sinks {
       .select(explode(split(lower($"text"), "\\s+")).as("word"))
       .filter($"word" =!= "")
       .groupBy($"word").agg(count(lit(1)).as("count"))
-      .orderBy($"count", $"word")
-      .coalesce(1).write.mode("overwrite")
+      .coalesce(1).sortWithinPartitions($"count", $"word")
+      .write.mode("overwrite")
       .option("header", true).csv(s"$outDir/word_coverage")
   }
 

@@ -30,14 +30,21 @@ object Align {
     import spark.implicits._
     book.groupByKey(_.doc_id)
       .cogroup(asr.groupByKey(_.doc_id)) { (docId, bs, as) =>
-        val bn = bs.toArray.sortBy(_.pos).map(_.norm).toIndexedSeq
-        val an = as.toArray.sortBy(_.idx).map(_.norm).toIndexedSeq
-        if (bn.isEmpty || an.isEmpty) Iterator.empty
-        else ChunkedMatcher.equalRuns(bn, an, minRun, maxChunk)
-          .iterator.map {
-            case (bi0, bi1, ai0, ai1) =>
-              EqualRun(docId, bi0.toLong, bi1.toLong, ai0.toLong, ai1.toLong)
-          }
+        equalRunsOf(docId, bs.toArray.sortBy(_.pos).map(_.norm).toIndexedSeq,
+          as.toArray.sortBy(_.idx).map(_.norm).toIndexedSeq, minRun, maxChunk)
+          .iterator
       }
   }
+
+  /** J1 for one document's normalized streams; no runs when either
+    * stream is empty. The ASR pipeline calls it per document inside
+    * its one narrow pass.
+    */
+  def equalRunsOf(docId: Long, book: IndexedSeq[String],
+      asr: IndexedSeq[String], minRun: Int, maxChunk: Int): Seq[EqualRun] =
+    if (book.isEmpty || asr.isEmpty) Nil
+    else ChunkedMatcher.equalRuns(book, asr, minRun, maxChunk).map {
+      case (bi0, bi1, ai0, ai1) =>
+        EqualRun(docId, bi0.toLong, bi1.toLong, ai0.toLong, ai1.toLong)
+    }
 }

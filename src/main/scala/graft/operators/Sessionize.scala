@@ -1,15 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{AsrWord, EqualRun, GroupedRun}
 
-/** W2 — gap-bridging sessionization (claude_research_optimal.py:291–305)
-  * as the classic lag → boundary-flag → running-sum pattern. One window
-  * (= one shuffle by the partition keys) produces contiguous group ids;
-  * no driver-side state, so it scales linearly with documents/users.
+/** W2 — gap-bridging sessionization (claude_research_optimal.py:291–305).
+  * `sessionId` is the classic lag → boundary-flag → running-sum window
+  * for any partition key; `bridge` is the reference's per-document
+  * loop, which the ASR pipeline runs inside its one narrow pass.
+  * Neither keeps state outside its tasks, so both scale linearly with
+  * documents/users.
   */
 object Sessionize {
 
@@ -26,16 +28,33 @@ object Sessionize {
     sum(when(isBoundary, 1L).otherwise(0L)).over(w)
   }
 
-  /** Reference-exact `merge_with_small_gaps`: group consecutive equal
-    * runs (sorted by ai0) while word-gap ≤ maxGapWords AND time-gap ≤
-    * maxGapTime; gap-time = asr[nxt.ai0].start − asr[prev.ai1−1].end
-    * (claude_research_optimal.py:298–301). `prev` is the previous run
-    * in ai0 order — exactly `lag`.
-    *
-    * Implemented as two broadcast-friendly equi-joins to fetch the two
-    * boundary-word times, then one window pass. group_id is 0-based per
-    * doc to match the reference's list index.
+  /** W2 kernel for one document: the reference's
+    * `merge_with_small_gaps` loop (claude_research_optimal.py:291–305).
+    * Runs are taken in ai0 order; a run starts a new group when it is
+    * the first, or its word gap (ai0 − prev.ai1) exceeds `maxGapWords`,
+    * or its time gap (words[ai0].start − words[prev.ai1−1].end, lines
+    * 298–301) exceeds `maxGapTime`. group_id is 0-based, the
+    * reference's list index. `words` are the doc's ASR words with
+    * unique `idx`; a run whose boundary word is missing is dropped.
     */
+  def bridge(runs: Seq[EqualRun], words: Seq[AsrWord], maxGapWords: Long,
+      maxGapTime: Double): Seq[GroupedRun] = {
+    val at = words.iterator.map(w => w.idx -> w).toMap
+    var prev: GroupedRun = null
+    runs.sortBy(_.ai0).flatMap { r =>
+      for (s <- at.get(r.ai0); e <- at.get(r.ai1 - 1)) yield {
+        val group = if (prev == null) 0L
+          else if (r.ai0 - prev.ai1 > maxGapWords ||
+            s.start - prev.end_time > maxGapTime) prev.group_id + 1
+          else prev.group_id
+        prev = GroupedRun(r.doc_id, group, r.bi0, r.bi1, r.ai0, r.ai1,
+          s.start, e.end)
+        prev
+      }
+    }
+  }
+
+  /** `bridge` per document over a `doc_id` cogroup of runs and words. */
   def mergeWithSmallGaps(
       runs: Dataset[EqualRun],
       asr: Dataset[AsrWord],
@@ -43,27 +62,9 @@ object Sessionize {
       maxGapTime: Double): Dataset[GroupedRun] = {
     val spark = runs.sparkSession
     import spark.implicits._
-
-    val starts = asr.select($"doc_id", $"idx", $"start")
-    val ends = asr.select($"doc_id", $"idx", $"end")
-
-    val timed = runs
-      .join(starts.withColumnRenamed("idx", "ai0")
-        .withColumnRenamed("start", "start_time"), Seq("doc_id", "ai0"))
-      .join(ends.withColumn("ai1", $"idx" + 1).drop("idx")
-        .withColumnRenamed("end", "end_time"), Seq("doc_id", "ai1"))
-
-    val w = Window.partitionBy($"doc_id").orderBy($"ai0")
-    val gapW = $"ai0" - lag($"ai1", 1).over(w)
-    val gapT = $"start_time" - lag($"end_time", 1).over(w)
-    val boundary =
-      lag($"ai1", 1).over(w).isNull || gapW > maxGapWords || gapT > maxGapTime
-
-    timed
-      .withColumn("group_id",
-        sessionId(Seq($"doc_id"), Seq($"ai0"), boundary) - 1L)
-      .select($"doc_id", $"group_id", $"bi0", $"bi1", $"ai0", $"ai1",
-        $"start_time", $"end_time")
-      .as[GroupedRun]
+    runs.groupByKey(_.doc_id).cogroup(asr.groupByKey(_.doc_id)) {
+      (_, rs, ws) =>
+        bridge(rs.toSeq, ws.toSeq, maxGapWords, maxGapTime).iterator
+    }
   }
 }

@@ -2,7 +2,13 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -266,5 +272,73 @@ class AsrPipelineSpec extends AnyFunSuite {
       Map(1L -> 30, 2L -> 10))
     assert(conf.map(c => (c._1, c._2)).distinct.length == 40)
     assert(conf.forall(_._3 == 0.9))
+  }
+
+  /** Runs `body` under its own job group with `listener` attached and
+    * drains the bus before returning, so the listener saw every event.
+    */
+  private def listening[T](listener: SparkListener, group: String)
+      (body: => T): T = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try { val out = body; ListenerDrain(sc); out }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  test("run launches no job; its three frames read one cached table " +
+    "with no exchange") {
+    val group = "asr-run-build"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val r = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }, group)(AsrPipeline.run(twoDocs, rec, rec, Config()))
+    assert(jobs.get == 0)
+    val plans = Seq(r.segments.toDF(), r.rejections.toDF(), r.summary)
+      .map(_.queryExecution.executedPlan)
+    val scans = plans.map(p =>
+      Aqe.collect(p) { case s: InMemoryTableScanExec => s })
+    assert(scans.map(_.size) == Seq(1, 1, 1))
+    val cached = scans.map(_.head.relation.cacheBuilder)
+    assert(cached.forall(_ eq cached.head))
+    (plans :+ cached.head.cachedPlan).foreach { p =>
+      assert(Aqe.collect(p) { case e: Exchange => e }.isEmpty, p.treeString)
+    }
+  }
+
+  test("writeMetadata run first fills the pipeline cache in one task " +
+    "per docs partition") {
+    val parts = twoDocs.rdd.getNumPartitions
+    assert(parts > 1)
+    val group = "asr-metadata-first"
+    val cacheStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val r = AsrPipeline.run(twoDocs, rec, rec, Config())
+    val out = java.nio.file.Files.createTempDirectory("graft_cold").toString
+    listening(new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group &&
+            e.stageInfo.rddInfos.exists(_.storageLevel.isValid))
+          cacheStageTasks.add(e.stageInfo.numTasks)
+    }, group)(Sinks.writeMetadata(r, out))
+    val tasks = cacheStageTasks.asScala.toSeq
+    assert(tasks.nonEmpty && tasks.forall(_ == parts), tasks)
+  }
+
+  test("writeFullCorpus orders a doc's clips by group past segment_9999") {
+    val s = spark
+    import s.implicits._
+    def clip(group: Long, text: String) = SegmentRow(9L, group,
+      "segment_%04d".format(group), text, Pcm.silence(10, Sr).bytes, Sr,
+      0.01, 1, 1, 0.9, "clean")
+    val out = java.nio.file.Files.createTempDirectory("graft_k3").toString
+    Sinks.writeFullCorpus(
+      Seq(clip(10000L, "second"), clip(9999L, "first")).toDS(), out, 500)
+    val txt = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "doc_9", "full.txt"))
+    assert(new String(txt, "UTF-8") == "first\nsecond")
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkHarness
-import graft.core.{AsrWord, EqualRun}
+import graft.core.{AsrWord, EqualRun, GroupedRun}
 
 /** Reference-exact semantics of merge_with_small_gaps
   * (claude_research_optimal.py:291–305): runs sorted by ai0, grouped
@@ -48,5 +48,21 @@ class SessionizeSpec extends AnyFunSuite {
         runs.toDS(), asr.toDS(), 2, 0.5)
       .collect().map(g => (g.ai0, g.group_id)).sortBy(_._1)
     assert(got.toSeq == Seq((0L, 0L), (4L, 1L)))
+  }
+
+  test("bridge: no runs, one run, and a time gap equal to maxGapTime") {
+    // binary-exact times: word i spans [0.5·i, 0.5·i + 0.25]
+    val ws = (0L until 8L).map(i => word(3L, i, i * 0.5, i * 0.5 + 0.25))
+    assert(Sessionize.bridge(Nil, ws, 2, 0.25).isEmpty)
+    assert(Sessionize.bridge(Seq(EqualRun(3L, 5, 9, 1, 4)), ws, 2, 0.25) ==
+      Seq(GroupedRun(3L, 0L, 5, 9, 1, 4, 0.5, 1.75)))
+    // [0,2) then [2,4): word gap 0, time gap w2.start − w1.end = 0.25,
+    // exactly maxGapTime → bridged (the split test is `>`); any
+    // smaller limit splits
+    val runs = Seq(EqualRun(3L, 2, 4, 2, 4), EqualRun(3L, 0, 2, 0, 2))
+    def groups(maxGapTime: Double) =
+      Sessionize.bridge(runs, ws, 2, maxGapTime).map(g => (g.ai0, g.group_id))
+    assert(groups(0.25) == Seq((0L, 0L), (2L, 0L)))
+    assert(groups(0.2) == Seq((0L, 0L), (2L, 1L)))
   }
 }
