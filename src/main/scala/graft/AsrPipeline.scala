@@ -336,7 +336,8 @@ object AsrPipeline {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val perDoc = docs.map(outcomesOf(_, base, validator, cfg)).cache()
+    val perDoc =
+      Materialize.share(docs.map(outcomesOf(_, base, validator, cfg)))
     val outcomes = perDoc.select(explode($"outcomes").as("o")).select($"o.*")
     val segments = outcomes.filter($"kept")
       .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",

@@ -12,18 +12,23 @@ package graft
   * single sample can land entirely inside a noise window.
   */
 object Bench {
+
+  /** Runs `df`'s physical plan in full and returns its row count.
+    * Dataset.count() is NOT a safe work-forcer: Catalyst's
+    * OptimizeOneRowPlan knows a plan ending in a bare global
+    * aggregate returns exactly one row, so count() constant-folds
+    * to a literal and the plan NEVER EXECUTES — every one-row
+    * statistic query was benching plan-compile time only (caught
+    * r10: q_hubness "0.26 s" vs 45 s of real execution at sf0.1).
+    * toRdd.count() counts the physical plan's own output rows.
+    */
+  def force(df: org.apache.spark.sql.DataFrame): Long =
+    df.queryExecution.toRdd.count()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus()
     val spark = GraftSession(cpus)
-    // drop every cached dataset AND persisted RDD (MLlib leaves
-    // internal RDD caches that catalog.clearCache misses) so queries
-    // neither read stale caches nor accumulate heap across the run
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     // Optional comma-separated subset for local iteration, e.g.
     // SPARK_GRAFT_ONLY=q_knn_lsh,q_knn_ivf — full run when unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -46,16 +51,6 @@ object Bench {
       System.err.println(s"[bench] SPARK_GRAFT_RUNS=$requestedRuns " +
         s"clamped to $timedRuns: single-shot timings are not " +
         "floor-comparable on this host (bimodal noise)")
-    // Dataset.count() is NOT a safe work-forcer: Catalyst's
-    // OptimizeOneRowPlan knows a plan ending in a bare global
-    // aggregate returns exactly one row, so count() constant-folds
-    // to a literal and the plan NEVER EXECUTES — every one-row
-    // statistic query was benching plan-compile time only (caught
-    // r10: q_hubness "0.26 s" vs 45 s of real execution at sf0.1).
-    // toRdd.count() counts the physical plan's own output rows, so
-    // the executed plan always runs in full.
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     // 4 decimals (0.1 ms) keeps the summary line ~3× shorter than raw
     // double repr — the r3 driver tail truncated the full-width line
     def fmt(v: Double): String = f"$v%.4f"
@@ -86,13 +81,13 @@ object Bench {
       val passes: Seq[Double] = try {
         force(fn(spark, sfDir)) // warmup: codegen + JIT
         (1 to timedRuns).map { _ =>
-          dropCaches() // each timed run must recompute
+          Materialize.releaseAll(spark) // each timed run must recompute
           val t0 = System.nanoTime()
           force(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }
       } catch { case _: Throwable => Seq(-1.0) }
-      dropCaches()
+      Materialize.releaseAll(spark)
       val t = passes.min
       // per-query progress on stderr: even if the driver's stdout tail
       // truncates the summary line, every timing already exists here —
@@ -111,8 +106,12 @@ object Bench {
     val qs = mins.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = mins.values.filter(_ >= 0).sum
+    // a failed query reads -1 in "queries" and is left out of the
+    // total, so it is also named here: a crash must not pass for speed
+    val failed = mins.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .toSeq.sorted.mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$timedRuns,$drift,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$timedRuns,$drift,"queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     // the persisted artifact additionally carries every pass time —
     // stdout keeps the compact driver-contract line (long lines have
     // been tail-truncated by the driver before)

@@ -9,7 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: runMain graft.ExplainPlans <suffix> <q1,q2,...>
   * Env: SPARK_GRAFT_SF_DIR (data dir), SPARK_GRAFT_CPUS (cores),
   *      SPARK_GRAFT_PLANS_DIR (output dir, default plans/r15).
-  * Not part of the driver contract; never executes the plans.
+  * Not part of the `SparkEntry` surface. It never runs a query's final
+  * plan, but building the DataFrame runs every `Materialize.cut`
+  * inside it (one job each), so point SPARK_GRAFT_SF_DIR at the
+  * smallest SF.
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {

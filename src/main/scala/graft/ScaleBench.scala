@@ -23,11 +23,6 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.cpus("32"))
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
 
     val contract = Seq("q_session_merge", "q_run_merge", "q_lcs_align",
       "q_asr_pipeline", "q_dedup_exact", "q_dedup_jaccard",
@@ -245,15 +240,15 @@ object ScaleBench {
     val timedRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val results = queries.map { case (name, fn) =>
       val t = try {
-        fn(spark, sfDir).count() // warmup: codegen + JIT
+        Bench.force(fn(spark, sfDir)) // warmup: codegen + JIT
         (1 to timedRuns).map { _ =>
-          dropCaches()
+          Materialize.releaseAll(spark)
           val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
+          Bench.force(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }.min
       } catch { case _: Throwable => -1.0 }
-      dropCaches()
+      Materialize.releaseAll(spark)
       System.err.println(f"[scale] $name%-28s $t%.4f s")
       name -> t
     }

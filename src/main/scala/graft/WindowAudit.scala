@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window, Aggrega
   * EMPTY, i.e. the sites that at execution log "No Partition Defined
   * for Window operation! Moving all data to a single partition" and at
   * 100 TB serialize one executor. Walks every declared query's
-  * OPTIMIZED logical plan (construction only — never executes the
-  * final plan; operators with eager internal checkpoints run their
-  * setup jobs, so point SPARK_GRAFT_SF_DIR at the smallest SF).
+  * OPTIMIZED logical plan. It never runs a query's final plan, but
+  * building the DataFrame runs every `Materialize.cut` inside it (one
+  * job each), so point SPARK_GRAFT_SF_DIR at the smallest SF.
   *
   * For each global window the audit also reports whether the window's
   * input subtree contains an Aggregate/Distinct below it WITHOUT an

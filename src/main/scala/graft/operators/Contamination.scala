@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Benchmark decontamination and cross-document duplicate-span
   * analysis — the two n-gram-overlap operators every LLM training
   * corpus runs before a model ever sees the data:
@@ -170,7 +172,7 @@ object Contamination {
     val g2 = positionalNgrams(docs, docCol, textCol, n)
       .groupBy(col(docCol), col("g"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val repeated = g2
       .groupBy(col("g")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") > 1)

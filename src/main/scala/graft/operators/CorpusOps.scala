@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Corpus-preparation operators a large-scale training-data pipeline
   * needs around the dedup/quality core: deterministic content
   * sampling and token-budget sharding. Pure Column expressions /
@@ -1168,7 +1170,7 @@ object CorpusOps {
     // same multiset sum the per-instance join produced.
     val g2 = grams.groupBy(col(docCol), col("__t"), col("__b"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val bucketCounts = g2.groupBy(col("__b"))
       .agg(sum(col("__n")).as("__cr"),
         sum(when(col("__t"), col("__n")).otherwise(0L)).as("__ct"))

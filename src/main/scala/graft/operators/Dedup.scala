@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Deduplication operators for the LLM-training-data north star
   * (SURVEY.md §2.10 X1): exact, n-gram Jaccard, MinHash+LSH, SimHash.
   *
@@ -120,11 +122,11 @@ object Dedup {
     * (hash collisions / boilerplate shingles) are dropped.
     */
   def candidatePairs(buckets: DataFrame, docCol: String,
-      maxBucketSize: Int = 1000): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = Materialize.scoped { keep =>
     // bucket sizes via groupBy+join (map-side combinable), not a
     // count-over-window, which would sort the whole bucket stream;
-    // cached because the size aggregate and the join both read it
-    val cachedBuckets = buckets.cache()
+    // kept because the size aggregate and the join both read it
+    val cachedBuckets = keep(buckets)
     val sizes = cachedBuckets.groupBy(col("band_id"), col("band_hash"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") <= maxBucketSize)
@@ -136,24 +138,7 @@ object Dedup {
     val pairs = a.join(b, Seq("band_id", "band_hash"))
       .filter(col("d1") < col("d2"))
       .select(col("d1"), col("d2")).distinct()
-    materializeThenRelease(pairs, cachedBuckets)
-  }
-
-  /** Eagerly materialize `result` (a localCheckpoint — one pass, then
-    * downstream reads hit the checkpoint blocks), then release the
-    * operator-internal caches. Without this, every invocation in a
-    * long-lived session would pin its intermediates in executor
-    * storage forever — the caches exist only to share work BETWEEN
-    * stages of one invocation, and the materialized result (a skinny
-    * pair list, orders of magnitude smaller than the exploded
-    * intermediates) is the only state worth keeping. Callers may
-    * `unpersist` the returned frame when done with it.
-    */
-  private def materializeThenRelease(result: DataFrame,
-      intermediates: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
-    intermediates.foreach(_.unpersist(blocking = false))
-    out
+    Materialize.cut(pairs)
   }
 
   /** Exact pairwise Jaccard over distinct shingle sets, computed by
@@ -209,26 +194,23 @@ object Dedup {
     * Output identical to filtering `jaccardPairsNaive` at ≥ t.
     */
   def jaccardPairsExact(docs: DataFrame, docCol: String,
-      threshold: Double): DataFrame = {
-    val (verified, intermediates) =
-      jaccardPairsExactRaw(docs, docCol, threshold)
-    materializeThenRelease(verified, intermediates: _*)
+      threshold: Double): DataFrame = Materialize.scoped { keep =>
+    val (_, ordered, prefixes) =
+      orderedPrefixes(keep, docs, docCol, threshold)
+    val cand = prefixes.as("a").join(prefixes.as("b"),
+        col("a.g") === col("b.g") && col("a.d") < col("b.d"))
+      .select(col("a.d").as("d1"), col("b.d").as("d2")).distinct()
+    Materialize.cut(verifyPairs(
+      ordered.select(col("d"), col("sh").as("shingles")), "d",
+      cand, threshold))
   }
 
-  /** The un-checkpointed plan behind [[jaccardPairsExact]], exposed so
-    * PlanAuditSpec can assert on the physical plan the operator
-    * actually executes (the public method's eager localCheckpoint
-    * replaces the upstream stages with a Scan ExistingRDD in the final
-    * plan string). Returns the result frame plus the operator-internal
-    * caches the caller must release.
-    */
-  /** Shared prefix-filter machinery for [[jaccardPairsExactRaw]] and
+  /** Shared prefix-filter machinery for [[jaccardPairsExact]] and
     * [[containmentPairs]]: the exploded (d, n, g) shingle stream, the
     * per-doc df-rarest-first ordered shingle arrays, and each doc's
     * first |d| − ⌈t·|d|⌉ + 1 prefix shingles (the bound is the same
-    * for the Jaccard and containment forms). `ex` and `ordered` come
-    * back cached — callers release them via
-    * [[materializeThenRelease]].
+    * for the Jaccard and containment forms). `ex` and `ordered` are
+    * kept for the caller's scope.
     *
     * Document frequency via groupBy + join, NOT count(*) over a
     * Window partitioned by g: the window forces a full sort of the
@@ -238,35 +220,21 @@ object Dedup {
     * semantics only) — callers at scale pass `hashedShingles` 8-byte
     * longs.
     */
-  private def orderedPrefixes(docs: DataFrame, docCol: String,
-      threshold: Double): (DataFrame, DataFrame, DataFrame) = {
-    val ex = docs.select(col(docCol).as("d"),
-      size(col("shingles")).as("n"), explode(col("shingles")).as("g"))
-      .cache()
+  private def orderedPrefixes(keep: Materialize.Keep, docs: DataFrame,
+      docCol: String, threshold: Double): (DataFrame, DataFrame, DataFrame) = {
+    val ex = keep(docs.select(col(docCol).as("d"),
+      size(col("shingles")).as("n"), explode(col("shingles")).as("g")))
     val df = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val ordered = ex.join(df, Seq("g"))
+    val ordered = keep(ex.join(df, Seq("g"))
       .groupBy(col("d"))
       .agg(transform(
         array_sort(collect_list(struct(col("df"), col("g")))),
-        x => x.getField("g")).as("sh"))
-      .cache()
+        x => x.getField("g")).as("sh")))
     val prefixLen = (size(col("sh")) -
       ceil(lit(threshold) * size(col("sh"))) + 1).cast("int")
     val prefixes = ordered.select(col("d"), size(col("sh")).as("n"),
       explode(slice(col("sh"), lit(1), prefixLen)).as("g"))
     (ex, ordered, prefixes)
-  }
-
-  private[graft] def jaccardPairsExactRaw(docs: DataFrame, docCol: String,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val (ex, ordered, prefixes) = orderedPrefixes(docs, docCol, threshold)
-    val cand = prefixes.as("a").join(prefixes.as("b"),
-        col("a.g") === col("b.g") && col("a.d") < col("b.d"))
-      .select(col("a.d").as("d1"), col("b.d").as("d2")).distinct()
-    val verified = verifyPairs(
-      ordered.select(col("d"), col("sh").as("shingles")), "d",
-      cand, threshold)
-    (verified, Seq(ex, ordered))
   }
 
   /** Containment pairs: |A∩B| / min(|A|, |B|) ≥ t — the asymmetric
@@ -287,8 +255,9 @@ object Dedup {
     * denominator min(|A|,|B|).
     */
   def containmentPairs(docs: DataFrame, docCol: String,
-      threshold: Double): DataFrame = {
-    val (ex, ordered, prefixes) = orderedPrefixes(docs, docCol, threshold)
+      threshold: Double): DataFrame = Materialize.scoped { keep =>
+    val (ex, ordered, prefixes) =
+      orderedPrefixes(keep, docs, docCol, threshold)
     // prefix of the SMALLER side only (sizes tie → smaller id) ⋈ the
     // full stream: wlog |A| ≤ |B| in the completeness argument, so
     // restricting the prefix side halves candidate generation and
@@ -308,7 +277,7 @@ object Dedup {
           least(size(col("sh1")), size(col("sh2"))))
       .filter(col("containment") >= threshold)
       .select(col("d1"), col("d2"), col("containment"))
-    materializeThenRelease(verified, ex, ordered)
+    Materialize.cut(verified)
   }
 
   /** X1f — near-dup CLUSTER resolution: dup pairs → connected
@@ -328,16 +297,16 @@ object Dedup {
     * implicitly kept (they never enter `pairs`).
     */
   def resolveClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // localCheckpoint, not cache: each round's frame is built on the
-    // previous round's, so caching alone leaves a plan that GROWS per
+    // cut, not a cache: each round's frame is built on the previous
+    // round's, so caching alone leaves a plan that GROWS per
     // iteration — analysis/optimization time compounds (the classic
-    // iterative-lineage blowup). Checkpointing materializes AND cuts
+    // iterative-lineage blowup). A cut materializes AND drops the
     // lineage, keeping every round's plan constant-size.
     val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.cut)
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+      .withColumn("label", col("id")).transform(Materialize.cut)
     var i = 0
     var converged = false
     while (i < maxIters && !converged) {
@@ -362,7 +331,7 @@ object Dedup {
         .select(col("id"),
           least(col("label"), coalesce(col("parent"), col("label")))
             .as("label"), col("__old"))
-        .localCheckpoint()
+        .transform(Materialize.cut)
       converged = updated
         .filter(col("label") =!= col("__old")).isEmpty
       labels = updated.select(col("id"), col("label"))
@@ -415,14 +384,15 @@ object Dedup {
     */
   def incrementalNearDupes(newDocs: DataFrame, corpus: DataFrame,
       docCol: String, numHashes: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double, maxBucketSize: Int = 1000): DataFrame = {
+      threshold: Double, maxBucketSize: Int = 1000): DataFrame =
+      Materialize.scoped { keep =>
     def buckets(df: DataFrame) = bandBuckets(
       minhashSignature(
         df.select(col(docCol), explode(col("shingles")).as("g")),
         docCol, "g", numHashes),
       docCol, bands, rowsPerBand)
     val nb = buckets(newDocs)
-    val cb = buckets(corpus).cache()
+    val cb = keep(buckets(corpus))
     val sizes = cb.groupBy(col("band_id"), col("band_hash"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") <= maxBucketSize)
@@ -439,7 +409,7 @@ object Dedup {
       newDocs.select(col(docCol), col("shingles"))
         .unionByName(corpus.select(col(docCol), col("shingles"))),
       docCol, cand, threshold)
-    materializeThenRelease(verified, cb)
+    Materialize.cut(verified)
   }
 
   /** 64-bit SimHash over a doc's shingle stream: bit j of the
@@ -512,28 +482,18 @@ object Dedup {
     * billion-doc corpora at the cost of the completeness radius.
     */
   def simhashPairs(sigs: DataFrame, docCol: String,
-      maxHamming: Int = 7, numChunks: Int = 8): DataFrame = {
-    val (pairs, cachedSigs) = simhashPairsRaw(sigs, docCol, maxHamming,
-      numChunks)
-    materializeThenRelease(pairs, cachedSigs)
-  }
-
-  /** Un-checkpointed plan behind [[simhashPairs]] for PlanAuditSpec —
-    * same rationale as [[jaccardPairsExactRaw]]. Returns the pair
-    * frame plus the signature cache the caller must release.
-    */
-  private[graft] def simhashPairsRaw(sigs: DataFrame, docCol: String,
-      maxHamming: Int = 7, numChunks: Int = 8): (DataFrame, DataFrame) = {
+      maxHamming: Int = 7, numChunks: Int = 8): DataFrame =
+      Materialize.scoped { keep =>
     val bits = 64 / numChunks
     val mask = (1L << bits) - 1
-    // Cache the signatures before the chunk self-join: both join
+    // Keep the signatures for the chunk self-join: both join
     // sides read them, and without the cache the entire signature
     // pipeline (shingle window + 64-sum aggregate) executes twice —
     // measured 2.6 s vs 1.1 s on q_dedup_simhash at sf0.1. Signatures
     // are one (docCol, long) row per doc, orders of magnitude smaller
     // than the shingle stream they summarize, so the cache stays
     // negligible at any corpus size.
-    val cachedSigs = sigs.cache()
+    val cachedSigs = keep(sigs)
     val chunks = cachedSigs.select(col(docCol).as("d"), col("simhash"),
       posexplode(array((0 until numChunks).map(j =>
         shiftrightunsigned(col("simhash"), j * bits).bitwiseAND(mask)): _*)))
@@ -547,7 +507,7 @@ object Dedup {
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    (pairs, cachedSigs)
+    Materialize.cut(pairs)
   }
 
   /** X133 — sorted-neighborhood near-dup candidates (Hernández &

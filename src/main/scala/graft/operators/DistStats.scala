@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** X184–X187 — distribution-shape diagnostics over count/value
   * columns: Gini concentration + top-p coverage (how head-heavy is
   * the token distribution), Benford first-digit conformance (the
@@ -581,7 +583,7 @@ object DistStats {
     * ((2·w·T + M) div (2·M)) on exact cell masses, so the whole
     * 2·iters-step recursion replays verbatim in unrolled CTEs. The
     * cell table is category-bounded (|rows|·|cols|), never
-    * data-sized; per-step localCheckpoint truncates the loop plan.
+    * data-sized; a per-step `Materialize.cut` truncates the loop plan.
     */
   def rakeWeights(df: DataFrame, rowCol: String, colCol: String,
       iters: Int): DataFrame = {
@@ -604,7 +606,7 @@ object DistStats {
       s" div (2 * cast(__C as $dec)) as long)")
     val targets = tot.select(tR.as("__tr"), tC.as("__tc"))
     var cells = cells0.crossJoin(broadcast(targets))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     def rescale(marginCol: String, targetCol: String): DataFrame = {
       val m = cells.groupBy(col(marginCol).as("__k"))
         .agg(sum((col("n").cast(dec) * col("w")).cast(dec)).cast(dec)
@@ -617,8 +619,8 @@ object DistStats {
             .otherwise(col("w")).as("w"))
     }
     for (_ <- 1 to iters) {
-      cells = rescale("r", "__tr").localCheckpoint(true)
-      cells = rescale("c", "__tc").localCheckpoint(true)
+      cells = Materialize.cut(rescale("r", "__tr"))
+      cells = Materialize.cut(rescale("c", "__tc"))
     }
     cells.select(col("r"), col("c"), col("n"),
       col("w").as("w_micro"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** X190 — undirected-graph shape statistics: triangle count and the
   * global clustering (transitivity) coefficient 3·T / #wedges. The
   * community-density readout for the dedup/co-occurrence graphs the
@@ -24,17 +26,21 @@ object GraphStats {
 
   private val dec = "decimal(38,0)"
 
+  /** Distinct undirected edges (a, b) with a < b, self-loops dropped. */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(
+        least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
     // the canonical edge table feeds five subtrees (nodes, edges,
     // degrees, and all three legs of the triangle join) — pay the
     // upstream build once
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
+    val e = Materialize.share(canonicalEdges(edges, srcCol, dstCol))
     val nodes = e.select(col("a").as("v"))
       .unionAll(e.select(col("b").as("v")))
       .agg(count_distinct(col("v")).as("n_nodes"))
@@ -71,7 +77,7 @@ object GraphStats {
     * (n_nodes, n_edges, converged).
     *
     * Scale shape: each round is a degree agg + two semi joins on
-    * node keys; `localCheckpoint` cuts lineage per round (the X1f
+    * node keys; `Materialize.cut` drops lineage per round (the X1f
     * cluster-resolution lesson — 10 chained rounds otherwise
     * replan exponentially).
     */
@@ -79,12 +85,7 @@ object GraphStats {
       k: Int, iters: Int = 8): DataFrame = {
     require(k >= 1, s"bad k $k")
     require(iters >= 1 && iters <= 32, s"bad iters $iters")
-    var e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    var e = Materialize.cut(canonicalEdges(edges, srcCol, dstCol))
     // r15: stop peeling at the fixed point instead of always running
     // all `iters` rounds — a round that drops no EDGE also dropped no
     // node (a node in the table has ≥1 edge), so the survivor set is
@@ -105,7 +106,7 @@ object GraphStats {
         .join(deg.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(deg.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
+        .transform(Materialize.cut)
       val c = next.count()
       fixed = c == prevCount
       prevCount = c
@@ -154,12 +155,7 @@ object GraphStats {
       maxDegree: Long = 1000L, minCommon: Long = 2L): DataFrame = {
     require(maxDegree >= 2, s"bad maxDegree $maxDegree")
     require(minCommon >= 1, s"bad minCommon $minCommon")
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
+    val e = Materialize.share(canonicalEdges(edges, srcCol, dstCol))
     // undirected adjacency: (node, neighbor) both ways
     val adj = e.select(col("a").as("__w"), col("b").as("__u"))
       .unionAll(e.select(col("b").as("__w"), col("a").as("__u")))
@@ -173,7 +169,7 @@ object GraphStats {
     // adj ⋈ mids build — the union + degree agg + join executed TWICE.
     // wadj is SKINNY (three longs + the middle key), so one eager
     // checkpoint is cheap and both sides read the same blocks.
-    val wadj = adj.join(mids, Seq("__w")).localCheckpoint(true)
+    val wadj = adj.join(mids, Seq("__w")).transform(Materialize.cut)
     val pairs = wadj.as("x").join(wadj.as("y"),
         col("x.__w") === col("y.__w") && col("x.__u") < col("y.__u"))
       .groupBy(col("x.__u").as("node_a"), col("y.__u").as("node_b"))
@@ -204,12 +200,7 @@ object GraphStats {
       maxDegree: Long = 1000L, minCommon: Long = 2L): DataFrame = {
     require(maxDegree >= 2, s"bad maxDegree $maxDegree")
     require(minCommon >= 1, s"bad minCommon $minCommon")
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
+    val e = Materialize.share(canonicalEdges(edges, srcCol, dstCol))
     val adj = e.select(col("a").as("__w"), col("b").as("__u"))
       .unionAll(e.select(col("b").as("__w"), col("a").as("__u")))
     val deg = adj.groupBy(col("__w"))
@@ -218,7 +209,7 @@ object GraphStats {
       .select(col("__w"))
     // r16: same wadj double-build as [[adamicAdar]] — checkpoint the
     // skinny (middle, endpoint) table once for both self-join sides
-    val wadj = adj.join(mids, Seq("__w")).localCheckpoint(true)
+    val wadj = adj.join(mids, Seq("__w")).transform(Materialize.cut)
     val pairs = wadj.as("x").join(wadj.as("y"),
         col("x.__w") === col("y.__w") && col("x.__u") < col("y.__u"))
       .groupBy(col("x.__u").as("node_a"), col("y.__u").as("node_b"))
@@ -267,7 +258,7 @@ object GraphStats {
     * community equality and unions both endpoints, so a<b order is
     * irrelevant). The operator then feeds all three consumers (m,
     * intra, degree mass) straight from the caller's frame instead of
-    * paying a full least/greatest + distinct shuffle + persist to
+    * paying a full least/greatest + distinct shuffle + share to
     * re-derive what the caller (e.g. a checkpointed edge build)
     * already guarantees (r16, guide §2.4).
     */
@@ -278,12 +269,7 @@ object GraphStats {
     val e =
       if (edgesCanonical)
         edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges.select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .persist()
+      else Materialize.share(canonicalEdges(edges, srcCol, dstCol))
     val comm = labels.select(col(nodeCol).as("__node"),
       coalesce(col(labelCol).cast("string"),
         concat(lit("u"), col(nodeCol).cast("string"))).as("__c"))
@@ -317,8 +303,6 @@ object GraphStats {
           col("__d") * col("__d")).as("__q"))
       .agg(count(lit(1)).cast("long").as("n_communities"),
         sum(col("__q")).cast("long").as("q_num"))
-    // e stays persisted through execution (it feeds m, intra and the
-    // degree scan) — the triangleStats/linkScores lifetime convention
     agg.crossJoin(broadcast(m))
       .select(col("n_communities"), col("__m").as("n_edges"),
         col("q_num"),

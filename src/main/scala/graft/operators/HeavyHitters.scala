@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Exact heavy hitters without a full-vocabulary shuffle.
   *
   * `q_heavy_hitters` (X9) finds top-k by grouping the entire
@@ -86,14 +88,15 @@ object HeavyHitters {
     * partition); completeness requires minFraction > 1/(k+1).
     */
   def exactByFraction(items: DataFrame, itemCol: String,
-      minFraction: Double, k: Int = 1023): DataFrame = {
+      minFraction: Double, k: Int = 1023): DataFrame =
+      Materialize.scoped { keep =>
     require(minFraction > 1.0 / (k + 1),
       s"minFraction=$minFraction must exceed 1/(k+1)=${1.0 / (k + 1)} " +
         "or items absent from every summary could still qualify " +
         "(raise k or the fraction)")
     val spark = items.sparkSession
     import spark.implicits._
-    val sums = summaries(items, itemCol, k).cache()
+    val sums = keep(summaries(items, itemCol, k))
     val n = sums.filter($"item".isNull)
       .agg(coalesce(sum($"est"), lit(0L))).as[Long].head()
     val minCount = math.ceil(minFraction * n).toLong
@@ -106,7 +109,6 @@ object HeavyHitters {
       .groupBy($"item").agg(sum($"est").as("lb"))
       .filter($"lb" >= minCount - slack)
       .select($"item").as[String].collect().toSeq
-    sums.unpersist(blocking = false)
     // compare as string on both passes (pass 1 casts into the
     // sketch), so non-string item columns recount consistently
     items

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** X149/X152 — two-sample hypothesis tests and inter-rater
   * reliability: the release-gate statistics a data pipeline runs
   * before swapping a corpus, filter, or labeling run (did the new
@@ -2389,7 +2391,7 @@ object Hypothesis {
           .as("c"),
         sum(when(!exposed && !outcome, 1L).otherwise(0L)).cast("long")
           .as("d"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val n = (col("a") + col("b") + col("c") + col("d")).cast("double")
     val ah = col("a") + lit(0.5); val bh = col("b") + lit(0.5)
     val ch = col("c") + lit(0.5); val dh = col("d") + lit(0.5)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Inverted-index text statistics: term/document frequencies, tf-idf
   * weighting, sparse cosine similarity join, and distinctive-term
   * extraction — the retrieval-side text operators of a training-data
@@ -111,7 +113,7 @@ object InvertedIndex {
     val kept = tc
       .join(docFrequencies(tc).filter(col("df") <= dfCap).select(col("term")),
         "term")
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val norms = kept.groupBy(col(docCol))
       .agg(sum(col("tf") * col("tf")).as("n2"))
     val dots = kept.as("a")
@@ -146,7 +148,7 @@ object InvertedIndex {
     val kept = tc
       .join(docFrequencies(tc).filter(col("df") <= dfCap).select(col("term")),
         "term")
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val probe = kept.filter(col(docCol) === probeId)
       .select(col("term"), col("tf").as("qtf"))
     val norms = kept.groupBy(col(docCol))
@@ -180,7 +182,7 @@ object InvertedIndex {
     val kept = tc
       .join(docFrequencies(tc).filter(col("df") <= dfCap).select(col("term")),
         "term")
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val probes = kept.filter(col(docCol).isin(probeIds: _*))
       .select(col(docCol).as("probe_id"), col("term"), col("tf").as("qtf"))
     val norms = kept.groupBy(col(docCol))
@@ -243,7 +245,7 @@ object InvertedIndex {
     // never fires and the upstream tokenize+explode+count subtree
     // built twice (the tfCosinePairs lesson, guide §2.4). One
     // checkpoint of the skinny (doc, term, tf) frame feeds both.
-    val tc1 = tc.localCheckpoint()
+    val tc1 = Materialize.cut(tc)
     val global = tc1.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
     tc1.join(global, "term")
       .groupBy(col(docCol))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** PageRank over an edge list in PURE INTEGER arithmetic — the
   * web-graph curation signal (Common Crawl ranks its frontier with
   * exactly this family; a training-data pipeline uses the rank as a
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
   * NARROW (src, dst) edge list (broadcast under `broadcastNodeLimit`
   * nodes, shuffle join above it) and runs one groupBy(dst)
   * partial-agg shuffle of skinny (dst, share) rows — the |E| rows
-  * themselves never move. Lineage is truncated with an eager
-  * localCheckpoint per iteration (the [[Dedup.resolveClusters]]
+  * themselves never move. Lineage is truncated with a
+  * `Materialize.cut` per iteration (the [[Dedup.resolveClusters]]
   * pattern) — 10 iterations over 100 TB of edges never builds a
   * 10-deep plan. Driver state is two longs (n, base).
   *
@@ -49,14 +51,14 @@ object PageRank {
     *
     * Iteration shape (measured fastest of four layouts at sf0.1):
     * the |V|-row share table (ranks ⋈ degrees, both skinny) is
-    * explicitly BROADCAST into the persisted NARROW (src, dst) edge
+    * explicitly BROADCAST into the kept NARROW (src, dst) edge
     * table — AQE cannot pick the broadcast itself because a
     * checkpointed side has no stats — then one map-side-combined
     * groupBy(dst) shuffle of skinny pairs. The |E| rows never move.
     * Past `broadcastNodeLimit` nodes the share join degrades to a
-    * plain shuffle join against the cached edge partitioning (a
-    * billion-node share table must not be collected). An eager
-    * localCheckpoint per iteration truncates lineage (the
+    * plain shuffle join against the kept edge partitioning (a
+    * billion-node share table must not be collected). A
+    * `Materialize.cut` per iteration truncates lineage (the
     * [[Dedup.resolveClusters]] pattern); spacing checkpoints out
     * measured SLOWER — the deep tail re-executes broadcast subplans.
     */
@@ -64,23 +66,24 @@ object PageRank {
       iters: Int, scale: Long = 1000000000L, dampNum: Long = 17L,
       dampDen: Long = 20L, requireNoDangling: Boolean = true,
       symmetric: Boolean = false,
-      broadcastNodeLimit: Long = 10000000L): DataFrame = {
+      broadcastNodeLimit: Long = 10000000L): DataFrame =
+      Materialize.scoped { keep =>
     require(iters >= 0 && iters <= 100, s"iters=$iters out of [0,100]")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < damping < 1")
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .persist()
-    val deg = e.groupBy($"__src").agg(count(lit(1)).as("__deg")).persist()
+    val e = keep(edges.select(col(srcCol).as("__src"),
+      col(dstCol).as("__dst")))
+    val deg = keep(e.groupBy($"__src").agg(count(lit(1)).as("__deg")))
 
     // symmetric + no dangling ⇒ src set = node set; otherwise build
     // the full node set and check for silent mass sinks
     val nodes =
       if (symmetric) deg.select($"__src".as("node"))
       else {
-        val ns = e.select($"__src".as("node"))
-          .union(e.select($"__dst".as("node"))).distinct().persist()
+        val ns = keep(e.select($"__src".as("node"))
+          .union(e.select($"__dst".as("node"))).distinct())
         if (requireNoDangling) {
           val danglingCount = ns
             .join(deg.select($"__src".as("node")), Seq("node"), "left_anti")
@@ -105,9 +108,9 @@ object PageRank {
     // per EDGE instead of per node: the identical integer division
     // on the identical operands, so every partial sum is unchanged.
     val degSide0 = if (bcastShares) broadcast(deg) else deg
-    val e2 = e.join(degSide0, Seq("__src")).persist()
-    var ranks = nodes.select($"node", lit(scale / n).as("rank"))
-      .localCheckpoint(true)
+    val e2 = keep(e.join(degSide0, Seq("__src")))
+    var ranks =
+      Materialize.cut(nodes.select($"node", lit(scale / n).as("rank")))
     for (_ <- 1 to iters) {
       val rSide = if (bcastShares) broadcast(ranks) else ranks
       val sums = e2.join(rSide, $"node" === $"__src")
@@ -124,12 +127,8 @@ object PageRank {
               (lit(base) +
                 expr(s"($dampNum * coalesce(__s, 0L)) div $dampDen"))
                 .as("rank"))
-      ranks = next.localCheckpoint(true)
+      ranks = Materialize.cut(next)
     }
-    if (!symmetric) nodes.unpersist()
-    e.unpersist()
-    e2.unpersist()
-    deg.unpersist()
     ranks
   }
 
@@ -150,21 +149,22 @@ object PageRank {
     *
     * Scale shape: [[run]]'s Pregel layout — per iteration one
     * broadcast-or-shuffle join of the |V|-row label table into the
-    * persisted narrow edge list plus one (node, label) partial agg;
-    * localCheckpoint truncates lineage. Driver state is nothing.
+    * kept narrow edge list plus one (node, label) partial agg;
+    * `Materialize.cut` truncates lineage. Driver state is nothing.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedNodeCol: String, seedLabelCol: String,
-      iters: Int, broadcastNodeLimit: Long = 10000000L): DataFrame = {
+      iters: Int, broadcastNodeLimit: Long = 10000000L): DataFrame =
+      Materialize.scoped { keep =>
     require(iters >= 0 && iters <= 100, s"iters=$iters out of [0,100]")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .persist()
-    val nodes = e.select($"__src".as("node"))
-      .union(e.select($"__dst".as("node"))).distinct().persist()
-    val sd = seeds.select(col(seedNodeCol).as("node"),
-      col(seedLabelCol).cast("long").as("__seed")).persist()
+    val e = keep(edges.select(col(srcCol).as("__src"),
+      col(dstCol).as("__dst")))
+    val nodes = keep(e.select($"__src".as("node"))
+      .union(e.select($"__dst".as("node"))).distinct())
+    val sd = keep(seeds.select(col(seedNodeCol).as("node"),
+      col(seedLabelCol).cast("long").as("__seed")))
     val n = nodes.count()
     require(n > 0, "empty graph")
     val bcast = n <= broadcastNodeLimit
@@ -172,9 +172,9 @@ object PageRank {
     // rebuilt (join + broadcast build) inside every iteration; hoist
     // it into one checkpointed |V|-row frame that doubles as the
     // round-0 labels (guide §2.4). Clamp/vote semantics unchanged.
-    val nodeSeed = nodes
+    val nodeSeed = Materialize.cut(nodes
       .join(if (bcast) broadcast(sd) else sd, Seq("node"), "left")
-      .select($"node", $"__seed").localCheckpoint(true)
+      .select($"node", $"__seed"))
     var labels = nodeSeed.select($"node", $"__seed".as("lab"))
     for (_ <- 1 to iters) {
       val labeled = labels.filter($"lab".isNotNull)
@@ -189,9 +189,8 @@ object PageRank {
       val next = nodeSeed
         .join(votes, Seq("node"), "left")
         .select($"node", coalesce($"__seed", $"__vote").as("lab"))
-      labels = next.localCheckpoint(true)
+      labels = Materialize.cut(next)
     }
-    e.unpersist(); nodes.unpersist(); sd.unpersist()
     labels.select($"node", $"lab".as("label"))
   }
 
@@ -206,24 +205,25 @@ object PageRank {
     * scores are longs; each half-step is one equi-join + sum, then an
     * in-plan renormalization `(score·scale) div total` (decimal
     * product — indeg·scale² exceeds a long) against a one-row
-    * broadcast total; localCheckpoint per iteration truncates
+    * broadcast total; a `Materialize.cut` per iteration truncates
     * lineage. Nodes with no in-edges hold authority 0, no out-edges
     * hub 0; the oracle replays the identical integer chain unrolled.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000L,
-      broadcastNodeLimit: Long = 10000000L): DataFrame = {
+      broadcastNodeLimit: Long = 10000000L): DataFrame =
+      Materialize.scoped { keep =>
     require(iters >= 1 && iters <= 100, s"iters=$iters out of [1,100]")
     val spark = edges.sparkSession
     import spark.implicits._
     val dec = "decimal(38,0)"
-    val e = edges.select(col(srcCol).as("__src"),
-      col(dstCol).as("__dst")).distinct().persist()
+    val e = keep(edges.select(col(srcCol).as("__src"),
+      col(dstCol).as("__dst")).distinct())
     require(e.limit(1).count() > 0, "empty graph")
-    val nodes = e.select($"__src".as("node"))
-      .union(e.select($"__dst".as("node"))).distinct().persist()
+    val nodes = keep(e.select($"__src".as("node"))
+      .union(e.select($"__dst".as("node"))).distinct())
     // r16 ([[run]]'s r15 lesson, guide §3.1): the score table is
-    // |V|-row and skinny — broadcast it into the persisted |E| edge
+    // |V|-row and skinny — broadcast it into the kept |E| edge
     // list so the edges never shuffle (each half-step was paying a
     // full |E| exchange; AQE cannot pick the broadcast itself because
     // a checkpointed side has no stats). Past `broadcastNodeLimit`
@@ -260,8 +260,7 @@ object PageRank {
         s"cast((cast($c as $dec) * ${scale}L) div cast(${tot}L as $dec) " +
           s"as bigint)").as(c))
 
-    var hubs = nodes.select($"node", lit(scale).as("hub"))
-      .localCheckpoint(true)
+    var hubs = Materialize.cut(nodes.select($"node", lit(scale).as("hub")))
     var auths: DataFrame = null
     // r15 (guide §2.4): checkpoint the RAW half-step scores and keep
     // the renormalization LAZY over the checkpointed frame. The r14
@@ -281,7 +280,7 @@ object PageRank {
         Seq("node"), "left")
         .select($"node", coalesce($"__a", lit(0L)).as("auth"))
         .observe(aObs, sum($"auth").as("__tot"))
-        .localCheckpoint(true)
+        .transform(Materialize.cut)
       auths = renormLit(aRaw, "auth", totOf(aObs, aRaw, "auth"))
       val hObs = org.apache.spark.sql.Observation()
       val hRaw = nodes.join(
@@ -291,12 +290,10 @@ object PageRank {
         Seq("node"), "left")
         .select($"node", coalesce($"__h", lit(0L)).as("hub"))
         .observe(hObs, sum($"hub").as("__tot"))
-        .localCheckpoint(true)
+        .transform(Materialize.cut)
       hubs = renormLit(hRaw, "hub", totOf(hObs, hRaw, "hub"))
     }
-    val out = hubs.join(auths, Seq("node"))
+    hubs.join(auths, Seq("node"))
       .select($"node", $"hub", $"auth".as("authority"))
-    e.unpersist(); nodes.unpersist()
-    out
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** X202 — EXACT set-similarity self-join with prefix filtering (the
   * AllPairs/PPJoin family, Bayardo et al. 2007 / Xiao et al. 2008
   * shape): find every doc pair whose shingle-set Jaccard ≥ t,
@@ -34,8 +36,8 @@ object SetJoin {
     // the shingle table feeds FOUR subtrees (df, prefix ranking, and
     // both verification sides) — materialize once instead of paying
     // the tokenize+window scan four times
-    val sh = Dedup.explodedShingles(docs, idCol, textCol, shingleK)
-      .persist()
+    val sh = Materialize.share(
+      Dedup.explodedShingles(docs, idCol, textCol, shingleK))
     val df = sh.groupBy(col("g")).agg(count(lit(1)).as("__df"))
     val lens = sh.groupBy(col(idCol)).agg(count(lit(1)).as("__len"))
     val wd = Window.partitionBy(col(idCol))

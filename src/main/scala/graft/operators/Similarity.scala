@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`array<float>`) — north star X2 (SURVEY.md §2.10).
   *
@@ -733,7 +735,7 @@ object Similarity {
       .withColumn("__n", l2norm(col("__e")))
       .withColumn("blk", pmod(xxhash64(col("vid")), lit(numBlocks.toLong))
         .cast("int"))
-    val v = if (materializeVecs) v0.localCheckpoint(true) else v0
+    val v = if (materializeVecs) Materialize.cut(v0) else v0
     val a = v.select(col("__c"), col("blk").as("ba"), col("vid").as("v1"),
       col("__e").as("e1"), col("__n").as("n1"))
     val b = v.select(col("__c"), col("blk").as("bb"), col("vid").as("v2"),
@@ -1258,7 +1260,7 @@ object Similarity {
     * candidate's marginal gain Σ max(cos−cov, 0) simultaneously
     * (candidate vectors ride the plan as literals — the semDedupAuto
     * zero-exchange trick, no join), one coverage-column update +
-    * localCheckpoint (the PageRank lineage-truncation shape). Driver
+    * `Materialize.cut` (the PageRank lineage-truncation shape). Driver
     * state is candidatesPerRound·dim doubles + the k picks — bounded
     * and loud. Total cost O(k·c·n) dots, embarrassingly parallel.
     */
@@ -1282,7 +1284,7 @@ object Similarity {
       .withColumn("__n2", dotL(col("__q"), col("__q")))
       .filter(col("__n2") > 0L)
       .withColumn("__cov", lit(0L))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     def cosqTo(vec: Seq[Long], n2c: Long): Column =
       round(lit(1e9) * dotL(col("__q"), typedlit(vec)).cast("double") /
         (sqrt(col("__n2").cast("double")) *
@@ -1327,7 +1329,7 @@ object Similarity {
         val (_, bv, bn2) = candVecs.find(_._1 == bestId).get
         state = state.withColumn("__cov",
             greatest(col("__cov"), cosqTo(bv, bn2)))
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         rnd += 1
       }
     }
@@ -1472,7 +1474,7 @@ object Similarity {
     val base = vecs.select(col(idCol).as("__id"),
         transform(toDouble(col(vecCol)),
           x => round(x * 1e6, 0).cast("long")).as("__q"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val d = base.select(size(col("__q"))).head().getInt(0)
     val nPts = base.count()
     // sign-aware round-half-away integer division — BigInt `/`

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Time-series resampling: bucket an event stream to a fixed grain,
   * materialize the missing buckets, and forward-fill the last
   * observation — pandas `resample(...).last().ffill()` semantics,
@@ -899,7 +901,7 @@ object TimeSeries {
     // fully inlined form blows past Janino's method limit at lag 5
     var cur = one.select((col("n") +: rCols): _*)
       .withColumn("__f1_1", col("__r1"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     for (k <- 2 to maxLag) {
       val num = (1 until k).foldLeft(col(s"__r$k")) { (acc, j) =>
         acc - col(s"__f${k - 1}_$j") * col(s"__r${k - j}")
@@ -912,7 +914,7 @@ object TimeSeries {
       cur = (1 until k).foldLeft(withDiag) { (d, j) =>
         d.withColumn(s"__f${k}_$j", quant(col(s"__f${k - 1}_$j") -
           col(s"__f${k}_$k") * col(s"__f${k - 1}_${k - j}")))
-      }.localCheckpoint(true)
+      }.transform(Materialize.cut)
     }
     val rows = (1 to maxLag).map(k => struct(lit(k.toLong).as("lag"),
       round(col(s"__r$k"), 6).as("acf"),
@@ -1437,7 +1439,7 @@ object TimeSeries {
     val idx = series.select(col(valueCol).cast("long").as("__v"),
         col(orderCol).as("__o"))
       .withColumn("__t", row_number().over(wOrd).cast("long"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val perSize = sizes.map { sz =>
       val blocked = idx
         .withColumn("__b", expr(s"(__t - 1) div $sz"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** X188 — winnowing document fingerprints (the MOSS local
   * fingerprinting algorithm, Schleimer-Wilkerson-Aiken 2003 shape):
   * normalize → character k-grams → md5 hashes → per window of w
@@ -93,9 +95,8 @@ object Winnow {
     require(minShared >= 1, s"bad minShared $minShared")
     // the fingerprint table feeds the df valve AND both join sides —
     // materialize once instead of re-running the k-gram window scan
-    val fp = fingerprintRows(docs, idCol, textCol, k, w)
-      .select(col(idCol), col("h")).distinct()
-      .persist()
+    val fp = Materialize.share(fingerprintRows(docs, idCol, textCol, k, w)
+      .select(col(idCol), col("h")).distinct())
     val df = fp.groupBy(col("h")).agg(count(lit(1)).as("__m"))
       .filter(col("__m") <= maxDf)
     val keep = fp.join(df.select(col("h")), Seq("h"))
@@ -125,7 +126,7 @@ object Winnow {
   def spanAnchors(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 5, w: Int = 4, maxDf: Int = 20, minShared: Int = 3)
       : DataFrame = {
-    val fp = fingerprintRows(docs, idCol, textCol, k, w).persist()
+    val fp = Materialize.share(fingerprintRows(docs, idCol, textCol, k, w))
     val keyed = fp.select(col(idCol), col("h")).distinct()
     val hdf = keyed.groupBy(col("h")).agg(count(lit(1)).as("__m"))
       .filter(col("__m") <= maxDf).select(col("h"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.{CorpusOps, InvertedIndex}
 import graft.queries.QueryDef.table
 
@@ -13,15 +14,15 @@ import graft.queries.QueryDef.table
   */
 object CorpusStatsQueries {
 
-  /** Shared bigram term-count subtree — cached so the CacheManager
+  /** Bigram term-count subtree, shared so the CacheManager
     * unifies it across the queries below when they run in one session
     * (same analyzed plan ⇒ same cache entry, as with the dedup
     * shingle subtree).
     */
   private def bigramCounts(spark: org.apache.spark.sql.SparkSession,
       dir: String) =
-    InvertedIndex.termCounts(
-      table(spark, dir, "documents"), "doc_id", "text", n = 2).cache()
+    Materialize.share(InvertedIndex.termCounts(
+      table(spark, dir, "documents"), "doc_id", "text", n = 2))
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.{Cms, CorpusOps, PageRank, Privacy}
 import QueryDef.table
 
@@ -446,7 +447,7 @@ object CurationQueries {
           .select(($"o_custkey" * 2).as("src"),
             ($"l_suppkey" * 2 + 1).as("dst"))
           .distinct()
-          .localCheckpoint(true) // sym + seeds reuse one edge build
+          .transform(Materialize.cut) // sym + seeds reuse one edge build
         val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
         val seeds = e.select($"src".as("node")).distinct()
           .filter(expr("(node div 2) % 7") === 0)
@@ -513,7 +514,7 @@ object CurationQueries {
           .select(($"o_custkey" * 2).as("src"),
             ($"l_suppkey" * 2 + 1).as("dst"))
           .distinct()
-          .localCheckpoint(true)
+          .transform(Materialize.cut)
         val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
         val seeds = e.select($"src".as("node")).distinct()
           .filter(expr("(node div 2) % 7") === 0)

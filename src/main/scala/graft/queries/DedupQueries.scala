@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.Dedup
 import graft.queries.QueryDef.table
 
@@ -39,7 +40,7 @@ object DedupQueries {
     * would ship and the numbers the oracle certifies come from one
     * DAG by construction.
     *
-    * Stage boundaries MATERIALIZE (localCheckpoint): each survivor
+    * Stage boundaries are cut (`Materialize.cut`): each survivor
     * frame feeds ≥2 downstream branches (the shingle self-join +
     * the anti-join; temperatureMix reads its input twice for sizes
     * + join), so an unmaterialized DAG re-runs the clean stage ~6×.
@@ -57,7 +58,7 @@ object DedupQueries {
       minTokens = 25, minQuality = 0.5)
     val s1 = docs.join(
         cleaned.filter($"kept").select($"doc_id"), Seq("doc_id"))
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val pairs = Dedup.jaccardPairsExact(
       s1.select($"doc_id",
         Dedup.hashedShingles($"text", ShingleK).as("shingles")),
@@ -67,7 +68,7 @@ object DedupQueries {
         "doc_id", "score")
       .filter(!$"is_kept").select($"doc_id")
     val s2 = s1.join(dropped, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val bench = docs.filter(
       $"doc_id" % CorpusPrepQueries.BenchMod === 0)
     val cands = s2.filter(
@@ -77,7 +78,7 @@ object DedupQueries {
         CorpusPrepQueries.ContamThreshold)
       .filter($"flagged").select($"doc_id")
     val s3 = cands.join(flagged, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Materialize.cut)
     val s4 = CorpusOps.temperatureMix(s3, "doc_id", "source",
       alpha = 0.5,
       targetFraction = CorpusPrepQueries.TempTargetFraction,
@@ -86,15 +87,14 @@ object DedupQueries {
       CorpusPrepQueries.PackSeqLen)
   }
 
-  /** Cached: the scan+shingle subtree is shared by all four dedup
+  /** Shared: the scan+shingle subtree is read by all four dedup
     * queries (Spark's CacheManager matches by analyzed plan, so each
     * query's fresh build of this DataFrame hits the same cache).
     */
   private def shingled(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    table(spark, dir, "documents")
+    Materialize.share(table(spark, dir, "documents")
       .select(col("doc_id"),
-        Dedup.hashedShingles(col("text"), ShingleK).as("shingles"))
-      .cache()
+        Dedup.hashedShingles(col("text"), ShingleK).as("shingles")))
 
   /** DuckDB expression mirroring Dedup.shingles/tokens. */
   private val shingleSql = {
@@ -390,7 +390,7 @@ object DedupQueries {
       "X1 MinHash(64)+LSH(16x4) near-dup with exact verify")(
       (spark, dir) => {
         import spark.implicits._
-        val docs = shingled(spark, dir).cache()
+        val docs = shingled(spark, dir)
         val exploded = docs.select($"doc_id", explode($"shingles").as("g"))
         val sigs = Dedup.minhashSignature(exploded, "doc_id", "g", NumHashes)
         val cand = Dedup.candidatePairs(
@@ -424,7 +424,7 @@ object DedupQueries {
       "X1g incremental near-dup: new batch vs existing corpus")(
       (spark, dir) => {
         import spark.implicits._
-        val docs = shingled(spark, dir).cache()
+        val docs = shingled(spark, dir)
         Dedup.incrementalNearDupes(
             docs.filter($"doc_id" % 2 === 1),
             docs.filter($"doc_id" % 2 === 0),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.{Hypothesis, RankEval, TimeSeries}
 import graft.queries.QueryDef.{events, table}
 
@@ -1870,15 +1871,14 @@ object InferenceQueries {
       "X407 3-hop harmonic centrality per supplier, bipartite graph")(
       (spark, dir) => {
         import spark.implicits._
-        val adj = table(spark, dir, "orders")
+        val adj = Materialize.share(table(spark, dir, "orders")
           .join(table(spark, dir, "lineitem")
               .filter($"l_shipdate" >= lit("1997-01-01")
                 .cast("timestamp") &&
                 $"l_shipdate" < lit("1997-04-01").cast("timestamp")),
             $"l_orderkey" === $"o_orderkey")
           .select($"l_suppkey".as("s"), $"o_custkey".as("c"))
-          .distinct()
-          .persist()
+          .distinct())
         val n1 = adj.groupBy($"s")
           .agg(count(lit(1)).cast("long").as("n1"))
         val d2 = adj.as("a").join(adj.as("b"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.{Apportion, Basket, Calibrate, Cartography,
   Compaction, CorpusOps, Dedup, DistStats, FeatureHash, Funnel,
   GraphStats, Hypothesis, Kll, Kmv, Linkage, Privacy, Quantiles,
@@ -198,7 +199,7 @@ object MiningQueries {
           // q_tokenize control) — kept for the 100 TB shape, where
           // lineitem-scale rebuilds dwarf an aggregate checkpoint
           // (guide §2.4).
-          .localCheckpoint()
+          .transform(Materialize.cut)
         val wr = Window.partitionBy($"n_name")
           .orderBy($"r".desc, $"l_partkey")
         val wq = Window.partitionBy($"n_name")

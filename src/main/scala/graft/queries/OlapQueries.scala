@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.queries.QueryDef.table
 
 /** Table-stakes OLAP operators beyond the reference surface — pivot,
@@ -729,19 +730,16 @@ object OlapQueries {
                  AS p90_cents
       """.trim),
       "exact median/p90 of order totals by domain bisection")(
-      (spark, dir) => {
+      (spark, dir) => Materialize.scoped { keep =>
         import spark.implicits._
         import graft.operators.Quantiles
-        // cache the skinny value column: every bisection pass counts
-        // it (at 100 TB this persist is the same one the production
-        // pattern uses — the search never re-reads storage)
-        val vals = table(spark, dir, "orders")
-          .select(round($"o_totalprice" * 100).cast("long").as("v"))
-          .cache()
+        // keep the skinny value column: every bisection pass counts
+        // it, so the search never re-reads storage
+        val vals = keep(table(spark, dir, "orders")
+          .select(round($"o_totalprice" * 100).cast("long").as("v")))
         val n = vals.count()
         val median = Quantiles.exactQuantile(vals, "v", 0.5)
         val p90 = Quantiles.exactQuantile(vals, "v", 0.9)
-        vals.unpersist(blocking = false)
         Seq((n, median, p90)).toDF("n", "median_cents", "p90_cents")
       }),
 

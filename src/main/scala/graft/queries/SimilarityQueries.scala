@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.Similarity
 import graft.queries.QueryDef.table
 
@@ -542,8 +543,8 @@ object SimilarityQueries {
         import graft.operators.{HybridSearch, InvertedIndex}
         // same analyzed plan as the CorpusStats bigram subtree, so the
         // CacheManager shares the cache entry when suites run together
-        val tc = InvertedIndex.termCounts(
-          table(spark, dir, "documents"), "doc_id", "text", n = 2).cache()
+        val tc = Materialize.share(InvertedIndex.termCounts(
+          table(spark, dir, "documents"), "doc_id", "text", n = 2))
         val lex = InvertedIndex.searchSimilar(tc, "doc_id", probeId = 0L,
             k = 20, dfCap = 100)
           .withColumn("rank",

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.BloomStore
 
 /** Streaming face of the X156 Bloom store: the CONSTANT-state ingest
@@ -41,8 +42,8 @@ object StreamingBloom {
           "key", valueCol, bits, hashes, salt)
         .select(col("value").as(valueCol),
           col("might_contain").as("might_be_dup"))
-      val out = batch.join(tagged, Seq(valueCol))
-        .localCheckpoint(true) // materialize BEFORE mutating state
+      // materialize BEFORE mutating state
+      val out = Materialize.cut(batch.join(tagged, Seq(valueCol)))
       fold(BloomStore.build(batch.select(lit("s").as("key"), col(valueCol)),
           "key", valueCol, bits, hashes, salt))(r =>
         Seq(r.getAs[Long]("word_idx").toInt -> r.getAs[Long]("bits")))

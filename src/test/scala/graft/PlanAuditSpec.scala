@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits (the "is this the plan you'd want" gate):
@@ -90,7 +93,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("minhash signature agg is partial (map-side combine)") {
     // audited on the operator directly: the full q_dedup_minhash
     // query eagerly checkpoints the candidate-pair stage (so its
-    // internal caches can be released — Dedup.materializeThenRelease),
+    // internal caches can be released — Materialize.scoped),
     // which hides the upstream stages behind a Scan ExistingRDD in
     // the final plan string
     import org.apache.spark.sql.functions._
@@ -139,20 +142,36 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"))
   }
 
+  /** Runs `body` and returns the AQE final plan of the one eager
+    * checkpoint it executed — the operator's `Materialize.cut`, whose
+    * result frame shows only a Scan ExistingRDD in its own plan.
+    */
+  private def cutPlan(body: => Unit): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    ListenerDrain(sc)
+    spark.listenerManager.register(listener)
+    try { body; ListenerDrain(sc) }
+    finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one checkpoint, saw ${plans.size}")
+    plans.peek().split("== Initial Plan ==")(0)
+  }
+
   test("jaccardPairsExact: equi joins + partial aggs (pre-checkpoint)") {
-    // audited on the raw (un-checkpointed) frame: the public operator
-    // eagerly checkpoints, which replaces every upstream stage with a
-    // Scan ExistingRDD in the final plan string
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"),
         graft.operators.Dedup.hashedShingles(col("text"), 4).as("shingles"))
-    val (pairs, caches) = graft.operators.Dedup
-      .jaccardPairsExactRaw(docs, "doc_id", 0.5)
-    pairs.collect()
-    val p = pairs.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    caches.foreach(_.unpersist(blocking = false))
+    val p = cutPlan(
+      graft.operators.Dedup.jaccardPairsExact(docs, "doc_id", 0.5))
     assert(!p.contains("CartesianProduct"),
       s"all-pairs crept into prefix join:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"))
@@ -166,12 +185,8 @@ class PlanAuditSpec extends AnyFunSuite {
         explode(graft.operators.Dedup.hashedShingles(col("text"), 4))
           .as("g"))
     val sigs = graft.operators.Dedup.simhash(exploded, "doc_id", "g")
-    val (pairs, cachedSigs) = graft.operators.Dedup
-      .simhashPairsRaw(sigs, "doc_id", maxHamming = 7)
-    pairs.collect()
-    val p = pairs.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    cachedSigs.unpersist(blocking = false)
+    val p = cutPlan(
+      graft.operators.Dedup.simhashPairs(sigs, "doc_id", maxHamming = 7))
     assert(!p.contains("CartesianProduct"),
       s"all-pairs crept into chunk join:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"))
