@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.plans.{DotLong, DotProduct, GramHashExpression, NumToWordsExpression, ShingleHashExpression, SqDistLong}
+import graft.plans.{DotLong, DotProduct, GramHashExpression, MultisetOverlapExpression, NumToWordsExpression, ShingleHashExpression, SqDistLong, TokenNgramsExpression}
 
 /** Engine SQL surface: registers graft-native functions so
   * `spark.sql("SELECT num_to_words(n) ...")` works in any session
@@ -45,5 +45,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "shingle_hash64_all"),
       (children: Seq[Expression]) =>
         GramHashExpression(children(0), children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("token_ngrams"),
+      new ExpressionInfo(classOf[TokenNgramsExpression].getName,
+        "token_ngrams"),
+      (children: Seq[Expression]) =>
+        TokenNgramsExpression(children(0), children(1), children(2))))
+    ext.injectFunction((
+      new FunctionIdentifier("multiset_overlap"),
+      new ExpressionInfo(classOf[MultisetOverlapExpression].getName,
+        "multiset_overlap"),
+      (children: Seq[Expression]) =>
+        MultisetOverlapExpression(children(0), children(1))))
   }
 }

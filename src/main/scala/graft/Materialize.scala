@@ -1,8 +1,12 @@
 package graft
 
-import scala.collection.mutable
+import java.util.concurrent.TimeoutException
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+
+import org.apache.spark.sql.{Column, Dataset, Observation, SparkSession}
 
 /** The one place that decides how a frame is stored and when it is
   * released. Operators and queries never call `localCheckpoint`,
@@ -29,6 +33,22 @@ object Materialize {
     * plan is a scan of the checkpointed blocks.
     */
   def cut[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(true)
+
+  /** [[cut]] that also returns `metric`, a bigint aggregate over the
+    * cut's rows that `observe` gathers during the cut's own job, so
+    * the value costs no second job. Should the metrics not arrive
+    * within 30 s, the same aggregate runs over the cut frame instead.
+    */
+  def cutObserving[T](ds: Dataset[T], metric: Column): (Dataset[T], Long) = {
+    val obs = Observation()
+    val out = cut(ds.observe(obs, metric.as("__m")))
+    val v =
+      try Await.result(obs.future, 30.seconds).getAs[Long]("__m")
+      catch {
+        case _: TimeoutException => out.agg(metric).head().getLong(0)
+      }
+    (out, v)
+  }
 
   /** Handed to a [[scoped]] body: `keep(df)` caches `df` until the
     * scope ends and returns it.

@@ -40,11 +40,10 @@ object Bleu {
   /** All-order (n, g) gram ROWS for both sides of every pair — the
     * shared single-pass feed of [[stats]] and [[selfBleu]]. Gram
     * assembly is the lead-window + codegen concat_ws layout (the
-    * [[Dedup.explodedShingles]] lesson: the interpreted
-    * transform/slice/array_join HOF pass costs ~5× in the scan
-    * stage, re-measured this round — an all-order HOF build pushed
-    * q_bleu from 2.6 s to 4.9 s before this form brought it under
-    * the r14 time). One posexplode + (maxN−1) leads over one window
+    * interpreted transform/slice/array_join HOF pass costs ~5× in the
+    * scan stage: an all-order HOF build pushed q_bleu from 2.6 s to
+    * 4.9 s before this form brought it under the r14 time). One
+    * posexplode + (maxN−1) leads over one window
     * + one bounded posexplode per row; grams are identical strings
     * to the old per-order `grams` (concat_ws == slice + Sep-join).
     *
@@ -54,9 +53,7 @@ object Bleu {
     * __pos values and make the lead() ordering nondeterministic.
     * Every caller ([[stats]]/[[sentenceBleu]]/[[corpusBleu]]/[[chrF]]
     * via the declared queries, [[selfBleu]]'s distinct doc ids) feeds
-    * one row per id; a caller that cannot guarantee uniqueness must
-    * mint a synthetic per-row id first (the
-    * [[Dedup.explodedShingles]] monotonically_increasing_id pattern).
+    * one row per id.
     */
   private[operators] def gramRowsOf(sided: DataFrame, idCol: String,
       sideCol: String, toksCol: String, maxN: Int): DataFrame = {

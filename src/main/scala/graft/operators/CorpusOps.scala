@@ -1673,29 +1673,16 @@ object CorpusOps {
     */
   def sourceOverlap(docs: DataFrame, sourceCol: String, textCol: String,
       k: Int): DataFrame = {
-    // shingle assembly via the lead-window + codegen concat_ws path
-    // (the explodedShingles idiom — the HOF transform/slice/array_join
-    // pass pays the measured ~5× scan tax); the window key is a
-    // synthetic per-row id (shingle SETS don't depend on its values),
-    // carrying source alongside so no join-back is needed.
+    // shingles come from the row-local `token_ngrams` kernel
+    // (Dedup.shingleRun), carrying source alongside.
     // distinct() FIRST, deliberately: the codegen'd hash-distinct
     // shrinks the raw gram stream before anything touches the
     // object-hash collect_set agg (measured: folding the dedup into
     // collect_set itself is ~1.4× slower at sf1 — partial set state
     // over the full stream costs more than the extra exchange saves)
-    val toks = docs
-      .select(col(sourceCol).as("__s"), col(textCol).as("__txt"))
-      .withColumn("__rid", monotonically_increasing_id())
-      .select(col("__rid"), col("__s"),
-        posexplode(Dedup.tokens(col("__txt"))).as(Seq("__pos", "t0")))
-    val w = Window.partitionBy(col("__rid")).orderBy(col("__pos"))
-    val withNext = (1 until k).foldLeft(toks) { (df, i) =>
-      df.withColumn(s"t$i", lead(col("t0"), i).over(w))
-    }
-    val grams = withNext
-      .filter(col(s"t${k - 1}").isNotNull)
-      .select(col("__s"),
-        concat_ws(Dedup.Sep, (0 until k).map(i => col(s"t$i")): _*)
+    val grams = docs
+      .select(col(sourceCol).as("__s"),
+        explode(array_distinct(Dedup.shingleRun(col(textCol), k)))
           .as("__g"))
       .distinct()
     val sizes = grams.groupBy(col("__s")).agg(count(lit(1)).as("__n"))
@@ -3105,31 +3092,14 @@ object CorpusOps {
       textCol: String, m: Int = 100): DataFrame = {
     require(m >= 1, s"bad m $m")
     val dec = "decimal(38,0)"
-    // r16 (guide §1.2 per-task work, the r15 Winnow/minhashSketch
-    // lesson): the old interpreted `transform(sequence, i ->
-    // substring(text, i, 3))` pays an O(i) UTF8String walk per
-    // position — O(len²) per document — plus the interpreted-HOF scan
-    // tax. Trigrams now assemble from a char posexplode + 2 leads +
-    // codegen concat over a per-row window (monotonically_increasing_id
-    // scopes the window only and never escapes: the (source, gram)
-    // count multiset is identical for any row numbering). Grams are
-    // the identical strings for every text of length >= 3; texts
-    // shorter than 3 chars now contribute NO grams, matching the
-    // oracle's generate_series(1, len-2) (the old sequence(1, 0)
-    // descended and emitted junk substrings for them) — re-proved
-    // against the oracle at all three SFs.
-    val chars = docs.select(col(sourceCol).as("__src"),
-        monotonically_increasing_id().as("__rid"),
-        col(textCol).as("__text"))
-      .select(col("__src"), col("__rid"),
-        posexplode(split(col("__text"), "")).as(Seq("__pos", "c0")))
-    val wd = Window.partitionBy(col("__rid")).orderBy(col("__pos"))
-    val grams = chars
-      .withColumn("c1", lead(col("c0"), 1).over(wd))
-      .withColumn("c2", lead(col("c0"), 2).over(wd))
-      .filter(col("c2").isNotNull)
-      .select(col("__src"),
-        concat(col("c0"), col("c1"), col("c2")).as("__g"))
+    // char trigrams from the row-local `token_ngrams` kernel over the
+    // text's characters: O(len) per document, and a text shorter than
+    // 3 chars yields no grams, matching the oracle's
+    // generate_series(1, len-2)
+    val grams = docs
+      .select(col(sourceCol).as("__src"),
+        explode(call_function("token_ngrams", split(col(textCol), ""),
+          lit(3), lit(""))).as("__g"))
       .groupBy(col("__src"), col("__g"))
       .agg(count(lit(1)).as("__c"))
     val basis = grams.groupBy(col("__g"))

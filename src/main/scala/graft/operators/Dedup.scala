@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Materialize
 
@@ -46,28 +47,25 @@ object Dedup {
     array_distinct(when(n < k, array().cast("array<string>")).otherwise(grams))
   }
 
+  /** Every k-word shingle occurrence of a text, in position order, as
+    * a `Sep`-joined string array: one codegen `token_ngrams` call over
+    * the text's lower-cased tokens (empty tokens skipped, like
+    * [[tokens]]).
+    */
+  def shingleRun(text: Column, k: Int): Column =
+    call_function("token_ngrams", split(lower(text), "\\s+"), lit(k),
+      lit(Sep))
+
   /** Distinct k-word STRING shingles as exploded rows (docCol, `g`),
-    * assembled with `lead` window steps + codegen `concat_ws` rather
-    * than the interpreted `transform`/`slice`/`array_join` HOF pass
-    * (the measured ~5× scan-stage tax — see InvertedIndex.termCounts).
-    * Use when a downstream stage needs the shingle STRING itself
-    * (e.g. an engine-portable md5-based hash); [[hashedShingles]]
-    * remains the production representation everywhere else.
+    * one per shingle of each row. Use when a downstream stage needs
+    * the shingle STRING itself (e.g. an engine-portable md5-based
+    * hash); [[hashedShingles]] remains the production representation
+    * everywhere else.
     */
   def explodedShingles(docs: DataFrame, docCol: String, textCol: String,
-      k: Int): DataFrame = {
-    val toks = docs.select(col(docCol),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "t0")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    val withNext = (1 until k).foldLeft(toks) { (df, i) =>
-      df.withColumn(s"t$i", lead(col("t0"), i).over(w))
-    }
-    withNext
-      .filter(col(s"t${k - 1}").isNotNull) // drop incomplete tails
-      .select(col(docCol),
-        concat_ws(Sep, (0 until k).map(i => col(s"t$i")): _*).as("g"))
-      .distinct()
-  }
+      k: Int): DataFrame =
+    docs.select(col(docCol),
+      explode(array_distinct(shingleRun(col(textCol), k))).as("g"))
 
   /** Distinct HASHED k-gram shingles straight from text — the
     * production representation. One native codegen pass
@@ -289,8 +287,8 @@ object Dedup {
     * pathological million-node chain converges within `maxIters`;
     * typical near-dup components (tiny dup clusters) finish in 2–3.
     * Per-round state is one skinny (id, label) table; the loop exits
-    * early on convergence (an isEmpty action per round —
-    * aggregate-only, nothing is collected).
+    * early on convergence, counting the changed labels with `observe`
+    * during the round's own cut (no extra job per round).
     *
     * Output: (doc_id, cluster_id) for every doc that appears in a
     * pair; cluster_id = min doc id reachable. Singletons are
@@ -325,15 +323,14 @@ object Dedup {
             .as("label"))
       // pointer jump: label := min(label, label(label)) — halves the
       // remaining propagation distance every round
-      val updated = stepped.as("x")
+      val (updated, changed) = Materialize.cutObserving(stepped.as("x")
         .join(stepped.select(col("id").as("label"),
           col("label").as("parent")), Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("parent"), col("label")))
-            .as("label"), col("__old"))
-        .transform(Materialize.cut)
-      converged = updated
-        .filter(col("label") =!= col("__old")).isEmpty
+            .as("label"), col("__old")),
+        count(when(col("label") =!= col("__old"), lit(1))))
+      converged = changed == 0L
       labels = updated.select(col("id"), col("label"))
       i += 1
     }
@@ -348,6 +345,58 @@ object Dedup {
         "component diameter exceeds the pointer-jumping budget; " +
         "raise maxIters")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** [[resolveClusters]] for pairs that never cross a grouping key:
+    * `pairs` is (keyCol, d1, d2) with integral ids, and every pair
+    * joins two docs of the same key. Output: (keyCol, doc_id,
+    * cluster_id) for every doc in a pair, cluster_id = the minimum doc
+    * id of its component within the key — the same ids
+    * [[resolveClusters]] gives when every doc belongs to one key.
+    *
+    * One shuffle on the key, then a streaming union-find per key
+    * group: the pairs are never collected, and memory is bounded by
+    * the docs of the key group being resolved. No loop, no job at
+    * build time.
+    */
+  def resolveClustersWithin(pairs: DataFrame, keyCol: String)
+      : DataFrame = {
+    val in = pairs.select(col(keyCol), col("d1").cast("long"),
+      col("d2").cast("long"))
+    val schema = StructType(Seq(in.schema.fields(0),
+      StructField("doc_id", LongType, nullable = false),
+      StructField("cluster_id", LongType, nullable = false)))
+    in.repartition(col(keyCol)).sortWithinPartitions(col(keyCol))
+      .mapPartitions(componentsByKey)(Encoders.row(schema))
+  }
+
+  /** Rows (key, d1, d2), contiguous by key → (key, doc, component
+    * min) per key group, one group's union-find in memory at a time.
+    */
+  private def componentsByKey(rows: Iterator[Row]): Iterator[Row] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head.get(0)
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      // path splitting; a root is always its component's minimum id
+      def find(x: Long): Long = {
+        var r = parent.getOrElseUpdate(x, x)
+        var c = x
+        while (r != c) {
+          val g = parent(r)
+          parent(c) = g
+          c = r
+          r = g
+        }
+        r
+      }
+      while (in.hasNext && in.head.get(0) == key) {
+        val r = in.next()
+        val (a, b) = (find(r.getLong(1)), find(r.getLong(2)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+      parent.keys.toArray.iterator.map(id => Row(key, id, find(id)))
+    }
   }
 
   /** Score-based canonical keeper per cluster — production dedup
@@ -627,30 +676,16 @@ object Dedup {
       slots: Int = 32, shingleK: Int = 3, salt: String = "mhs")
       : DataFrame = {
     require(slots >= 1 && slots <= 512, s"bad slots $slots")
-    // r15: shingle strings assemble via the [[explodedShingles]]
-    // lead-window + codegen concat_ws layout instead of the
-    // interpreted transform/slice/array_join HOF (the documented ~5×
-    // scan tax). The window key must be ONE DOCUMENT (shingles never
-    // cross rows), but this operator's key is the STORE key (e.g.
-    // source) shared by many rows — so each input row gets a
-    // synthetic partition id. monotonically_increasing_id is
-    // partitioning-dependent, but it never reaches the output: it
-    // only scopes the window, and the distinct (key, shingle) set is
-    // identical for any row numbering.
-    val rid = docs.select(col(keyCol).as("key"),
-        monotonically_increasing_id().as("__rid"),
-        col(textCol).as("__text"))
-      .select(col("key"), col("__rid"),
-        posexplode(tokens(col("__text"))).as(Seq("__pos", "t0")))
-    val wd0 = Window.partitionBy(col("__rid")).orderBy(col("__pos"))
-    val withNext = (1 until shingleK).foldLeft(rid) { (df, i) =>
-      df.withColumn(s"t$i", lead(col("t0"), i).over(wd0))
-    }
-    val sh = withNext
-      .filter(col(s"t${shingleK - 1}").isNotNull)
-      .select(col("key"),
-        concat_ws(Sep, (0 until shingleK).map(i => col(s"t$i")): _*)
+    // a fixed-count repartition, which AQE never coalesces: the md5
+    // stage below is this operator's CPU and runs one task per
+    // partition. Coalesced by bytes, the compact distinct-gram shuffle
+    // gave it 2 tasks of 4 at sf0.1 (4.7 s against 3.4 s).
+    val sh = docs.select(col(keyCol).as("key"),
+        explode(array_distinct(shingleRun(col(textCol), shingleK)))
           .as("__g"))
+      .repartition(
+        docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("key"), col("__g"))
       .distinct()
     // per-(row, slot) md5 through codegen'd primitives — THREE denser
     // layouts measured SLOWER at sf0.1: a 32-column min aggregate

@@ -234,27 +234,13 @@ object PageRank {
       if (bcastScores) broadcast(df) else df
 
     // r16 (guide §2.4, VERDICT r15 item 2): the L1 total is OBSERVED
-    // during the half-step's own checkpoint job (CollectMetrics rides
-    // the materialization) instead of costing a separate one-row
-    // aggregate job + broadcast build per half-step — one action per
-    // half-step. The total is the identical long sum over the
-    // identical rows (observe is an exact aggregate over every
-    // materialized row); the renormalization becomes a literal
+    // during the half-step's own checkpoint job
+    // (`Materialize.cutObserving`) instead of costing a separate
+    // one-row aggregate job + broadcast build per half-step — one
+    // action per half-step. The total is the identical long sum over
+    // the identical rows; the renormalization becomes a literal
     // projection with the same decimal `div` chain, so every score is
-    // bit-identical. getOrEmpty-with-fallback keeps the operator
-    // correct even if an action path ever stops reporting metrics.
-    def totOf(obs: org.apache.spark.sql.Observation, raw: DataFrame,
-        c: String): Long =
-      try {
-        // the eager checkpoint has already run the job, so the future
-        // is complete and this returns immediately
-        val row = scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "seconds"))
-        row.getAs[Long]("__tot")
-      } catch { case _: java.util.concurrent.TimeoutException =>
-        raw.agg(sum(col(c)).as("__tot")).head.getLong(0)
-      }
-
+    // bit-identical.
     def renormLit(raw: DataFrame, c: String, tot: Long): DataFrame =
       raw.select($"node", expr(
         s"cast((cast($c as $dec) * ${scale}L) div cast(${tot}L as $dec) " +
@@ -272,26 +258,22 @@ object PageRank {
     // same totals, same div — so ranks stay bit-identical to the
     // oracle.
     for (_ <- 1 to iters) {
-      val aObs = org.apache.spark.sql.Observation()
-      val aRaw = nodes.join(
+      val (aRaw, aTot) = Materialize.cutObserving(nodes.join(
         e.join(scoreSide(hubs), $"__src" === $"node")
           .groupBy($"__dst").agg(sum($"hub").as("__a"))
           .select($"__dst".as("node"), $"__a"),
         Seq("node"), "left")
-        .select($"node", coalesce($"__a", lit(0L)).as("auth"))
-        .observe(aObs, sum($"auth").as("__tot"))
-        .transform(Materialize.cut)
-      auths = renormLit(aRaw, "auth", totOf(aObs, aRaw, "auth"))
-      val hObs = org.apache.spark.sql.Observation()
-      val hRaw = nodes.join(
+        .select($"node", coalesce($"__a", lit(0L)).as("auth")),
+        sum($"auth"))
+      auths = renormLit(aRaw, "auth", aTot)
+      val (hRaw, hTot) = Materialize.cutObserving(nodes.join(
         e.join(scoreSide(auths), $"__dst" === $"node")
           .groupBy($"__src").agg(sum($"auth").as("__h"))
           .select($"__src".as("node"), $"__h"),
         Seq("node"), "left")
-        .select($"node", coalesce($"__h", lit(0L)).as("hub"))
-        .observe(hObs, sum($"hub").as("__tot"))
-        .transform(Materialize.cut)
-      hubs = renormLit(hRaw, "hub", totOf(hObs, hRaw, "hub"))
+        .select($"node", coalesce($"__h", lit(0L)).as("hub")),
+        sum($"hub"))
+      hubs = renormLit(hRaw, "hub", hTot)
     }
     hubs.join(auths, Seq("node"))
       .select($"node", $"hub", $"auth".as("authority"))

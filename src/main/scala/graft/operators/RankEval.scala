@@ -667,51 +667,25 @@ object RankEval {
     * (order-strict) and X86's n-gram BLEU — the right score when a
     * generation may legitimately reorder.
     *
-    * Scale shape: exact integer counts, three fixed-shape doubles,
-    * round(6). Empty sides: P NULL when \|pred\| = 0, R NULL when
-    * \|ref\| = 0, F1 NULL unless P + R > 0.
-    *
-    * PRECONDITION: `idCol` must be unique per input row — the overlap
-    * counts group by it (duplicate ids would merge both rows' bags).
-    * Every current caller passes a primary key.
+    * Scale shape: one scan. The overlap is the row-local codegen
+    * kernel `multiset_overlap` (O(|pred| + |ref|) per row), so rows
+    * are scored independently: no exchange, and rows sharing an id
+    * keep their own scores. Exact integer counts, three fixed-shape
+    * doubles, round(6). Empty sides: P NULL when \|pred\| = 0, R NULL
+    * when \|ref\| = 0, F1 NULL unless P + R > 0.
     */
   def tokenF1(pairs: DataFrame, idCol: String, predCol: String,
       refCol: String): DataFrame = {
-    val p = Dedup.tokens(col(predCol))
-    val r = Dedup.tokens(col(refCol))
     // coalesce the ARRAYS (not their sizes): under legacy sizeOfNull
     // size(NULL) is -1, so a NULL side would report n_pred/n_ref=-1
-    val d = pairs.select(col(idCol),
-      coalesce(p, array()).as("__p"), coalesce(r, array()).as("__r"))
-    // r16: the overlap was a per-row interpreted HOF folding over the
-    // prediction's distinct tokens with a full array filter per token
-    // — O(|distinct p|·(|p|+|r|)) per row (the r15 charEntropy
-    // pathology, guide §1.2 per-task work). Both bags now explode
-    // through ONE map-side-combined groupBy on (id, token, side);
-    // Σ least(tf_pred, tf_ref) over the joint counts is the identical
-    // integer (tokens on one side only contribute least(c, 0) = 0,
-    // exactly the terms the old fold skipped or zeroed).
-    val tf = d.select(col(idCol), explode(concat(
-        transform(col("__p"), x =>
-          struct(x.as("t"), lit(1L).as("cp"), lit(0L).as("cr"))),
-        transform(col("__r"), x =>
-          struct(x.as("t"), lit(0L).as("cp"), lit(1L).as("cr")))))
-        .as("__e"))
-      .select(col(idCol), col("__e.t").as("__t"),
-        col("__e.cp").as("__cp"), col("__e.cr").as("__cr"))
-      .groupBy(col(idCol), col("__t"))
-      .agg(sum(col("__cp")).as("__cp"), sum(col("__cr")).as("__cr"))
-    val common = tf.groupBy(col(idCol))
-      .agg(sum(least(col("__cp"), col("__cr"))).as("__common"))
-    val g = d.select(col(idCol),
-      // __p/__r are already null-coalesced to array() upstream;
-      // size(coalesce(..)) keeps the count config-proof vs
-      // legacy.sizeOfNull (size(null) = -1 there) all the same
-      size(coalesce(col("__p"), array())).cast("long").as("n_pred"),
-      size(coalesce(col("__r"), array())).cast("long").as("n_ref"))
-      .join(common, Seq(idCol), "left")
-      .select(col(idCol), col("n_pred"), col("n_ref"),
-        coalesce(col("__common"), lit(0L)).cast("long").as("n_common"))
+    val p = coalesce(Dedup.tokens(col(predCol)), array())
+    val r = coalesce(Dedup.tokens(col(refCol)), array())
+    val g = pairs.select(col(idCol), p.as("__p"), r.as("__r"))
+      .select(col(idCol),
+        size(col("__p")).cast("long").as("n_pred"),
+        size(col("__r")).cast("long").as("n_ref"),
+        call_function("multiset_overlap", col("__p"), col("__r"))
+          .as("n_common"))
     val prec = col("n_common").cast("double") /
       col("n_pred").cast("double")
     val rec = col("n_common").cast("double") /

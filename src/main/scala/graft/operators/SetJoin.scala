@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Materialize
-
 /** X202 — EXACT set-similarity self-join with prefix filtering (the
   * AllPairs/PPJoin family, Bayardo et al. 2007 / Xiao et al. 2008
   * shape): find every doc pair whose shingle-set Jaccard ≥ t,
@@ -33,18 +31,18 @@ object SetJoin {
       shingleK: Int = 3, tNum: Long = 1L, tDen: Long = 2L): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen,
       s"bad threshold $tNum/$tDen")
-    // the shingle table feeds FOUR subtrees (df, prefix ranking, and
-    // both verification sides) — materialize once instead of paying
-    // the tokenize+window scan four times
-    val sh = Materialize.share(
-      Dedup.explodedShingles(docs, idCol, textCol, shingleK))
+    // each consumer re-runs the shingle scan: a narrow codegen
+    // `token_ngrams` pass costs less than caching its output
+    val sets = docs.select(col(idCol),
+      array_distinct(Dedup.shingleRun(col(textCol), shingleK)).as("__set"))
+    val sh = sets.select(col(idCol),
+      size(col("__set")).cast("long").as("__len"),
+      explode(col("__set")).as("g"))
     val df = sh.groupBy(col("g")).agg(count(lit(1)).as("__df"))
-    val lens = sh.groupBy(col(idCol)).agg(count(lit(1)).as("__len"))
     val wd = Window.partitionBy(col(idCol))
       .orderBy(col("__df"), col("g"))
     val ranked = sh.join(df, Seq("g"))
       .withColumn("__rk", row_number().over(wd).cast("long"))
-      .join(lens, Seq(idCol))
       // prefix length len − ⌈t·len⌉ + 1, with the ceiling exact:
       // ⌈(tNum·len)/tDen⌉ = (tNum·len + tDen − 1) div tDen
       .filter(col("__rk") <=
@@ -67,13 +65,11 @@ object SetJoin {
         col("__lb") * tDen >= col("__la") * tNum)
       .select(col("d1"), col("d2"), col("__la"), col("__lb"))
       .distinct()
-    // exact verification on per-doc sorted shingle ARRAYS: one
+    // exact verification on per-doc shingle ARRAYS: one
     // array_intersect per candidate pair (O(la+lb) each) instead of
     // re-exploding candidates against the shingle table — the
     // exploded form shuffles Σ_cands la rows (~50× the pair count)
     // before it can even start counting
-    val sets = sh.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("g"))).as("__set"))
     val inter = cands
       .join(sets.select(col(idCol).as("d1"), col("__set").as("__s1")),
         Seq("d1"))

@@ -667,8 +667,9 @@ object Similarity {
     * hash-blocked and expanded to block pairs exactly as in
     * [[cosinePairsBlocked]] — |clusters|·numBlocks·(numBlocks+1)/2
     * independent tasks, per-task memory one block per side. Norms
-    * are computed once per side before the join; component resolution
-    * is [[Dedup.resolveClusters]]' O(log diameter) pointer jumping.
+    * are computed once per side before the join; components resolve
+    * per cluster ([[Dedup.resolveClustersWithin]]), since no pair
+    * crosses one.
     */
   /** Distributed KMeans ASSIGNMENT — the step that makes [[semDedup]]
     * (and IVF-style indexing) self-contained when no cluster column
@@ -748,19 +749,21 @@ object Similarity {
       .join(broadcast(blockPairs).join(b, "bb"), Seq("__c", "ba", "bb"))
       .filter(col("ba") < col("bb") || col("v1") < col("v2"))
       .filter(dot(col("e1"), col("e2")) / (col("n1") * col("n2")) >= tau)
-      .select(least(col("v1"), col("v2")).as("d1"),
+      .select(col("__c"), least(col("v1"), col("v2")).as("d1"),
         greatest(col("v1"), col("v2")).as("d2"))
-    val comps = Dedup.resolveClusters(pairs)
-      .withColumnRenamed("doc_id", idCol)
-      .withColumnRenamed("cluster_id", "__comp")
-    // readout from the checkpointed v, not vecs: (vid, __c) are
-    // straight projections of (idCol, clusterCol), so values are
-    // identical and the third recompute of the input disappears
-    v.select(col("vid").as(idCol), col("__c").as(clusterCol))
-      .join(comps, Seq(idCol), "left")
-      .select(col(idCol), col(clusterCol),
-        coalesce(col("__comp"), col(idCol)).as("component_id"),
-        (coalesce(col("__comp"), col(idCol)) === col(idCol))
+    // pairs never cross a cluster, so components resolve per cluster
+    val vidType = v.schema("vid").dataType
+    val comps = Dedup.resolveClustersWithin(pairs, "__c")
+      .select(col("__c"), col("doc_id").cast(vidType).as("vid"),
+        col("cluster_id").cast(vidType).as("__comp"))
+    // readout from v, not vecs: (vid, __c) are straight projections
+    // of (idCol, clusterCol), so values are identical and a recompute
+    // of the input disappears when v is cut
+    v.select(col("vid"), col("__c"))
+      .join(comps, Seq("vid", "__c"), "left")
+      .select(col("vid").as(idCol), col("__c").as(clusterCol),
+        coalesce(col("__comp"), col("vid")).as("component_id"),
+        (coalesce(col("__comp"), col("vid")) === col("vid"))
           .as("is_kept"))
   }
 

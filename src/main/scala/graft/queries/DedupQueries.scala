@@ -1061,7 +1061,7 @@ object DedupQueries {
     // pairs concentrate near 32, so ≤7 separates cleanly. The shingle
     // hash here is md5Hash64 (not the production xxhash64 — see
     // Dedup.simhash) precisely so DuckDB can replay signature
-    // construction bit-for-bit: string shingles via the lead-window
+    // construction bit-for-bit: string shingles via the row-local
     // explodedShingles pass, four md5 limbs per shingle, 64 bit-sums,
     // bit_count(xor) pair check. Recall vs exact Jaccard additionally
     // asserted in DedupSpec for both hash choices.

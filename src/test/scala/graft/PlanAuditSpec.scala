@@ -961,11 +961,27 @@ class PlanAuditSpec extends AnyFunSuite {
       }
   }
 
-  test("q_setjoin materializes the shingle table once for its four " +
-    "consumers (InMemoryTableScan present)") {
-    val p = plan("q_setjoin")
-    assert(p.contains("InMemoryTableScan"),
-      s"shingle persist missing from setjoin:\n${p.take(1200)}")
+  test("row-local kernels: no gram window, row-id window or cache in " +
+    "q_setjoin, q_token_f1, q_minhash_sketch, q_source_overlap and " +
+    "q_source_style; q_token_f1 exchanges only for its orderBy") {
+    for (q <- Seq("q_setjoin", "q_token_f1", "q_minhash_sketch",
+        "q_source_overlap", "q_source_style")) {
+      val p = plan(q)
+      assert(!p.contains("InMemoryTableScan"), s"$q caches:\n${p.take(1500)}")
+      assert(!p.contains("lead("), s"$q assembles grams in a window")
+      // q_setjoin's only window is the prefix filter's per-doc rank by
+      // global shingle frequency (once per self-join side), which needs
+      // that frequency joined in first
+      val windows = p.linesIterator.filter(_.contains("Window [")).toList
+      val allowed = (w: String) => q == "q_setjoin" &&
+        w.contains("row_number()") && w.contains("__df")
+      assert(windows.forall(allowed), s"$q windows:\n${windows.mkString("\n")}")
+    }
+    val f1 = plan("q_token_f1")
+    val exchanges = f1.linesIterator.filter(_.contains("Exchange ")).toList
+    assert(exchanges.nonEmpty &&
+      exchanges.forall(_.contains("rangepartitioning(doc_id")),
+      exchanges.mkString("\n"))
   }
 
   test("q_quantile_norm: grid lookup joins broadcast the bounded " +
