@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for the
   * named queries to `plans/<tag>/<name>_<suffix>.txt` — the judge
@@ -15,6 +17,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * smallest SF.
   */
 object ExplainPlans {
+
+  /** (shuffle, broadcast) exchange nodes of a physical plan and its
+    * subqueries, each counted once: the adaptive wrapper and its query
+    * stages are unwrapped, and a reused exchange is not counted again.
+    */
+  def exchangeCounts(plan: SparkPlan): (Int, Int) = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val all = nodes(plan)
+    (all.count(_.isInstanceOf[ShuffleExchangeLike]),
+      all.count(_.isInstanceOf[BroadcastExchangeLike]))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ExplainPlans <suffix> <q1,q2,...>")
     val suffix = args(0)
@@ -33,9 +51,10 @@ object ExplainPlans {
             val txt = df.queryExecution.explainString(mode)
             val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
             java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
-            val exchanges = "(?m)^.*Exchange".r.findAllIn(txt).size
-            System.err.println(f"[explain] $name%-28s exchanges=$exchanges " +
-              s"-> $p")
+            val (shuffles, broadcasts) =
+              exchangeCounts(df.queryExecution.executedPlan)
+            System.err.println(f"[explain] $name%-28s exchanges=$shuffles " +
+              s"broadcasts=$broadcasts -> $p")
           } catch { case e: Throwable =>
             System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
           }

@@ -965,7 +965,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_setjoin, q_token_f1, q_minhash_sketch, q_source_overlap and " +
     "q_source_style; q_token_f1 exchanges only for its orderBy") {
     for (q <- Seq("q_setjoin", "q_token_f1", "q_minhash_sketch",
-        "q_source_overlap", "q_source_style")) {
+        "q_source_overlap", "q_source_style", "q_bleu", "q_chrf")) {
       val p = plan(q)
       assert(!p.contains("InMemoryTableScan"), s"$q caches:\n${p.take(1500)}")
       assert(!p.contains("lead("), s"$q assembles grams in a window")
@@ -977,11 +977,24 @@ class PlanAuditSpec extends AnyFunSuite {
         w.contains("row_number()") && w.contains("__df")
       assert(windows.forall(allowed), s"$q windows:\n${windows.mkString("\n")}")
     }
-    val f1 = plan("q_token_f1")
-    val exchanges = f1.linesIterator.filter(_.contains("Exchange ")).toList
-    assert(exchanges.nonEmpty &&
-      exchanges.forall(_.contains("rangepartitioning(doc_id")),
-      exchanges.mkString("\n"))
+    // the pair scorers are one scan each: only their orderBy shuffles
+    for (q <- Seq("q_token_f1", "q_bleu", "q_chrf")) {
+      val exchanges =
+        plan(q).linesIterator.filter(_.contains("Exchange ")).toList
+      assert(exchanges.nonEmpty &&
+        exchanges.forall(_.contains("rangepartitioning(doc_id")),
+        s"$q:\n${exchanges.mkString("\n")}")
+    }
+  }
+
+  test("ExplainPlans.exchangeCounts counts q_token_f1's one shuffle " +
+    "once, before and after the adaptive plan runs") {
+    val df = SparkEntry.queries("q_token_f1")(spark, dir)
+    assert(ExplainPlans.exchangeCounts(df.queryExecution.executedPlan) ==
+      (1, 0))
+    df.collect()
+    assert(ExplainPlans.exchangeCounts(df.queryExecution.executedPlan) ==
+      (1, 0))
   }
 
   test("q_quantile_norm: grid lookup joins broadcast the bounded " +

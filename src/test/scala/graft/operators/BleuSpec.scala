@@ -149,30 +149,31 @@ class BleuSpec extends AnyFunSuite {
     assert(out.getAs[Double]("chrf") == 1.0)
   }
 
-  test("gramRowsOf (r15 single-pass kernel): all orders, with " +
-      "multiplicity, empty/short arrays safe") {
+  test("sentenceBleu: each p_n numerator is the plain clipped count") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions._
     val texts = Seq("the cat the cat on the mat", "a", "", "x y z w v")
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("id", "text")
     val maxN = 4
-    val got = Bleu.gramRowsOf(
-        df.select($"id", lit(true).as("sd"),
-          Dedup.tokens($"text").as("tk")),
-        "id", "sd", "tk", maxN)
-      .collect().map(r => (r.getLong(0), r.getInt(2), r.getString(3)))
-      .groupBy(_._1).view
-      .mapValues(_.map(x => (x._2, x._3)).sorted.toSeq).toMap
-    texts.zipWithIndex.foreach { case (t, i) =>
-      val w = t.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-      val expect = (for {
-        n <- 1 to maxN
-        j <- 0 to w.length - n
-      } yield (n, w.slice(j, j + n).mkString(Dedup.Sep))).sorted
-      assert(got.getOrElse(i.toLong, Seq.empty) == expect,
-        s"doc $i ('$t')")
+    // every (ref, hyp) pair of the four texts, each scored at 1..maxN
+    val pairs = for (r <- texts; h <- texts) yield (r, h)
+    val got = Bleu.sentenceBleu(
+        pairs.zipWithIndex.map { case ((r, h), i) => (i.toLong, r, h) }
+          .toDF("id", "ref", "hyp"),
+        "id", "ref", "hyp", maxN)
+      .collect().map(r => r.getAs[Long]("id") -> r).toMap
+    def grams(t: String, n: Int): Map[String, Int] =
+      t.split("\\s+").filter(_.nonEmpty).toSeq.sliding(n)
+        .filter(_.size == n).toSeq.groupBy(identity).map {
+          case (g, gs) => g.mkString(Dedup.Sep) -> gs.size }
+    pairs.zipWithIndex.foreach { case ((ref, hyp), i) =>
+      for (n <- 1 to maxN) {
+        val (hg, rg) = (grams(hyp, n), grams(ref, n))
+        val m = hg.map { case (g, c) => math.min(c, rg.getOrElse(g, 0)) }.sum
+        val total = hg.values.sum
+        val expect = if (total > 0) r6(m.toDouble / total) else 0.0
+        assert(got(i.toLong).getAs[Double](s"p_$n") == expect,
+          s"p_$n of hyp '$hyp' vs ref '$ref'")
+      }
     }
   }
 

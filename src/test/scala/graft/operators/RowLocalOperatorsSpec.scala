@@ -11,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkHarness
 
-/** Operators rebuilt on row-local or key-local work: `tokenF1` scores
-  * each row on its own, `resolveClustersWithin` resolves components
-  * per key, and `resolveClusters` spends no job of its own on the
-  * convergence test.
+/** Operators rebuilt on row-local or key-local work: `tokenF1`, BLEU
+  * and chrF score each row on its own, `resolveClustersWithin`
+  * resolves components per key, and `resolveClusters` spends no job of
+  * its own on the convergence test.
   */
 class RowLocalOperatorsSpec extends AnyFunSuite {
   private lazy val spark = SparkHarness.spark
@@ -33,6 +33,27 @@ class RowLocalOperatorsSpec extends AnyFunSuite {
       .sortBy(_.toString)
     assert(together == alone)
     assert(together.map(_.getLong(2)).sorted == Seq(0L, 1L, 2L, 2L))
+    // the same law for the BLEU family; id 2's rows share their grams
+    // crosswise, so a gram stream pooled per id would match them
+    val pairs = Seq((1L, "a b", "a b"), (1L, "c d", "c d"),
+      (2L, "a b", "x y"), (2L, "x y", "a b"))
+    def out(rs: Seq[(Long, String, String)],
+        op: DataFrame => DataFrame) =
+      op(rs.toDF("id", "ref", "hyp")).drop("id").collect().toSeq
+        .map(_.toString)
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        "sentenceBleu" -> (Bleu.sentenceBleu(_, "id", "ref", "hyp", 2)),
+        "chrF" -> (Bleu.chrF(_, "id", "ref", "hyp")))) {
+      val both = out(pairs, op).sorted
+      assert(both.size == pairs.size, s"$name: $both")
+      assert(both == pairs.flatMap(r => out(Seq(r), op)).sorted, name)
+    }
+    val corpus = (rs: Seq[(Long, String, String)]) =>
+      out(rs, Bleu.corpusBleu(_, "id", "ref", "hyp", 1)).head
+    val unique = pairs.zipWithIndex.map { case ((_, r, h), i) =>
+      (i.toLong, r, h) }
+    assert(corpus(pairs) == corpus(unique))
+    assert(corpus(unique) == "[4,8,8,0.5,1.0,0.5]") // p_1 = (2+2+0+0)/8
   }
 
   private def components(df: DataFrame): Map[Long, Long] =
