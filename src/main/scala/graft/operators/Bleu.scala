@@ -28,17 +28,12 @@ import org.apache.spark.sql.functions._
   */
 object Bleu {
 
-  /** Every n-gram occurrence of a token array's non-empty elements,
-    * WITH multiplicity (clipped counts need repeats), joined by `sep`.
-    */
-  private def ngrams(toks: Column, n: Int, sep: String): Column =
-    call_function("token_ngrams", toks, lit(n), lit(sep))
-
   /** Σ_g min(cnt_h(g), cnt_r(g)) over the order-n grams of two token
     * arrays, as one bigint per row.
     */
   private def clipped(h: Column, r: Column, n: Int, sep: String): Column =
-    call_function("multiset_overlap", ngrams(h, n, sep), ngrams(r, n, sep))
+    call_function("multiset_overlap", Dedup.ngrams(h, n, sep),
+      Dedup.ngrams(r, n, sep))
 
   private def requireOrder(maxN: Int): Unit =
     require(maxN >= 1 && maxN <= 9, s"need 1 <= maxN <= 9, got $maxN")
@@ -159,6 +154,15 @@ object Bleu {
     * closest-ref-length rule: the OTHER doc length nearest hyp_len,
     * ties to the shorter.
     *
+    * Ids: an id is one document. Rows that share an id pool their
+    * grams into one (id, gram) count and are clipped only against
+    * other ids; each such row reports that pooled match count over its
+    * own hyp_len. Rows `(1,"a b")`, `(1,"a b c d")`, `(2,"x y")` at
+    * maxN = 1 all score p_1 = 0 (renumbered 1, 2, 3 they score 1.0,
+    * 0.5, 0.0). The closest length is taken over rows, so a row of the
+    * same id can supply it. Give each row its own id to score rows
+    * apart.
+    *
     * Scale shape: each doc's order-n grams come from the row-local
     * `token_ngrams` kernel and count per (doc, gram); gram top-2 is one
     * window over that (n, gram) count table (per-gram partitions —
@@ -203,7 +207,7 @@ object Bleu {
     // one (doc, gram) count subtree per order, tagged with its order
     val gramCnt = (1 to maxN).map { n =>
       toks.select(col(idCol),
-          explode(ngrams(col("__w"), n, Dedup.Sep)).as("__g"))
+          explode(Dedup.ngrams(col("__w"), n, Dedup.Sep)).as("__g"))
         .groupBy(col(idCol), col("__g")).agg(count(lit(1)).as("__c"))
         .select(col(idCol), lit(n).as("__n"), col("__g"), col("__c"))
     }.reduce(_ union _)

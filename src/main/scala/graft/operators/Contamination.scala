@@ -26,32 +26,25 @@ import graft.Materialize
   * raise n until grams are near-unique — at n ≥ 8 on natural text
   * df collapses to ~1 and the join is effectively linear).
   *
-  * n-gram assembly is the lead-window + codegen `concat_ws` pass
-  * shared with [[InvertedIndex.termCounts]] (interpreted HOFs are the
-  * measured ~5× scan tax); grams join as strings so an external SQL
-  * engine reproduces the operator verbatim — swap in
-  * `shingle_hash64` for the 8-byte production key (all downstream
-  * math is hash-invariant: counts and equi-joins only).
+  * Grams come from each row's own tokens (`Dedup.shingleRun`) and
+  * join as strings so an external SQL engine reproduces the operator
+  * verbatim — swap in `shingle_hash64` for the 8-byte production key
+  * (all downstream math is hash-invariant: counts and equi-joins
+  * only).
   */
 object Contamination {
 
   /** Positional (non-distinct) token n-grams: one row per gram slot,
-    * (docCol, pos, g). Multiplicity and position survive — coverage
-    * denominators count SLOTS, not the distinct-gram vocabulary.
+    * (docCol, pos, g), where pos is the gram's first token within its
+    * row. Multiplicity and position survive — coverage denominators
+    * count SLOTS, not the distinct-gram vocabulary. Each row's grams
+    * come from its own tokens, so a row gives the same grams whether
+    * or not another row shares its id.
     */
   def positionalNgrams(docs: DataFrame, docCol: String, textCol: String,
-      n: Int): DataFrame = {
-    val toks = docs.select(col(docCol),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "t0")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    val withNext = (1 until n).foldLeft(toks) { (df, i) =>
-      df.withColumn(s"t$i", lead(col("t0"), i).over(w))
-    }
-    withNext
-      .filter(col(s"t${n - 1}").isNotNull) // drop incomplete tails
-      .select(col(docCol), col("pos"),
-        concat_ws(Dedup.Sep, (0 until n).map(i => col(s"t$i")): _*).as("g"))
-  }
+      n: Int): DataFrame =
+    docs.select(col(docCol),
+      posexplode(Dedup.shingleRun(col(textCol), n)).as(Seq("pos", "g")))
 
   /** Per-corpus-doc contamination against a benchmark table: the
     * fraction of the doc's DISTINCT n-grams that also occur anywhere
@@ -67,29 +60,25 @@ object Contamination {
     * set — thousands of eval documents → a few million grams, far
     * under the broadcast threshold, so the plan is a broadcast LEFT
     * SEMI-shaped probe of the corpus gram stream (AQE picks broadcast
-    * from the aggregated size; no corpus shuffle beyond the per-doc
-    * count). A benchmark too big to broadcast degrades to a shuffle
-    * equi-join on the gram — still Σ df², never quadratic.
+    * from the aggregated size; no corpus shuffle beyond the
+    * (doc, gram) distinct and the per-doc count). A benchmark too big
+    * to broadcast degrades to a shuffle equi-join on the gram — still
+    * Σ df², never quadratic.
     */
   def flagContaminated(corpus: DataFrame, bench: DataFrame,
       docCol: String, textCol: String, n: Int,
       minOverlap: Double): DataFrame = {
-    val corpusGrams = positionalNgrams(corpus, docCol, textCol, n)
-      .select(col(docCol), col("g")).distinct()
     val benchGrams = positionalNgrams(bench, docCol, textCol, n)
       .select(col("g")).distinct()
       .withColumn("__hit", lit(1))
-    val counted = corpusGrams
+    // explode_outer keeps a gram-less doc as one null-gram row, which
+    // counts nothing, so the operator is total over the corpus
+    corpus.select(col(docCol),
+        explode_outer(Dedup.shingleRun(col(textCol), n)).as("g"))
+      .distinct()
       .join(benchGrams, Seq("g"), "left")
       .groupBy(col(docCol))
-      .agg(count(lit(1)).as("n_grams"), count(col("__hit")).as("n_hit"))
-    // left join keeps gram-less docs out entirely — reattach them
-    // with zero counts so the operator is total over the corpus
-    corpus.select(col(docCol)).distinct()
-      .join(counted, Seq(docCol), "left")
-      .select(col(docCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+      .agg(count(col("g")).as("n_grams"), count(col("__hit")).as("n_hit"))
       .withColumn("contamination",
         when(col("n_grams") === 0, lit(0.0))
           .otherwise(col("n_hit").cast("double") / col("n_grams")))
@@ -162,10 +151,8 @@ object Contamination {
 
   def duplicateSpanCoverage(docs: DataFrame, docCol: String,
       textCol: String, n: Int): DataFrame = {
-    // r16: the positional-ngram pipeline (token posexplode + per-doc
-    // lead window) fed BOTH the repeated-gram aggregate and the
-    // per-doc slot count, building twice (the dsirWeights pattern;
-    // guide §2.4). Pre-aggregate once to per-(doc, gram)
+    // the gram stream feeds BOTH the repeated-gram aggregate and the
+    // per-doc slot count. Pre-aggregate once to per-(doc, gram)
     // multiplicities and checkpoint: the cross-doc df is a count over
     // that frame's one-row-per-(doc, gram) keys, and the per-doc slot
     // counts are exact integer folds over __n.
@@ -256,13 +243,10 @@ object Contamination {
     val toks = docs.select(col(docCol),
       posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "t")))
     // grams feeds both the df aggregate and the duplicated-starts
-    // join, so the ngram pipeline builds twice — but checkpointing it
-    // probed control-normalized NEUTRAL-to-worse at sf0.1 (2.92× →
-    // 3.10× the q_tokenize control, two adjacent 8-run pairs, r16):
-    // caching the k-token gram strings costs what the second build
-    // saves. Left lazy; the winning pre-aggregate trick from
-    // [[duplicateSpanCoverage]] does not apply because the starts
-    // join needs per-POSITION rows, not multiplicities.
+    // join, so its scan runs twice: a narrow codegen scan costs less
+    // than caching the k-token gram strings, and the pre-aggregate
+    // trick from [[duplicateSpanCoverage]] does not apply because the
+    // starts join needs per-POSITION rows, not multiplicities.
     val grams = positionalNgrams(docs, docCol, textCol, k)
     val dupg = grams.select(col(docCol), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("__df"))
@@ -333,32 +317,26 @@ object Contamination {
     * Output: (n, n_holdout_grams, n_novel, novelty_rate), one row per
     * n.
     *
-    * Scale shape: ONE windowed token pass assembles all gram orders
-    * (lead chains + codegen concat_ws — no interpreted HOFs), one
-    * (n, gram) presence agg (map-side combined, two bool flags — no
-    * gram set ever materializes per side, no anti-join), one maxN-row
-    * final agg. Linear in token volume.
+    * Scale shape: ONE scan explodes every order's grams of each row
+    * (`token_ngrams` per order over the row's tokens), one gram
+    * presence agg (map-side combined, two bool flags — no gram set
+    * ever materializes per side, no anti-join), one maxN-row final
+    * agg. A gram's order is its `Sep` count + 1, read off the
+    * distinct-gram table. Linear in token volume.
     */
   def ngramNovelty(docs: DataFrame, docCol: String, textCol: String,
       isHoldout: Column, maxN: Int): DataFrame = {
     require(maxN >= 1 && maxN <= 9, s"need 1 <= maxN <= 9, got $maxN")
-    val toks = docs.select(col(docCol), isHoldout.as("__hold"),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("__pos", "t0")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("__pos"))
-    val withNext = (1 until maxN).foldLeft(toks) { (df, i) =>
-      df.withColumn(s"t$i", lead(col("t0"), i).over(w))
-    }
-    val grams = (1 to maxN).map { n =>
-      withNext.filter(col(s"t${n - 1}").isNotNull)
-        .select(lit(n).as("n"), col("__hold"),
-          concat_ws(Dedup.Sep, (0 until n).map(i => col(s"t$i")): _*)
-            .as("__g"))
-    }.reduce(_ unionAll _)
-    grams.groupBy(col("n"), col("__g"))
+    val grams = docs
+      .select(isHoldout.as("__hold"),
+        split(lower(col(textCol)), "\\s+").as("__w"))
+      .select(col("__hold"), explode(concat((1 to maxN).map(n =>
+        Dedup.ngrams(col("__w"), n, Dedup.Sep)): _*)).as("__g"))
+    grams.groupBy(col("__g"))
       .agg(max(when(col("__hold"), 1).otherwise(0)).as("__inh"),
         max(when(!col("__hold"), 1).otherwise(0)).as("__int"))
       .filter(col("__inh") === 1)
-      .groupBy(col("n"))
+      .groupBy(size(split(col("__g"), Dedup.Sep)).as("n"))
       .agg(count(lit(1)).as("n_holdout_grams"),
         sum(when(col("__int") === 0, 1L).otherwise(0L)).as("n_novel"))
       .select(col("n"), col("n_holdout_grams"), col("n_novel"),

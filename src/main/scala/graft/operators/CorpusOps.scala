@@ -1121,6 +1121,13 @@ object CorpusOps {
           col("pass_lines") && col("pass_alpha") && col("pass_stopwords"))
   }
 
+  /** `__g`: one row per unigram and per `Dedup.Sep`-joined bigram of
+    * a token array — the hashed-feature stream of [[dsirWeights]] and
+    * [[qualityClassifier]].
+    */
+  private def unigramsAndBigrams(toks: Column): Column =
+    explode(concat(toks, Dedup.ngrams(toks, 2, Dedup.Sep))).as("__g")
+
   /** X93 — DSIR importance weights (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every raw
     * document by how target-like its hashed n-gram distribution is,
@@ -1138,7 +1145,7 @@ object CorpusOps {
     * bucket's log-ratio is one fixed-shape double expression and the
     * per-doc Σ adds counts·ratio in ulp-absorbable order (round 6).
     *
-    * Scale shape: one per-doc token window (shuffle by doc), one
+    * Scale shape: one scan of each row's unigrams and bigrams, one
     * bucket-count agg (output ≤ `buckets` rows — CONSTANT-bounded,
     * smaller than a vocabulary), broadcast of that tiny table back to
     * the doc-gram scan, one map-side-combinable per-doc sum. The
@@ -1149,25 +1156,17 @@ object CorpusOps {
       isTarget: Column, buckets: Int = 1024, salt: String = "dsir")
       : DataFrame = {
     require(buckets > 0, s"need buckets > 0, got $buckets")
-    val toks = docs.select(col(docCol), isTarget.as("__t"),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("__pos", "__w")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("__pos"))
-    val withNext = toks.withColumn("__nx", lead(col("__w"), 1).over(w))
-    // unigram + bigram features from the one windowed pass
-    val grams = withNext
-      .select(col(docCol), col("__t"), col("__w").as("__g"))
-      .unionAll(withNext.filter(col("__nx").isNotNull)
-        .select(col(docCol), col("__t"),
-          concat(col("__w"), lit(Dedup.Sep), col("__nx")).as("__g")))
+    val grams = docs
+      .select(col(docCol), isTarget.as("__t"),
+        Dedup.tokens(col(textCol)).as("__w"))
+      .select(col(docCol), col("__t"), unigramsAndBigrams(col("__w")))
       .withColumn("__b", md5Band(col("__g"), salt) % buckets)
-    // r16: `grams` (posexplode + per-doc lead window + union + md5)
-    // fed BOTH the bucket-count aggregate and the final per-doc join,
-    // so the whole gram pipeline built twice (the unpersisted-
-    // duplicate-subtree pattern; guide §2.4). Pre-aggregate once to
-    // (doc, target, bucket) multiplicities — a skinny long-only frame
-    // — and checkpoint it; every downstream count is an exact integer
-    // fold over __n, and the per-doc log-weight Σ lr(b)·n_b is the
-    // same multiset sum the per-instance join produced.
+    // `grams` (gram scan + md5) feeds BOTH the bucket-count aggregate
+    // and the final per-doc join. Pre-aggregate once to (doc, target,
+    // bucket) multiplicities — a skinny long-only frame — and
+    // checkpoint it; every downstream count is an exact integer fold
+    // over __n, and the per-doc log-weight Σ lr(b)·n_b is the same
+    // multiset sum the per-instance join produced.
     val g2 = grams.groupBy(col(docCol), col("__t"), col("__b"))
       .agg(count(lit(1)).as("__n"))
       .transform(Materialize.cut)
@@ -1584,23 +1583,17 @@ object CorpusOps {
     *
     * Scale shape: no weight-table or vocabulary join — the weight is
     * a pure function of the bucket, evaluated inline in the gram scan
-    * (codegen md5), so scoring is one windowed token pass → one
-    * map-side-combinable per-doc agg; the only join is the skinny
-    * per-doc score reattach (empty docs). Model size is `buckets`,
-    * independent of vocabulary; nothing driver-side at all.
+    * (codegen md5), so scoring is one scan of each row's unigrams and
+    * bigrams → one map-side-combinable per-doc agg; the only join is
+    * the skinny per-doc score reattach (empty docs). Model size is
+    * `buckets`, independent of vocabulary; nothing driver-side at all.
     */
   def qualityClassifier(docs: DataFrame, docCol: String, textCol: String,
       buckets: Int = 1024, salt: String = "qclf"): DataFrame = {
     require(buckets > 0, s"need buckets > 0, got $buckets")
-    val toks = docs.select(col(docCol),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("__pos", "__w")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("__pos"))
-    val withNext = toks.withColumn("__nx", lead(col("__w"), 1).over(w))
-    val grams = withNext
-      .select(col(docCol), col("__w").as("__g"))
-      .unionAll(withNext.filter(col("__nx").isNotNull)
-        .select(col(docCol),
-          concat(col("__w"), lit(Dedup.Sep), col("__nx")).as("__g")))
+    val grams = docs
+      .select(col(docCol), Dedup.tokens(col(textCol)).as("__w"))
+      .select(col(docCol), unigramsAndBigrams(col("__w")))
     val wq = md5Band((md5Band(col("__g"), salt) % buckets).cast("string"),
       s"${salt}w") - 2147483648L
     val scored = grams

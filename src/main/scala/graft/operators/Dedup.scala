@@ -47,14 +47,22 @@ object Dedup {
     array_distinct(when(n < k, array().cast("array<string>")).otherwise(grams))
   }
 
+  /** Every n-gram occurrence of a token array's non-empty elements, in
+    * position order and WITH multiplicity, each joined by `sep`: one
+    * codegen `token_ngrams` call over the row's own tokens. n = 1 is
+    * the non-empty tokens themselves. Explode it directly inside a
+    * `select`; exploding a projected alias of it makes Spark infer a
+    * `size(alias) > 0` filter that evaluates the kernel a second time.
+    */
+  def ngrams(toks: Column, n: Int, sep: String): Column =
+    call_function("token_ngrams", toks, lit(n), lit(sep))
+
   /** Every k-word shingle occurrence of a text, in position order, as
-    * a `Sep`-joined string array: one codegen `token_ngrams` call over
-    * the text's lower-cased tokens (empty tokens skipped, like
-    * [[tokens]]).
+    * a `Sep`-joined string array: [[ngrams]] over the text's
+    * lower-cased tokens (empty tokens skipped, like [[tokens]]).
     */
   def shingleRun(text: Column, k: Int): Column =
-    call_function("token_ngrams", split(lower(text), "\\s+"), lit(k),
-      lit(Sep))
+    ngrams(split(lower(text), "\\s+"), k, Sep)
 
   /** Distinct k-word STRING shingles as exploded rows (docCol, `g`),
     * one per shingle of each row. Use when a downstream stage needs

@@ -30,53 +30,36 @@ import graft.Materialize
   */
 object InvertedIndex {
 
-  /** Sequence n-grams of a token array, space-joined, NON-distinct
-    * (term frequency needs multiplicity, unlike [[Dedup.shingles]]'
-    * set semantics). n = 1 degenerates to the tokens themselves.
-    */
-  def ngrams(toks: Column, n: Int): Column = {
-    val sz = size(toks)
-    when(sz < n, array().cast("array<string>")).otherwise(
-      transform(sequence(lit(0), sz - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
-
   /** (docCol, term, tf): whitespace-tokenized lower-cased n-gram term
-    * counts per document. Word n-grams (n ≥ 2) are the right index
-    * terms when the unigram vocabulary is small relative to the
-    * corpus — every term is then near-ubiquitous and carries no
-    * signal.
-    *
-    * n-gram assembly for n ≥ 2 runs as `lead` window steps over the
-    * exploded token stream + a codegen `concat_ws`, NOT the
-    * [[ngrams]] HOF form: `transform`/`slice`/`array_join` are
-    * interpreted per element, and on a multi-consumer plan the
-    * interpreted pass dominated the whole query (measured ~5 s → ~1 s
-    * at sf0.1). Cost: one window shuffle on the doc key, then the
-    * map-side-combined count aggregate.
+    * counts per document, each term's words joined by a space. Word
+    * n-grams (n ≥ 2) are the right index terms when the unigram
+    * vocabulary is small relative to the corpus — every term is then
+    * near-ubiquitous and carries no signal. Each row's grams come from
+    * its own tokens, so rows that share an id add their counts and no
+    * gram spans two rows. Cost: one scan, then the map-side-combined
+    * count aggregate.
     */
   def termCounts(docs: DataFrame, docCol: String, textCol: String,
       n: Int = 1): DataFrame = {
     val terms =
-      if (n == 1)
-        docs.select(col(docCol),
-          explode(Dedup.tokens(col(textCol))).as("term"))
-      else {
-        val toks = docs.select(col(docCol),
-          posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "t0")))
-        val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-        val withNext = (1 until n).foldLeft(toks) { (df, i) =>
-          df.withColumn(s"t$i", lead(col("t0"), i).over(w))
-        }
-        withNext
-          .filter(col(s"t${n - 1}").isNotNull) // drop incomplete tails
-          .select(col(docCol),
-            concat_ws(" ", (0 until n).map(i => col(s"t$i")): _*)
-              .as("term"))
-      }
-    terms.groupBy(col(docCol), col("term"))
+      if (n == 1) Dedup.tokens(col(textCol))
+      else Dedup.ngrams(split(lower(col(textCol)), "\\s+"), n, " ")
+    docs.select(col(docCol), explode(terms).as("term"))
+      .groupBy(col(docCol), col("term"))
       .agg(count(lit(1)).as("tf"))
   }
+
+  /** (docCol, __g): every bigram occurrence of each row, its two
+    * tokens joined by `Dedup.Sep`; `prevOf` and `nextOf` split
+    * one back into its tokens.
+    */
+  private def bigrams(docs: DataFrame, docCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(docCol),
+      explode(Dedup.shingleRun(col(textCol), 2)).as("__g"))
+
+  private val prevOf = substring_index(col("__g"), Dedup.Sep, 1)
+  private val nextOf = substring_index(col("__g"), Dedup.Sep, -1)
 
   /** (term, df): number of documents containing each term. */
   def docFrequencies(tc: DataFrame): DataFrame =
@@ -342,21 +325,15 @@ object InvertedIndex {
     *
     * Output: (prev, next, cnt, total, p, rk) with rk in 1..k.
     *
-    * Scale shape: one token-stream window pass (the shared lead
-    * n-gram assembly) + two map-side-combined aggregates + one
-    * per-prev window over the DISTINCT bigram table (|V|² worst
+    * Scale shape: one bigram scan + two map-side-combined aggregates
+    * + one per-prev window over the DISTINCT bigram table (|V|² worst
     * case, vocabulary-sized — not corpus-sized — rows).
     */
   def nextTokenStats(docs: DataFrame, docCol: String, textCol: String,
       k: Int): DataFrame = {
-    val toks = docs.select(col(docCol),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "prev")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    val pairs = toks
-      .withColumn("next", lead(col("prev"), 1).over(w))
-      .filter(col("next").isNotNull)
-    val counts = pairs.groupBy(col("prev"), col("next"))
-      .agg(count(lit(1)).as("cnt"))
+    val counts = bigrams(docs, docCol, textCol)
+      .groupBy(col("__g")).agg(count(lit(1)).as("cnt"))
+      .select(prevOf.as("prev"), nextOf.as("next"), col("cnt"))
     val totals = counts.groupBy(col("prev"))
       .agg(sum(col("cnt")).as("total"))
     val rkW = Window.partitionBy(col("prev"))
@@ -381,30 +358,25 @@ object InvertedIndex {
     *
     * Output: (docCol, n_bigrams, mean_nll, ppl), rounded to 6.
     *
-    * Scale shape: the token-stream window is per-doc (one shuffle by
-    * doc); bigram/unigram count aggs are map-side combinable and
+    * Scale shape: bigrams come from each row's own tokens in one
+    * scan; bigram/unigram count aggs are map-side combinable and
     * vocabulary²-bounded — corpus-sized input, vocab-sized output;
-    * the probability join keys on (prev, next) against that
+    * the probability join keys on the bigram against that
     * vocab-sized table (AQE broadcasts it when small); the final
     * per-doc agg is one more map-side-combinable pass. Nothing is
     * ever quadratic in documents.
     */
   def docPerplexity(docs: DataFrame, docCol: String, textCol: String)
       : DataFrame = {
-    val toks = docs.select(col(docCol),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "prev")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    val bigrams = toks
-      .withColumn("next", lead(col("prev"), 1).over(w))
-      .filter(col("next").isNotNull)
-    val counts = bigrams.groupBy(col("prev"), col("next"))
-      .agg(count(lit(1)).as("cnt"))
+    val grams = bigrams(docs, docCol, textCol)
+    val counts = grams.groupBy(col("__g")).agg(count(lit(1)).as("cnt"))
+      .withColumn("prev", prevOf)
     val totals = counts.groupBy(col("prev"))
       .agg(sum(col("cnt")).as("total"))
     val probs = counts.join(totals, "prev")
-      .withColumn("__nll", -log(2.0, col("cnt").cast("double") / col("total")))
-      .select(col("prev"), col("next"), col("__nll"))
-    bigrams.join(probs, Seq("prev", "next"))
+      .select(col("__g"),
+        (-log(2.0, col("cnt").cast("double") / col("total"))).as("__nll"))
+    grams.join(probs, "__g")
       .groupBy(col(docCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__nll")).as("__s"))
       .select(col(docCol), col("n_bigrams"),
@@ -431,23 +403,18 @@ object InvertedIndex {
     * differs (ulp), absorbed by round(6) — the [[docPerplexity]]
     * convention.
     *
-    * Scale shape: identical to [[docPerplexity]] — one per-doc window,
+    * Scale shape: identical to [[docPerplexity]] — one bigram scan,
     * three vocab-sized count aggs (all map-side combinable), one
-    * single-row type total crossed in, probability join on
-    * (prev, next). Nothing quadratic in documents.
+    * single-row type total crossed in, probability join on the
+    * bigram. Nothing quadratic in documents.
     */
   def knPerplexity(docs: DataFrame, docCol: String, textCol: String,
       discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1,
       s"need 0 < discount < 1, got $discount")
-    val toks = docs.select(col(docCol),
-      posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "prev")))
-    val w = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    val bigrams = toks
-      .withColumn("next", lead(col("prev"), 1).over(w))
-      .filter(col("next").isNotNull)
-    val counts = bigrams.groupBy(col("prev"), col("next"))
-      .agg(count(lit(1)).as("cnt"))
+    val grams = bigrams(docs, docCol, textCol)
+    val counts = grams.groupBy(col("__g")).agg(count(lit(1)).as("cnt"))
+      .select(col("__g"), prevOf.as("prev"), nextOf.as("next"), col("cnt"))
     // c(u·) and N1+(u·) in one pass over the bigram-type table
     val ctx = counts.groupBy(col("prev"))
       .agg(sum(col("cnt")).as("ctx"), count(lit(1)).as("n1fw"))
@@ -460,9 +427,8 @@ object InvertedIndex {
           col("ctx") +
           (lit(discount) * col("n1fw") / col("ctx")) *
           (col("n1bw").cast("double") / col("btypes")))
-      .withColumn("__nll", -(log(col("__p")) / log(lit(2.0))))
-      .select(col("prev"), col("next"), col("__nll"))
-    bigrams.join(probs, Seq("prev", "next"))
+      .select(col("__g"), (-(log(col("__p")) / log(lit(2.0)))).as("__nll"))
+    grams.join(probs, "__g")
       .groupBy(col(docCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__nll")).as("__s"))
       .select(col(docCol), col("n_bigrams"),
@@ -541,31 +507,27 @@ object InvertedIndex {
     * absorbed by round(6) — the [[docPerplexity]] convention.
     *
     * Scale shape: vocab-sized count tables from the training half,
-    * probability lookups as equi-joins on (prev, next) / next;
+    * probability lookups as equi-joins on the bigram / token;
     * nothing wider than the token stream moves.
     */
   def stupidBackoff(docs: DataFrame, docCol: String, textCol: String,
       alpha: Double = 0.4, salt: String = "sb"): DataFrame = {
     require(alpha > 0 && alpha < 1, s"bad alpha $alpha")
+    val inTrain = CorpusOps.md5Band(col(docCol).cast("string"), salt) <
+      CorpusOps.bandThreshold(0.5)
     val toks = docs.select(col(docCol),
       posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "__w")))
-    val train = toks.filter(
-      CorpusOps.md5Band(col(docCol).cast("string"), salt) <
-        CorpusOps.bandThreshold(0.5))
-    val tw = Window.partitionBy(col(docCol)).orderBy(col("pos"))
-    def bigramsOf(t: DataFrame): DataFrame = t
-      .withColumn("__next", lead(col("__w"), 1).over(tw))
-      .filter(col("__next").isNotNull)
-      .select(col(docCol), col("pos"), col("__w").as("__prev"),
-        col("__next"))
-    val bc = bigramsOf(train).groupBy(col("__prev"), col("__next"))
-      .agg(count(lit(1)).as("__bc"))
+    val train = toks.filter(inTrain)
+    val bc = bigrams(docs.filter(inTrain), docCol, textCol)
+      .groupBy(col("__g")).agg(count(lit(1)).as("__bc"))
     val uc = train.groupBy(col("__w")).agg(count(lit(1)).as("__uc"))
     val nTotal = train.agg(sum(lit(1L)).as("__ntr"))
     val lnN = log(col("__ntr").cast("double"))
     // positions >= 1: bigram -> unigram -> OOV ladder
-    val rest = bigramsOf(toks)
-      .join(bc, Seq("__prev", "__next"), "left")
+    val rest = bigrams(docs, docCol, textCol)
+      .join(bc, Seq("__g"), "left")
+      .select(col(docCol), col("__bc"), prevOf.as("__prev"),
+        nextOf.as("__next"))
       .join(uc.select(col("__w").as("__prev"), col("__uc").as("__ucp")),
         Seq("__prev"), "left")
       .join(uc.select(col("__w").as("__next"), col("__uc").as("__ucn")),

@@ -35,9 +35,13 @@ object SetJoin {
     // `token_ngrams` pass costs less than caching its output
     val sets = docs.select(col(idCol),
       array_distinct(Dedup.shingleRun(col(textCol), shingleK)).as("__set"))
+    // explode_outer + isNotNull, not explode: Spark infers
+    // `size(__set) > 0` from an inner explode of an attribute and
+    // pushes it below the projection, evaluating the kernel twice
     val sh = sets.select(col(idCol),
-      size(col("__set")).cast("long").as("__len"),
-      explode(col("__set")).as("g"))
+        size(col("__set")).cast("long").as("__len"),
+        explode_outer(col("__set")).as("g"))
+      .filter(col("g").isNotNull)
     val df = sh.groupBy(col("g")).agg(count(lit(1)).as("__df"))
     val wd = Window.partitionBy(col(idCol))
       .orderBy(col("__df"), col("g"))

@@ -977,6 +977,11 @@ class PlanAuditSpec extends AnyFunSuite {
         w.contains("row_number()") && w.contains("__df")
       assert(windows.forall(allowed), s"$q windows:\n${windows.mkString("\n")}")
     }
+    // the shingle kernel runs in a Project only: a Filter inferred from
+    // an inner explode of the shingle array would evaluate it again
+    val kernelFilters = plan("q_setjoin").linesIterator
+      .filter(l => l.contains("Filter ") && l.contains("token_ngrams")).toList
+    assert(kernelFilters.isEmpty, kernelFilters.mkString("\n"))
     // the pair scorers are one scan each: only their orderBy shuffles
     for (q <- Seq("q_token_f1", "q_bleu", "q_chrf")) {
       val exchanges =
@@ -984,6 +989,18 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(exchanges.nonEmpty &&
         exchanges.forall(_.contains("rangepartitioning(doc_id")),
         s"$q:\n${exchanges.mkString("\n")}")
+    }
+  }
+
+  test("n-gram queries assemble grams with token_ngrams, never a " +
+    "lead() window") {
+    for (q <- Seq("q_next_token", "q_doc_perplexity", "q_kn_perplexity",
+        "q_ngram_novelty", "q_stupid_backoff", "q_decontaminate",
+        "q_span_clean_anyoffset", "q_quality_classifier",
+        "q_score_calibration")) {
+      val p = plan(q)
+      assert(!p.contains("lead("), s"$q assembles grams in a window")
+      assert(p.contains("token_ngrams"), s"$q:\n${p.take(1500)}")
     }
   }
 

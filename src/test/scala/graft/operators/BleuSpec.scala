@@ -96,6 +96,21 @@ class BleuSpec extends AnyFunSuite {
     assert(all1 == Seq(1.0, 1.0, 1.0))
   }
 
+  test("selfBleu: rows sharing an id pool their grams and are scored " +
+      "only against other ids") {
+    val s = spark
+    import s.implicits._
+    def p1(rows: Seq[(Long, String)]) =
+      Bleu.selfBleu(rows.toDF("id", "text"), "id", "text", maxN = 1)
+        .select($"id", $"p_1").as[(Long, Double)].collect()
+        .sorted.toSeq
+    // doc 1's two rows never clip against each other
+    assert(p1(Seq((1L, "a b"), (1L, "a b c d"), (2L, "x y"))) ==
+      Seq((1L, 0.0), (1L, 0.0), (2L, 0.0)))
+    assert(p1(Seq((1L, "a b"), (2L, "a b c d"), (3L, "x y"))) ==
+      Seq((1L, 1.0), (2L, 0.5), (3L, 0.0)))
+  }
+
   test("corpusBleu pools counts before ratios (not a mean of scores)") {
     val s = spark
     import s.implicits._

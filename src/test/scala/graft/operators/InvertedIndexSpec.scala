@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,11 +24,21 @@ class InvertedIndexSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
   }
 
+  /** Reference n-grams as an array HOF over the token array, built
+    * independently of the `token_ngrams` kernel.
+    */
+  private def hofNgrams(toks: Column, n: Int): Column = {
+    val sz = size(toks)
+    when(sz < n, array().cast("array<string>")).otherwise(
+      transform(sequence(lit(0), sz - n),
+        i => array_join(slice(toks, i + 1, lit(n)), " ")))
+  }
+
   test("ngrams: counts, multiplicity, short-doc edge") {
     val s = spark
     import s.implicits._
     val got = Seq("a b a b", "a", "").toDF("text")
-      .select(InvertedIndex.ngrams(Dedup.tokens($"text"), 2).as("g"))
+      .select(Dedup.ngrams(Dedup.tokens($"text"), 2, " ").as("g"))
       .collect().map(_.getSeq[String](0))
     assert(got(0) == Seq("a b", "b a", "a b")) // non-distinct
     assert(got(1).isEmpty && got(2).isEmpty)
@@ -42,7 +53,7 @@ class InvertedIndexSpec extends AnyFunSuite {
         .toMap
       val ref = corpus
         .select($"doc_id",
-          explode(InvertedIndex.ngrams(Dedup.tokens($"text"), n)).as("term"))
+          explode(hofNgrams(Dedup.tokens($"text"), n)).as("term"))
         .groupBy($"doc_id", $"term").count()
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
         .toMap

@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkHarness
 
 /** Operators rebuilt on row-local or key-local work: `tokenF1`, BLEU
-  * and chrF score each row on its own, `resolveClustersWithin`
-  * resolves components per key, and `resolveClusters` spends no job of
-  * its own on the convergence test.
+  * and chrF score each row on its own, `termCounts` and
+  * `positionalNgrams` take each row's grams from its own tokens,
+  * `resolveClustersWithin` resolves components per key, and
+  * `resolveClusters` spends no job of its own on the convergence test.
   */
 class RowLocalOperatorsSpec extends AnyFunSuite {
   private lazy val spark = SparkHarness.spark
@@ -54,6 +55,31 @@ class RowLocalOperatorsSpec extends AnyFunSuite {
       (i.toLong, r, h) }
     assert(corpus(pairs) == corpus(unique))
     assert(corpus(unique) == "[4,8,8,0.5,1.0,0.5]") // p_1 = (2+2+0+0)/8
+  }
+
+  test("termCounts and positionalNgrams: rows sharing an id give the " +
+    "grams they give alone, and no gram spans two rows") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq((1L, "a b"), (1L, "c d"), (2L, "x y z"))
+    def counts(rs: Seq[(Long, String)]) =
+      InvertedIndex.termCounts(rs.toDF("doc_id", "text"), "doc_id", "text",
+          n = 2)
+        .as[(Long, String, Long)].collect().toSeq
+    val summed = rows.flatMap(r => counts(Seq(r)))
+      .groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
+    val together = counts(rows).map(t => (t._1, t._2) -> t._3).toMap
+    assert(together == summed)
+    assert(together == Map((1L, "a b") -> 1L, (1L, "c d") -> 1L,
+      (2L, "x y") -> 1L, (2L, "y z") -> 1L))
+    def grams(rs: Seq[(Long, String)]) =
+      Contamination.positionalNgrams(rs.toDF("doc_id", "text"), "doc_id",
+          "text", 2)
+        .as[(Long, Int, String)].collect().toSeq
+    val sep = Dedup.Sep
+    assert(grams(rows).sorted == rows.flatMap(r => grams(Seq(r))).sorted)
+    assert(grams(rows).sorted == Seq((1L, 0, s"a${sep}b"),
+      (1L, 0, s"c${sep}d"), (2L, 0, s"x${sep}y"), (2L, 1, s"y${sep}z")))
   }
 
   private def components(df: DataFrame): Map[Long, Long] =
