@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * k rows per probe — with the no-false-negative guarantee of the
   * structure: build-side values ALWAYS probe true.
   *
-  * At 100 TB: build once per shard/day (one distinct + one
-  * explode(k) + a (key, word)-bounded bit_or agg), persist the
+  * At 100 TB: build once per shard/day (one explode(k) + a (key,
+  * word)-bounded, map-side-combined bit_or agg), persist the
   * skinny store, OR-merge history server-side, and gate expensive
   * joins on a broadcast probe — the X43 bloom-prune shape with the
   * filter lifted out of job scope into a reusable artifact.
@@ -41,23 +41,31 @@ object BloomStore {
     require(hashes >= 1 && hashes <= 16, s"bad hashes $hashes")
   }
 
-  /** Build one filter per `keyCol` value over the distinct
-    * `valueCol` members. Output: (key, word_idx, bits) sparse rows.
+  /** The filter's per-row projection: one (key, word_idx, __m) row
+    * per row of `df` and hash — the word each position sets and its
+    * one-bit mask. Duplicate values repeat rows, which OR absorbs.
     */
-  def build(df: DataFrame, keyCol: String, valueCol: String,
+  def bitRows(df: DataFrame, keyCol: String, valueCol: String,
       bits: Int = 4096, hashes: Int = 3, salt: String = "bloom")
       : DataFrame = {
     checkParams(bits, hashes)
     df.select(col(keyCol).as("key"),
-        col(valueCol).cast("string").as("__v"))
-      .distinct()
-      .select(col("key"),
-        explode(positions(col("__v"), bits, hashes, salt)).as("__p"))
+        explode(positions(col(valueCol).cast("string"), bits, hashes,
+          salt)).as("__p"))
       .select(col("key"), shiftright(col("__p"), 5).as("word_idx"),
         expr("shiftleft(1L, cast(__p % 32 as int))").as("__m"))
+  }
+
+  /** Build one filter per `keyCol` value over its `valueCol`
+    * members: the OR of [[bitRows]] per (key, word). Output: (key,
+    * word_idx, bits) sparse rows.
+    */
+  def build(df: DataFrame, keyCol: String, valueCol: String,
+      bits: Int = 4096, hashes: Int = 3, salt: String = "bloom")
+      : DataFrame =
+    bitRows(df, keyCol, valueCol, bits, hashes, salt)
       .groupBy(col("key"), col("word_idx"))
       .agg(expr("bit_or(__m)").as("bits"))
-  }
 
   /** OR-merge shard filters into coarser keys (shards → source,
     * daily → monthly): relabel via `mergedKey`, then `bit_or` per

@@ -33,20 +33,27 @@ object Cms {
     pmod(conv(substring(md5(concat(lit(s"cms$j:"), key)), 1, 8), 16, 10)
       .cast("long"), lit(width.toLong))
 
-  /** One (hash_row, bucket, cnt) row per non-empty counter; counts
-    * each row of `df` once (pre-aggregate upstream for weighted
-    * inserts).
+  /** The sketch's per-row projection: one (hash_row, bucket) row per
+    * row of `df` and hash row — the cells each row increments.
     */
-  def sketch(df: DataFrame, keyCol: String, depth: Int = 4,
+  def cells(df: DataFrame, keyCol: String, depth: Int = 4,
       width: Int = 64): DataFrame = {
     require(depth >= 1 && depth <= 16, s"depth=$depth out of [1,16]")
     require(width >= 2, s"width=$width must be >= 2")
     val key = col(keyCol).cast("string")
     df.select(posexplode(array((0 until depth).map(j =>
         bucket(key, j, width)): _*)).as(Seq("hash_row", "bucket")))
+  }
+
+  /** One (hash_row, bucket, cnt) row per non-empty counter; counts
+    * each row of `df` once (pre-aggregate upstream for weighted
+    * inserts).
+    */
+  def sketch(df: DataFrame, keyCol: String, depth: Int = 4,
+      width: Int = 64): DataFrame =
+    cells(df, keyCol, depth, width)
       .groupBy(col("hash_row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
-  }
 
   /** Elementwise sum of sketches built with the same (depth, width). */
   def merge(sketches: DataFrame*): DataFrame =

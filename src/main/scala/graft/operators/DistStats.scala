@@ -92,7 +92,8 @@ object DistStats {
     * digit-bounded aggregate; ≤ 9 rows out.
     */
   def benford(df: DataFrame, valueCol: String): DataFrame = {
-    val obs = firstDigitCounts(df, valueCol)
+    val obs = firstDigits(df, valueCol)
+      .groupBy(col("digit")).agg(count(lit(1)).as("observed"))
     val tot = obs.agg(sum(col("observed")).cast("long").as("__n"))
     val pd = log(lit(1.0) + lit(1.0) / col("digit").cast("double")) /
       log(lit(10.0))
@@ -104,16 +105,15 @@ object DistStats {
           (col("observed").cast("double") - e) / e, 6).as("chi2_term"))
   }
 
-  /** (digit, observed): first-digit counts of the positive values
-    * at cent precision — the summary [[benford]] scores.
+  /** (digit): the first digit of each positive value at cent
+    * precision — the per-row projection [[benford]] counts.
     */
-  private[graft] def firstDigitCounts(df: DataFrame, valueCol: String)
+  private[graft] def firstDigits(df: DataFrame, valueCol: String)
       : DataFrame =
     df.select(round(col(valueCol) * 100, 0).cast("long").as("__c"))
       .filter(col("__c") > 0L)
       .select(substring(col("__c").cast("string"), 1, 1).cast("int")
         .as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("observed"))
 
   /** X186 — Otsu's threshold over an integral value column: the cut
     * t maximizing between-class variance σ_b²(t) = (s₀N − Sn₀)² /

@@ -179,10 +179,11 @@ object Hll {
   private def hash60(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** Dense per-group register arrays: (groupCol, sketch array<int>,
-    * estimate).
+  /** The sketch's per-row projection: (groupCol, __reg int, __rho
+    * int) for every row with a non-null key — the register each row
+    * raises and the ρ it offers.
     */
-  def groupSketches(df: DataFrame, groupCol: String, keyCol: String,
+  def registerRows(df: DataFrame, groupCol: String, keyCol: String,
       p: Int = DefaultP): DataFrame = {
     val m = 1 << p
     val k = rhoMax(p)
@@ -196,6 +197,15 @@ object Hll {
         when(col("__w") === 0, k)
           .otherwise(lit(k) - length(bin(col("__w")))).cast("int")
           .as("__rho"))
+  }
+
+  /** Dense per-group register arrays: (groupCol, sketch array<int>,
+    * estimate).
+    */
+  def groupSketches(df: DataFrame, groupCol: String, keyCol: String,
+      p: Int = DefaultP): DataFrame = {
+    val m = 1 << p
+    registerRows(df, groupCol, keyCol, p)
       .groupBy(col(groupCol), col("__reg"))
       .agg(max(col("__rho")).as("__mr"))
       .groupBy(col(groupCol))

@@ -27,6 +27,16 @@ import org.apache.spark.sql.functions._
   */
 object Kmv {
 
+  /** The sketch's per-row projection: (__g, __h) = (group, 32-bit
+    * salted hash) for every row of `df`, duplicates kept.
+    */
+  def hashRows(df: DataFrame, groupCol: String, keyCol: String,
+      salt: String = "kmv"): DataFrame = {
+    val h = conv(substring(md5(concat(lit(s"$salt:"),
+      col(keyCol).cast("string"))), 1, 8), 16, 10).cast("long")
+    df.select(col(groupCol).as("__g"), h.as("__h"))
+  }
+
   /** Bottom-k sketch table: (group, h, rk) with rk = 1..≤k ascending
     * by the 32-bit salted hash.
     */
@@ -34,10 +44,7 @@ object Kmv {
       k: Int, salt: String = "kmv"): DataFrame = {
     require(k >= 4 && k <= 65536, s"bad k $k")
     import org.apache.spark.sql.expressions.Window
-    val h = conv(substring(md5(concat(lit(s"$salt:"),
-      col(keyCol).cast("string"))), 1, 8), 16, 10).cast("long")
-    val hashes = df.select(col(groupCol).as("__g"), h.as("__h"))
-      .distinct()
+    val hashes = hashRows(df, groupCol, keyCol, salt).distinct()
     val w = Window.partitionBy(col("__g")).orderBy(col("__h"))
     hashes.withColumn("__rk", row_number().over(w).cast("long"))
       .filter(col("__rk") <= k)

@@ -64,15 +64,22 @@ object LogHistogram {
     * never be silently decoded with depth-4 bounds.
     */
   def build(df: DataFrame, keyCol: String, valueCol: String,
+      subBits: Int = 4): DataFrame =
+    bucketRows(df, keyCol, valueCol, subBits)
+      .groupBy(col("key"), col("bucket"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("sub_bits", lit(subBits))
+
+  /** The store's per-row projection: one (key, bucket) row per
+    * non-negative value of `df`.
+    */
+  def bucketRows(df: DataFrame, keyCol: String, valueCol: String,
       subBits: Int = 4): DataFrame = {
     require(subBits >= 1 && subBits <= 8, s"bad subBits $subBits")
     df.select(col(keyCol).as("key"),
         col(valueCol).cast("long").as("__lh_v"))
       .filter(col("__lh_v") >= 0L)
-      .withColumn("bucket", bucketIdx("__lh_v", subBits))
-      .groupBy(col("key"), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("sub_bits", lit(subBits))
+      .select(col("key"), bucketIdx("__lh_v", subBits).as("bucket"))
   }
 
   /** Count-sum merge, relabeling keys (shards → source, days →

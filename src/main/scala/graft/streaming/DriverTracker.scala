@@ -6,19 +6,23 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 /** The driver-side fold behind every streaming sketch tracker (CMS,
   * HLL, KMV, log-histogram, Benford, Bloom, PSI, JS, McNemar, PII,
   * the two QA panels and heavy hitters). A tracker supplies three
-  * things: its per-batch summary query, an associative `merge` of two
-  * values under one key, and its reads. This class runs the summary
-  * once, collects it, folds the rows into the keyed state `K → V`,
-  * validates the candidate state and only then commits it.
+  * things: its per-batch input (the batch operator's per-row
+  * projection, or a summary where rows do not merge into bounded
+  * state), an associative `merge` of two values under one key, and
+  * its reads. This class folds the input map-side: each partition
+  * merges its decoded rows into a keyed map, the driver merges the
+  * partition maps (one Spark job, no exchange; see [[combine]]) into
+  * the keyed state `K → V`, validates the candidate state and only
+  * then commits it.
   *
   * Every summary is mergeable (Agarwal et al., PODS 2012), so the
   * state after N batches equals the tracker's batch operator over the
-  * concatenated input however the stream is cut; the tracker specs
-  * assert that parity exactly.
+  * concatenated input however the stream is cut into batches or
+  * partitions; the tracker specs assert that parity exactly.
   *
   * Replay safety: `foreachBatch` is at-least-once, so a micro-batch
   * can arrive again under the id it had. A batch whose id is at or
-  * below [[lastBatchId]] is skipped before its summary query runs.
+  * below [[lastBatchId]] is skipped before its input runs.
   * Spark replays only the last uncommitted batch, so keeping the
   * state from before that batch ([[before]]) is enough for reads that
   * must see the stream as it was when the batch first arrived. A
@@ -54,17 +58,16 @@ abstract class DriverTracker[K, V](merge: (V, V) => V) {
   /** Throws to reject a batch; the state stays as it was before it. */
   protected def validate(next: Map[K, V]): Unit = ()
 
-  /** Fold one batch: `summary` is its summary query and `decode` turns
-    * each collected row into (key, value) pairs.
+  /** Fold one batch: `input` is its per-row projection (or summary)
+    * and `decode` turns each row into (key, value) pairs. `decode`
+    * runs on the executors, so it must not capture the tracker.
     */
-  protected final def fold(summary: DataFrame)(
+  protected final def fold(input: DataFrame)(
       decode: Row => IterableOnce[(K, V)]): Unit = {
     val id = pinned.getOrElse(applied + 1)
     if (id > applied) {
-      val next = settle(summary.collect().iterator.flatMap(decode)
-        .foldLeft(folded) { case (m, (k, v)) =>
-          m.updated(k, m.get(k).fold(v)(merge(_, v)))
-        })
+      val batch = DriverTracker.combine(input, merge)(decode)
+      val next = settle(DriverTracker.mergeInto(folded, batch, merge))
       validate(next)
       prior = folded; folded = next; applied = id
     }
@@ -72,6 +75,32 @@ abstract class DriverTracker[K, V](merge: (V, V) => V) {
 }
 
 object DriverTracker {
+
+  /** Merge (key, value) pairs into `m`, applying `merge` per key. */
+  private def mergeInto[K, V](m: Map[K, V], kvs: IterableOnce[(K, V)],
+      merge: (V, V) => V): Map[K, V] =
+    kvs.iterator.foldLeft(m) { case (acc, (k, v)) =>
+      acc.updated(k, acc.get(k).fold(v)(merge(_, v)))
+    }
+
+  /** `input`'s rows decoded and merged per key, as ONE Spark job with
+    * no exchange: each partition folds its rows into a map, and the
+    * driver merges the partition maps (the map-side partial-aggregate
+    * pattern). Depth 1 because a partition map is bounded by the
+    * tracker's state, so the driver merge is cheap, while a deeper
+    * tree would add a shuffle. Partition results are committed once
+    * per partition, so a retried task is not merged twice (no
+    * accumulators). The closures capture only `merge` and `decode`,
+    * never a tracker.
+    */
+  private[streaming] def combine[K, V](input: DataFrame,
+      merge: (V, V) => V)(decode: Row => IterableOnce[(K, V)]): Map[K, V] =
+    input.rdd.treeAggregate(Map.empty[K, V])(
+      (acc, r) => mergeInto(acc, decode(r), merge),
+      (a, b) => mergeInto(a, b, merge), 1)
+
+  /** Decode a projection row as one occurrence of its first column. */
+  def tally[K](r: Row): Seq[(K, Long)] = Seq(r.get(0).asInstanceOf[K] -> 1L)
 
   /** Decode a one-row aggregate of long counters into (column index,
     * count) pairs; null sums (an empty batch) contribute nothing.

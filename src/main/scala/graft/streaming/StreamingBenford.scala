@@ -20,8 +20,7 @@ object StreamingBenford {
       extends DriverTracker[Int, Long](_ + _) {
 
     def update(batch: DataFrame, valueCol: String): Unit =
-      fold(DistStats.firstDigitCounts(batch, valueCol))(r =>
-        Seq(r.getInt(0) -> r.getLong(1)))
+      fold(DistStats.firstDigits(batch, valueCol))(DriverTracker.tally)
 
     /** (digit, observed, expected, chi2_term) rows — the batch
       * operator's exact double shapes over the accumulated grid.

@@ -21,6 +21,9 @@ import graft.operators.BloomStore
   * replayed batch tags against the filter from before its first
   * arrival, so a replay does not mark its own values as duplicates.
   *
+  * Each batch's input is `BloomStore.bitRows`, the per-row (word,
+  * bit mask) projection `BloomStore.build` ORs, folded map-side.
+  *
   * Driver state: ≤ bits/32 word → bits entries (4096 bits → 128),
   * folded by [[DriverTracker]].
   */
@@ -44,9 +47,9 @@ object StreamingBloom {
           col("might_contain").as("might_be_dup"))
       // materialize BEFORE mutating state
       val out = Materialize.cut(batch.join(tagged, Seq(valueCol)))
-      fold(BloomStore.build(batch.select(lit("s").as("key"), col(valueCol)),
-          "key", valueCol, bits, hashes, salt))(r =>
-        Seq(r.getAs[Long]("word_idx").toInt -> r.getAs[Long]("bits")))
+      fold(BloomStore.bitRows(batch.select(lit("s").as("key"),
+          col(valueCol)), "key", valueCol, bits, hashes, salt))(r =>
+        Seq(r.getAs[Long](1).toInt -> r.getAs[Long](2)))
       out
     }
   }

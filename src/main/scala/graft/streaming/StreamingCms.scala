@@ -12,7 +12,9 @@ import graft.operators.Cms
   * any key's frequency estimate is readable after any batch, and —
   * counters being plain integers — the tracker grid after N batches
   * is IDENTICAL to `Cms.sketch` over the concatenated batches
-  * (spec-asserted).
+  * (spec-asserted). Each batch's input is `Cms.cells`, the per-row
+  * projection `Cms.sketch` groups over, counted map-side by
+  * [[DriverTracker]]'s fold.
   *
   * Driver state: ≤ depth×width (row, bucket) → count entries (4×64 =
   * 256 by default), folded by [[DriverTracker]].
@@ -23,9 +25,11 @@ object StreamingCms {
       extends DriverTracker[(Int, Int), Long](_ + _) {
 
     def update(batch: DataFrame, keyCol: String): Unit =
-      fold(Cms.sketch(batch, keyCol, depth, width))(r =>
-        Seq((r.getAs[Int]("hash_row"), r.getAs[Long]("bucket").toInt) ->
-          r.getAs[Long]("cnt")))
+      // a null key hashes to no bucket: it never reaches a counter,
+      // as in the batch sketch's (row, null) cell
+      fold(Cms.cells(batch, keyCol, depth, width))(r =>
+        if (r.isNullAt(1)) Nil
+        else Seq((r.getInt(0), r.getLong(1).toInt) -> 1L))
 
     /** Point estimate: min over rows of the key's bucket counter —
       * the batch operator's exact arithmetic over the accumulated

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
   * after any batch. Band counts are plain integers, so the streaming
   * score after N batches is IDENTICAL to the batch operator run over
   * the concatenated current slice (spec-asserted, not approximate).
+  * The baseline and every batch are counted the same way: the
+  * per-row [[bands]] projection folded map-side by [[DriverTracker]].
   *
   * Driver state: ≤ `buckets` band → count entries, folded by
   * [[DriverTracker]].
@@ -23,8 +25,7 @@ object StreamingDrift {
 
     /** Add one micro-batch of current-slice values. */
     def update(batch: DataFrame, valueCol: String): Unit =
-      fold(bandCounts(batch, valueCol, boundaries))(r =>
-        Seq(r.getInt(0) -> r.getLong(1)))
+      fold(bands(batch, valueCol, boundaries))(DriverTracker.tally)
 
     /** PSI of the accumulated current histogram vs the baseline
       * (add-one smoothing, the batch operator's exact arithmetic).
@@ -53,13 +54,12 @@ object StreamingDrift {
       else "major"
   }
 
-  /** (band, count) rows: band = number of boundaries below the value. */
-  private def bandCounts(df: DataFrame, valueCol: String,
+  /** (band) per row: the number of boundaries below the value. */
+  private def bands(df: DataFrame, valueCol: String,
       boundaries: Array[Double]): DataFrame =
-    df.groupBy(boundaries.map(c =>
+    df.select(boundaries.map(c =>
         when(col(valueCol).cast("double") > c, 1).otherwise(0))
         .reduce(_ + _).as("__band"))
-      .agg(count(lit(1)).as("__c"))
 
   /** Fit the baseline: equal-population quantile boundaries + band
     * counts from the reference snapshot.
@@ -72,9 +72,8 @@ object StreamingDrift {
       .agg(percentile(col(valueCol).cast("double"),
         typedlit(probs)).as("__c"))
       .collect().head.getSeq[Double](0).toArray
-    val base = new Array[Long](buckets)
-    bandCounts(reference, valueCol, cuts).collect()
-      .foreach(r => base(r.getInt(0)) = r.getLong(1))
-    new Tracker(cuts, base)
+    val counts = DriverTracker.combine(bands(reference, valueCol, cuts),
+      (a: Long, b: Long) => a + b)(DriverTracker.tally[Int])
+    new Tracker(cuts, Array.tabulate(buckets)(counts.getOrElse(_, 0L)))
   }
 }

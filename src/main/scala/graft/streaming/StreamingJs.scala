@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * and the score matches the batch value to far below the round(6)
   * output contract (only double summation ORDER differs;
   * spec-asserted at 1e-9) — the [[StreamingDrift]] contract with
-  * JSD's smooth bounded scale instead of PSI's.
+  * JSD's smooth bounded scale instead of PSI's. The baseline and every
+  * batch are counted from the per-row category, folded map-side by
+  * [[DriverTracker]].
   *
   * Driver state: one long per OBSERVED category (category-bounded,
   * with a loud cap guard — a drifting stream inventing unbounded
@@ -25,7 +27,7 @@ object StreamingJs {
       maxCategories: Int) extends DriverTracker[String, Long](_ + _) {
 
     def update(batch: DataFrame, categoryCol: String): Unit =
-      fold(counts(batch, categoryCol))(r => Seq(r.getString(0) -> r.getLong(1)))
+      fold(categories(batch, categoryCol))(DriverTracker.tally)
 
     override protected def validate(next: Map[String, Long]): Unit =
       require(next.size <= maxCategories,
@@ -55,16 +57,15 @@ object StreamingJs {
     def jsdBits(): Double = jsdNats() / math.log(2.0)
   }
 
-  /** (category, count) rows of one slice. */
-  private def counts(df: DataFrame, categoryCol: String): DataFrame =
-    df.groupBy(col(categoryCol).cast("string").as("__cat"))
-      .agg(count(lit(1)).as("__c"))
+  /** (category) per row: the category as a string. */
+  private def categories(df: DataFrame, categoryCol: String): DataFrame =
+    df.select(col(categoryCol).cast("string").as("__cat"))
 
   /** Freeze the baseline distribution from a reference snapshot. */
   def fitBaseline(reference: DataFrame, categoryCol: String,
       maxCategories: Int = 10000): Tracker = {
-    val base = counts(reference, categoryCol).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val base = DriverTracker.combine(categories(reference, categoryCol),
+      (a: Long, b: Long) => a + b)(DriverTracker.tally[String])
     require(base.size <= maxCategories,
       s"baseline has ${base.size} categories > cap $maxCategories")
     new Tracker(base, maxCategories)

@@ -6,29 +6,47 @@ import org.apache.spark.sql.functions.col
 import graft.operators.Kmv
 
 /** X245 — streaming face of the X244 KMV bottom-k distinct sketch:
-  * each micro-batch contributes its per-group bottom-k hash set, and
-  * the tracker keeps the running bottom-k of the UNION — the defining
+  * each micro-batch contributes its per-group hashes, and the
+  * tracker keeps the running bottom-k of the UNION — the defining
   * KMV property (bottom-k of a union is computable from the parts'
   * bottom-k alone) makes the tracker after N batches IDENTICAL to
   * [[graft.operators.Kmv.sketch]] over the concatenated input
   * (spec-asserted), so the live distinct-count monitor and the batch
-  * audit can never disagree. Each batch's summary is `Kmv.sketch`
-  * itself. State: ≤ k longs per group.
+  * audit can never disagree. Each batch's input is `Kmv.hashRows`,
+  * the per-row (group, hash) projection `Kmv.sketch` ranks; the
+  * map-side fold keeps each partition's bottom-k per group. State:
+  * ≤ k longs per group.
   */
 object StreamingKmv {
 
+  /** Bottom-k of the union of two ascending, distinct vectors: one
+    * linear merge, stopping at k.
+    */
+  private[streaming] def bottomK(k: Int)(a: Vector[Long], b: Vector[Long])
+      : Vector[Long] = {
+    val out = Vector.newBuilder[Long]
+    var i = 0; var j = 0; var n = 0
+    while (n < k && (i < a.length || j < b.length)) {
+      if (j == b.length || (i < a.length && a(i) < b(j))) {
+        out += a(i); i += 1
+      } else {
+        if (i < a.length && a(i) == b(j)) i += 1
+        out += b(j); j += 1
+      }
+      n += 1
+    }
+    out.result()
+  }
+
   final class Tracker private[StreamingKmv] (k: Int, salt: String)
-      extends DriverTracker[String, Vector[Long]](
-        (a, b) => (a ++ b).distinct.sorted.take(k)) {
+      extends DriverTracker[String, Vector[Long]](bottomK(k)) {
     require(k >= 4 && k <= 65536, s"bad k $k")
 
-    // the batch's own bottom-k is enough — anything below rank k in
-    // the union is below rank k in its own batch
     def update(batch: DataFrame, groupCol: String, keyCol: String)
         : Unit =
-      fold(Kmv.sketch(
+      fold(Kmv.hashRows(
           batch.withColumn(groupCol, col(groupCol).cast("string")),
-          groupCol, keyCol, k, salt))(r =>
+          groupCol, keyCol, salt))(r =>
         Seq(r.getString(0) -> Vector(r.getLong(1))))
 
     /** (group, n_kept, est_distinct) — exact below k, the batch

@@ -12,7 +12,9 @@ import graft.operators.LogHistogram
   * tracker state after N batches is IDENTICAL to `LogHistogram
   * .build` over the concatenated batches (spec-asserted) — latency
   * p99 dashboards, length-distribution monitors, SLA alarms, all
-  * from constant state.
+  * from constant state. Each batch's input is
+  * `LogHistogram.bucketRows`, the per-row bucket projection `build`
+  * counts, counted map-side by [[DriverTracker]]'s fold.
   *
   * Driver state: one long per OCCUPIED bucket (≤ 16·octaves ≈ a few
   * hundred for any realistic value range), folded by
@@ -24,9 +26,9 @@ object StreamingLogHistogram {
       extends DriverTracker[Long, Long](_ + _) {
 
     def update(batch: DataFrame, valueCol: String): Unit =
-      fold(LogHistogram.build(
+      fold(LogHistogram.bucketRows(
           batch.select(lit("s").as("k"), col(valueCol)), "k", valueCol,
-          subBits))(r => Seq(r.getAs[Long]("bucket") -> r.getAs[Long]("cnt")))
+          subBits))(r => Seq(r.getLong(1) -> 1L))
 
     /** Quantile estimate from the accumulated store — the batch
       * operator's exact walk (rank floor(q·(n−1))+1, bucket

@@ -36,6 +36,21 @@ class StreamingCmsSpec extends AnyFunSuite {
     assert(tracker.estimate("never-seen") <= tracker.estimate("x"))
   }
 
+  test("streaming CMS: a null key reaches no counter, as in the batch " +
+    "sketch") {
+    val s = spark
+    import s.implicits._
+    val keys = Seq.fill(6)(Option.empty[String]) ++
+      (1 to 30).map(i => Some(s"k${i % 7}"))
+    val tracker = StreamingCms.tracker()
+    tracker.update(keys.toDF("k"), "k")
+    val whole = Cms.sketch(keys.toDF("k"), "k").filter($"bucket".isNotNull)
+      .collect().map(r => (r.getAs[Int]("hash_row"),
+        r.getAs[Long]("bucket").toInt) -> r.getAs[Long]("cnt")).toMap
+    assert(tracker.state == whole)
+    assert(tracker.state.values.sum == 4L * 30L)
+  }
+
   test("streaming CMS point lookups launch no Spark job and equal the " +
     "batch estimate over the concatenated batches") {
     val s = spark
