@@ -56,14 +56,17 @@ object BloomStore {
         expr("shiftleft(1L, cast(__p % 32 as int))").as("__m"))
   }
 
-  /** Build one filter per `keyCol` value over its `valueCol`
-    * members: the OR of [[bitRows]] per (key, word). Output: (key,
-    * word_idx, bits) sparse rows.
+  /** Build one filter per `keyCol` value over the distinct
+    * `valueCol` members: the OR of [[bitRows]] per (key, word), each
+    * distinct (key, value) hashed once. Output: (key, word_idx, bits)
+    * sparse rows.
     */
   def build(df: DataFrame, keyCol: String, valueCol: String,
       bits: Int = 4096, hashes: Int = 3, salt: String = "bloom")
       : DataFrame =
-    bitRows(df, keyCol, valueCol, bits, hashes, salt)
+    bitRows(df.select(col(keyCol).as("key"),
+        col(valueCol).cast("string").as("__v")).distinct(),
+        "key", "__v", bits, hashes, salt)
       .groupBy(col("key"), col("word_idx"))
       .agg(expr("bit_or(__m)").as("bits"))
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -84,20 +86,26 @@ object DriverTracker {
     }
 
   /** `input`'s rows decoded and merged per key, as ONE Spark job with
-    * no exchange: each partition folds its rows into a map, and the
-    * driver merges the partition maps (the map-side partial-aggregate
-    * pattern). Depth 1 because a partition map is bounded by the
-    * tracker's state, so the driver merge is cheap, while a deeper
-    * tree would add a shuffle. Partition results are committed once
+    * no exchange: each partition folds its rows into a mutable map
+    * (`aggregate` gives every partition its own copy of the empty
+    * zero), and the driver merges the partition maps (the map-side
+    * partial-aggregate pattern). Partition results are committed once
     * per partition, so a retried task is not merged twice (no
     * accumulators). The closures capture only `merge` and `decode`,
     * never a tracker.
     */
   private[streaming] def combine[K, V](input: DataFrame,
-      merge: (V, V) => V)(decode: Row => IterableOnce[(K, V)]): Map[K, V] =
-    input.rdd.treeAggregate(Map.empty[K, V])(
-      (acc, r) => mergeInto(acc, decode(r), merge),
-      (a, b) => mergeInto(a, b, merge), 1)
+      merge: (V, V) => V)(decode: Row => IterableOnce[(K, V)]): Map[K, V] = {
+    def add(m: mutable.HashMap[K, V], kvs: IterableOnce[(K, V)])
+        : mutable.HashMap[K, V] = {
+      kvs.iterator.foreach { case (k, v) =>
+        m.update(k, m.get(k).fold(v)(merge(_, v)))
+      }
+      m
+    }
+    input.rdd.aggregate(mutable.HashMap.empty[K, V])(
+      (m, r) => add(m, decode(r)), add(_, _)).toMap
+  }
 
   /** Decode a projection row as one occurrence of its first column. */
   def tally[K](r: Row): Seq[(K, Long)] = Seq(r.get(0).asInstanceOf[K] -> 1L)

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Hll
@@ -32,15 +34,38 @@ object StreamingHll {
       fold(Hll.registerRows(batch, groupCol, keyCol, p))(r =>
         Seq((r.get(0).toString, r.getInt(1)) -> r.getInt(2)))
 
-    /** Current per-group estimates (the batch operator's integer
-      * estimator, bit-identical to [[Hll.estimateFromRegisters]]) over
-      * each group's dense register array (0 where no row landed).
+    /** Each group's dense register array (0 where no row landed),
+      * built once per batch in `settle` for the state it settles, so
+      * reads do not rebuild it.
       */
-    def estimates(): Map[String, Long] =
-      state.groupBy(_._1._1).map { case (g, regs) =>
-        val dense = new Array[Int](1 << p)
-        regs.foreach { case ((_, i), rho) => dense(i) = rho }
-        g -> Hll.estimateFromRegisters(dense, p)
+    @volatile private var dense = (state, Map.empty[String, Array[Int]])
+
+    private def densify(regs: Map[(String, Int), Int])
+        : Map[String, Array[Int]] = {
+      val out = mutable.HashMap.empty[String, Array[Int]]
+      regs.foreach { case ((g, i), rho) =>
+        out.getOrElseUpdate(g, new Array[Int](1 << p))(i) = rho
       }
+      out.toMap
+    }
+
+    override protected def settle(next: Map[(String, Int), Int])
+        : Map[(String, Int), Int] = {
+      dense = (next, densify(next))
+      next
+    }
+
+    /** Current per-group estimates (the batch operator's integer
+      * estimator, bit-identical to [[Hll.estimateFromRegisters]]). A
+      * read between `settle` and the commit of a batch densifies the
+      * committed state itself.
+      */
+    def estimates(): Map[String, Long] = {
+      val (settled, regs) = dense
+      val current = state
+      (if (settled eq current) regs else densify(current)).map {
+        case (g, r) => g -> Hll.estimateFromRegisters(r, p)
+      }
+    }
   }
 }

@@ -20,10 +20,14 @@ import graft.operators.Kmv
 object StreamingKmv {
 
   /** Bottom-k of the union of two ascending, distinct vectors: one
-    * linear merge, stopping at k.
+    * linear merge, stopping at k. A full `a` that `b` cannot enter is
+    * returned as it is, so a row folded into a full bottom-k costs
+    * O(1).
     */
   private[streaming] def bottomK(k: Int)(a: Vector[Long], b: Vector[Long])
-      : Vector[Long] = {
+      : Vector[Long] = if (b.isEmpty || (a.length >= k && b.head >= a(k - 1)))
+    a.take(k)
+  else {
     val out = Vector.newBuilder[Long]
     var i = 0; var j = 0; var n = 0
     while (n < k && (i < a.length || j < b.length)) {

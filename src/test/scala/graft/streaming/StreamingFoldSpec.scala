@@ -177,5 +177,9 @@ class StreamingFoldSpec extends AnyFunSuite {
       assert(StreamingKmv.bottomK(k)(a, b) ==
         (a ++ b).distinct.sorted.take(k), s"k=$k a=$a b=$b")
     }
+    // A full bottom-k that a larger hash cannot enter comes back as is.
+    val full = Vector(1L, 4L, 9L)
+    assert(StreamingKmv.bottomK(3)(full, Vector(9L)) eq full)
+    assert(StreamingKmv.bottomK(3)(full, Vector(12L, 20L)) eq full)
   }
 }
