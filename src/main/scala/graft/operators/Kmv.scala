@@ -28,13 +28,16 @@ import org.apache.spark.sql.functions._
 object Kmv {
 
   /** The sketch's per-row projection: (__g, __h) = (group, 32-bit
-    * salted hash) for every row of `df`, duplicates kept.
+    * salted hash) for every row of `df` with a non-null key,
+    * duplicates kept. A null key has no hash and is not counted, as
+    * in `count(DISTINCT)`.
     */
   def hashRows(df: DataFrame, groupCol: String, keyCol: String,
       salt: String = "kmv"): DataFrame = {
     val h = conv(substring(md5(concat(lit(s"$salt:"),
       col(keyCol).cast("string"))), 1, 8), 16, 10).cast("long")
-    df.select(col(groupCol).as("__g"), h.as("__h"))
+    df.filter(col(keyCol).isNotNull)
+      .select(col(groupCol).as("__g"), h.as("__h"))
   }
 
   /** Bottom-k sketch table: (group, h, rk) with rk = 1..≤k ascending

@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.Materialize
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.{MapSide, Materialize}
 
 /** PageRank over an edge list in PURE INTEGER arithmetic — the
   * web-graph curation signal (Common Crawl ranks its frontier with
@@ -25,15 +28,22 @@ import graft.Materialize
   * O(1) units of mass per node per iteration; that bias is identical
   * everywhere and irrelevant for ranking.
   *
-  * Scale shape: the classic Pregel layout expressed relationally.
-  * Each iteration joins the |V|-row share table into the cached
-  * NARROW (src, dst) edge list (broadcast under `broadcastNodeLimit`
-  * nodes, shuffle join above it) and runs one groupBy(dst)
-  * partial-agg shuffle of skinny (dst, share) rows — the |E| rows
-  * themselves never move. Lineage is truncated with a
-  * `Materialize.cut` per iteration (the [[Dedup.resolveClusters]]
-  * pattern) — 10 iterations over 100 TB of edges never builds a
-  * 10-deep plan. Driver state is two longs (n, base).
+  * Scale shape: [[run]] and [[hits]] keep the narrow (src, dst) edge
+  * list for the call and split on `broadcastNodeLimit`. While the
+  * graph has at most that many nodes, the score table lives on the
+  * driver as a plain map: each iteration (each HITS half-step) is ONE
+  * map-side aggregate job over the kept edges ([[graft.MapSide]]),
+  * whose closures read a broadcast of the previous scores, and the
+  * driver applies the integer update. The |E| rows never move, no
+  * iteration adds to a plan, and the result is a local relation that
+  * reads no cached or checkpointed block. The first job also yields
+  * the node set, so the node count, the empty-graph check and
+  * PageRank's degrees and dangling check cost no job of their own.
+  * Past the limit a score table must not reach the driver, and the
+  * loop stays relational: the score table is shuffle-joined into the
+  * edges, summed by a groupBy shuffle, and cut once per iteration
+  * (the [[Dedup.resolveClusters]] pattern), so 10 iterations over
+  * 100 TB of edges never build a 10-deep plan.
   *
   * Dangling nodes (out-degree 0) would silently lose their mass, so
   * by default the operator fails loudly if any exist; symmetrized
@@ -42,25 +52,27 @@ import graft.Materialize
   */
 object PageRank {
 
+  private val plus = (a: Long, b: Long) => a + b
+
   /** Ranks after `iters` iterations: (node, rank) with rank on the
-    * `scale` integer grid. `edges` is a directed edge list; pass the
-    * symmetrized union for undirected ranking and set `symmetric` —
-    * then the node set and the "no inbound mass" left join both
-    * collapse into the degree table (src set = dst set = node set),
-    * which cut setup from 3.7 s to 1.5 s at sf0.1.
+    * `scale` integer grid. `edges` is a directed edge list; duplicate
+    * edges count once each toward the out-degree and the sums. Pass
+    * the symmetrized union for undirected ranking and set `symmetric`:
+    * the node set is then the source set, and a node no edge reaches
+    * drops out after the first iteration (a symmetric graph has none).
     *
-    * Iteration shape (measured fastest of four layouts at sf0.1):
-    * the |V|-row share table (ranks ⋈ degrees, both skinny) is
-    * explicitly BROADCAST into the kept NARROW (src, dst) edge
-    * table — AQE cannot pick the broadcast itself because a
-    * checkpointed side has no stats — then one map-side-combined
-    * groupBy(dst) shuffle of skinny pairs. The |E| rows never move.
-    * Past `broadcastNodeLimit` nodes the share join degrades to a
-    * plain shuffle join against the kept edge partitioning (a
-    * billion-node share table must not be collected). A
-    * `Materialize.cut` per iteration truncates lineage (the
-    * [[Dedup.resolveClusters]] pattern); spacing checkpoints out
-    * measured SLOWER — the deep tail re-executes broadcast subplans.
+    * A null endpoint is a node of its own that no edge reaches and
+    * that sends nothing: it counts in n, is dangling, and, when
+    * dangling nodes are allowed, is returned with rank `base`. An edge
+    * (u, null) still counts in u's out-degree.
+    *
+    * At most `broadcastNodeLimit` nodes: one job yields the degrees,
+    * the node set and the dangling check, then each iteration is one
+    * job (see the object doc). Past it: the degree table is joined
+    * onto the kept edge list once, then each iteration shuffle-joins
+    * the rank table into it and runs one groupBy(dst) partial-agg
+    * shuffle of skinny (dst, share) pairs, with a `Materialize.cut`
+    * per iteration.
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000000L, dampNum: Long = 17L,
@@ -70,11 +82,66 @@ object PageRank {
       Materialize.scoped { keep =>
     require(iters >= 0 && iters <= 100, s"iters=$iters out of [0,100]")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < damping < 1")
-    val spark = edges.sparkSession
-    import spark.implicits._
-
     val e = keep(edges.select(col(srcCol).as("__src"),
       col(dstCol).as("__dst")))
+    // out-degree of every node, 0 for one that is only a target; in a
+    // symmetric graph the sources are the node set
+    MapSide.combineAtMost(e.rdd, broadcastNodeLimit, plus) { r =>
+      if (symmetric) Iterator.single(r.get(0) -> 1L)
+      else Iterator(r.get(0) -> 1L, r.get(1) -> 0L)
+    } match {
+      case Some(deg) => runOnDriver(e, deg, iters, scale, dampNum, dampDen,
+        requireNoDangling, symmetric)
+      case None => runRelational(e, keep, iters, scale, dampNum, dampDen,
+        requireNoDangling, symmetric)
+    }
+  }
+
+  /** [[run]] on a driver-held rank table, given the out-degree of
+    * every node (of every source, in a symmetric graph).
+    */
+  private def runOnDriver(e: DataFrame, deg: Map[Any, Long], iters: Int,
+      scale: Long, dampNum: Long, dampDen: Long,
+      requireNoDangling: Boolean, symmetric: Boolean): DataFrame = {
+    val nodes = deg.keys.toSeq
+    if (!symmetric && requireNoDangling) {
+      val danglingCount = deg.count { case (k, d) => k == null || d == 0 }
+      require(danglingCount == 0,
+        s"$danglingCount dangling node(s) (out-degree 0) — symmetrize " +
+          "the graph or handle their mass explicitly")
+    }
+    val n = nodes.size.toLong
+    require(n > 0, "empty graph")
+    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
+    var ranks: Map[Any, Long] = nodes.map(_ -> scale / n).toMap
+    for (_ <- 1 to iters) {
+      // only a node with out-edges sends; null never does
+      val shares = ranks.collect {
+        case (u, r) if u != null && deg.getOrElse(u, 0L) > 0 =>
+          u -> r / deg(u)
+      }
+      val sums = sumAlong(e, shares, 0, 1)
+      def rank(s: Long): Long = base + (dampNum * s) / dampDen
+      ranks =
+        if (symmetric) sums.map { case (v, s) => v -> rank(s) }
+        else nodes.map { v =>
+          v -> rank(if (v == null) 0L else sums.getOrElse(v, 0L))
+        }.toMap
+    }
+    val node =
+      if (symmetric) e.schema("__src")
+      else nodeColumn(e).schema.head
+    local(e, StructType(Seq(node.copy(name = "node"),
+      StructField("rank", LongType, nullable = iters > 0))),
+      ranks.toSeq.map { case (v, r) => Row(v, r) })
+  }
+
+  /** [[run]] past `broadcastNodeLimit`: the relational loop. */
+  private def runRelational(e: DataFrame, keep: Materialize.Keep,
+      iters: Int, scale: Long, dampNum: Long, dampDen: Long,
+      requireNoDangling: Boolean, symmetric: Boolean): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
     val deg = keep(e.groupBy($"__src").agg(count(lit(1)).as("__deg")))
 
     // symmetric + no dangling ⇒ src set = node set; otherwise build
@@ -82,8 +149,7 @@ object PageRank {
     val nodes =
       if (symmetric) deg.select($"__src".as("node"))
       else {
-        val ns = keep(e.select($"__src".as("node"))
-          .union(e.select($"__dst".as("node"))).distinct())
+        val ns = keep(nodeColumn(e).distinct())
         if (requireNoDangling) {
           val danglingCount = ns
             .join(deg.select($"__src".as("node")), Seq("node"), "left_anti")
@@ -98,22 +164,15 @@ object PageRank {
     val n = if (symmetric) deg.count() else nodes.count()
     require(n > 0, "empty graph")
     val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    val bcastShares = n <= broadcastNodeLimit
 
-    // r15: attach the out-degree to the cached edge list ONCE, so
-    // each iteration needs a single broadcast (the |V|-row rank
-    // table) instead of two (degrees into ranks, then shares into
-    // edges) — the per-iteration broadcast-build jobs were half the
-    // iteration cost at sf0.1. share(u) = rank div deg now evaluates
-    // per EDGE instead of per node: the identical integer division
-    // on the identical operands, so every partial sum is unchanged.
-    val degSide0 = if (bcastShares) broadcast(deg) else deg
-    val e2 = keep(e.join(degSide0, Seq("__src")))
+    // the out-degree rides on the kept edge list, so share(u) =
+    // rank div deg evaluates per edge: the same integer division on
+    // the same operands as per node
+    val e2 = keep(e.join(deg, Seq("__src")))
     var ranks =
       Materialize.cut(nodes.select($"node", lit(scale / n).as("rank")))
     for (_ <- 1 to iters) {
-      val rSide = if (bcastShares) broadcast(ranks) else ranks
-      val sums = e2.join(rSide, $"node" === $"__src")
+      val sums = e2.join(ranks, $"node" === $"__src")
         .groupBy($"__dst".as("node"))
         .agg(sum(expr("rank div __deg")).as("__s"))
       val next =
@@ -147,7 +206,7 @@ object PageRank {
     * groupBy(node, label) count with an argmax via max(struct(count,
     * -label)) — per-node aggregation, never a global window.
     *
-    * Scale shape: [[run]]'s Pregel layout — per iteration one
+    * Scale shape: the relational Pregel layout — per iteration one
     * broadcast-or-shuffle join of the |V|-row label table into the
     * kept narrow edge list plus one (node, label) partial agg;
     * `Materialize.cut` truncates lineage. Driver state is nothing.
@@ -202,45 +261,75 @@ object PageRank {
     * two-sided importance [[run]]'s single PageRank score conflates.
     *
     * Determinism contract (the [[run]] fixed-point convention): all
-    * scores are longs; each half-step is one equi-join + sum, then an
-    * in-plan renormalization `(score·scale) div total` (decimal
-    * product — indeg·scale² exceeds a long) against a one-row
-    * broadcast total; a `Materialize.cut` per iteration truncates
-    * lineage. Nodes with no in-edges hold authority 0, no out-edges
-    * hub 0; the oracle replays the identical integer chain unrolled.
+    * scores are longs over the DISTINCT edges, hubs start at `scale`,
+    * and each half-step sums the previous scores along the edges and
+    * renormalizes to `(score·scale) div total` (exact: indeg·scale²
+    * exceeds a long). Nodes with no in-edges hold authority 0, no
+    * out-edges hub 0; the oracle replays the identical integer chain
+    * unrolled. An edge with a null endpoint adds nothing, its other
+    * endpoint is still a node, and null is not one.
+    *
+    * At most `broadcastNodeLimit` nodes: each half-step is one job
+    * and the renormalization runs on the driver in `BigInt` (see the
+    * object doc). Past it: each half-step shuffle-joins the score
+    * table into the kept edges and groups by the other endpoint, then
+    * `Materialize.cutObserving` stores the raw scores and observes
+    * their total in the same job, and the renormalization is a lazy
+    * `decimal(38,0)` projection over the cut, so the join and
+    * aggregate run once per half-step.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000L,
       broadcastNodeLimit: Long = 10000000L): DataFrame =
       Materialize.scoped { keep =>
     require(iters >= 1 && iters <= 100, s"iters=$iters out of [1,100]")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val dec = "decimal(38,0)"
     val e = keep(edges.select(col(srcCol).as("__src"),
       col(dstCol).as("__dst")).distinct())
-    require(e.limit(1).count() > 0, "empty graph")
-    val nodes = keep(e.select($"__src".as("node"))
-      .union(e.select($"__dst".as("node"))).distinct())
-    // r16 ([[run]]'s r15 lesson, guide §3.1): the score table is
-    // |V|-row and skinny — broadcast it into the kept |E| edge
-    // list so the edges never shuffle (each half-step was paying a
-    // full |E| exchange; AQE cannot pick the broadcast itself because
-    // a checkpointed side has no stats). Past `broadcastNodeLimit`
-    // nodes the join degrades to the old shuffle form — a billion-node
-    // score table must not be collected.
-    val bcastScores = nodes.count() <= broadcastNodeLimit
-    def scoreSide(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
+    // first authority half-step under uniform hubs: each edge sends
+    // `scale` to its target and 0 to its source, so its keys are the
+    // node set
+    MapSide.combineAtMost(e.rdd, broadcastNodeLimit, plus) { r =>
+      val (u, v) = (r.get(0), r.get(1))
+      Iterator(u -> 0L, v -> (if (u == null) 0L else scale))
+        .filter(_._1 != null)
+    } match {
+      case Some(a0) => hitsOnDriver(e, a0, iters, scale)
+      case None => hitsRelational(e, keep, iters, scale)
+    }
+  }
 
-    // r16 (guide §2.4, VERDICT r15 item 2): the L1 total is OBSERVED
-    // during the half-step's own checkpoint job
-    // (`Materialize.cutObserving`) instead of costing a separate
-    // one-row aggregate job + broadcast build per half-step — one
-    // action per half-step. The total is the identical long sum over
-    // the identical rows; the renormalization becomes a literal
-    // projection with the same decimal `div` chain, so every score is
-    // bit-identical.
+  /** [[hits]] on driver-held score tables, given the raw authorities
+    * of the first half-step.
+    */
+  private def hitsOnDriver(e: DataFrame, a0: Map[Any, Long], iters: Int,
+      scale: Long): DataFrame = {
+    require(a0.nonEmpty, "empty graph")
+    // null is no node: what an edge sends it is dropped
+    def renorm(sums: Map[Any, Long]): Map[Any, Long] = {
+      val raw = sums.filter(_._1 != null)
+      val total = BigInt(raw.values.sum)
+      raw.map { case (k, x) => k -> (BigInt(x) * scale / total).toLong }
+    }
+    var auths = renorm(a0)
+    var hubs = renorm(sumAlong(e, auths, 1, 0))
+    for (_ <- 2 to iters) {
+      auths = renorm(sumAlong(e, hubs, 0, 1))
+      hubs = renorm(sumAlong(e, auths, 1, 0))
+    }
+    val hitsSchema = StructType(Seq(nodeColumn(e).schema.head,
+      StructField("hub", LongType), StructField("authority", LongType)))
+    local(e, hitsSchema, a0.keys.toSeq.map { v =>
+      Row(v, hubs.getOrElse(v, 0L), auths.getOrElse(v, 0L))
+    })
+  }
+
+  /** [[hits]] past `broadcastNodeLimit`: the relational loop. */
+  private def hitsRelational(e: DataFrame, keep: Materialize.Keep,
+      iters: Int, scale: Long): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val dec = "decimal(38,0)"
+    val nodes = keep(nodeColumn(e).distinct())
     def renormLit(raw: DataFrame, c: String, tot: Long): DataFrame =
       raw.select($"node", expr(
         s"cast((cast($c as $dec) * ${scale}L) div cast(${tot}L as $dec) " +
@@ -248,18 +337,9 @@ object PageRank {
 
     var hubs = Materialize.cut(nodes.select($"node", lit(scale).as("hub")))
     var auths: DataFrame = null
-    // r15 (guide §2.4): checkpoint the RAW half-step scores and keep
-    // the renormalization LAZY over the checkpointed frame. The r14
-    // layout checkpointed renorm(raw), whose plan contains raw twice
-    // (once under the broadcast total, once as the probe side), so
-    // every half-step executed its |E|-join + aggregate TWICE; now the
-    // heavy join/agg runs once per half-step and downstream passes pay
-    // only a narrow projection. Integer chain unchanged — same sums,
-    // same totals, same div — so ranks stay bit-identical to the
-    // oracle.
     for (_ <- 1 to iters) {
       val (aRaw, aTot) = Materialize.cutObserving(nodes.join(
-        e.join(scoreSide(hubs), $"__src" === $"node")
+        e.join(hubs, $"__src" === $"node")
           .groupBy($"__dst").agg(sum($"hub").as("__a"))
           .select($"__dst".as("node"), $"__a"),
         Seq("node"), "left")
@@ -267,7 +347,7 @@ object PageRank {
         sum($"auth"))
       auths = renormLit(aRaw, "auth", aTot)
       val (hRaw, hTot) = Materialize.cutObserving(nodes.join(
-        e.join(scoreSide(auths), $"__dst" === $"node")
+        e.join(auths, $"__dst" === $"node")
           .groupBy($"__src").agg(sum($"auth").as("__h"))
           .select($"__src".as("node"), $"__h"),
         Seq("node"), "left")
@@ -278,4 +358,27 @@ object PageRank {
     hubs.join(auths, Seq("node"))
       .select($"node", $"hub", $"auth".as("authority"))
   }
+
+  /** Σ of `scores` along every kept edge, from its endpoint at column
+    * `from` to the one at `to`: one map-side aggregate job whose
+    * closures read only a broadcast of `scores`. An endpoint with no
+    * score sends nothing; a null target is summed under the null key.
+    */
+  private def sumAlong(e: DataFrame, scores: Map[Any, Long], from: Int,
+      to: Int): Map[Any, Long] = {
+    val b = e.sparkSession.sparkContext.broadcast(scores)
+    try MapSide.combine(e.rdd, plus) { r =>
+      b.value.get(r.get(from)).map(r.get(to) -> _)
+    } finally b.destroy()
+  }
+
+  /** Every endpoint of the kept edges as one `node` column (the
+    * union's type), duplicates kept.
+    */
+  private def nodeColumn(e: DataFrame): DataFrame =
+    e.select(col("__src").as("node")).union(e.select(col("__dst").as("node")))
+
+  /** `rows` as a local relation under `schema`. */
+  private def local(e: DataFrame, schema: StructType, rows: Seq[Row])
+      : DataFrame = e.sparkSession.createDataFrame(rows.asJava, schema)
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
+
+import graft.MapSide
 
 /** The driver-side fold behind every streaming sketch tracker (CMS,
   * HLL, KMV, log-histogram, Benford, Bloom, PSI, JS, McNemar, PII,
@@ -13,7 +13,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * state), an associative `merge` of two values under one key, and
   * its reads. This class folds the input map-side: each partition
   * merges its decoded rows into a keyed map, the driver merges the
-  * partition maps (one Spark job, no exchange; see [[combine]]) into
+  * partition maps (one Spark job, no exchange; see
+  * [[graft.MapSide.combine]]) into
   * the keyed state `K → V`, validates the candidate state and only
   * then commits it.
   *
@@ -68,7 +69,7 @@ abstract class DriverTracker[K, V](merge: (V, V) => V) {
       decode: Row => IterableOnce[(K, V)]): Unit = {
     val id = pinned.getOrElse(applied + 1)
     if (id > applied) {
-      val batch = DriverTracker.combine(input, merge)(decode)
+      val batch = MapSide.combine(input.rdd, merge)(decode)
       val next = settle(DriverTracker.mergeInto(folded, batch, merge))
       validate(next)
       prior = folded; folded = next; applied = id
@@ -84,28 +85,6 @@ object DriverTracker {
     kvs.iterator.foldLeft(m) { case (acc, (k, v)) =>
       acc.updated(k, acc.get(k).fold(v)(merge(_, v)))
     }
-
-  /** `input`'s rows decoded and merged per key, as ONE Spark job with
-    * no exchange: each partition folds its rows into a mutable map
-    * (`aggregate` gives every partition its own copy of the empty
-    * zero), and the driver merges the partition maps (the map-side
-    * partial-aggregate pattern). Partition results are committed once
-    * per partition, so a retried task is not merged twice (no
-    * accumulators). The closures capture only `merge` and `decode`,
-    * never a tracker.
-    */
-  private[streaming] def combine[K, V](input: DataFrame,
-      merge: (V, V) => V)(decode: Row => IterableOnce[(K, V)]): Map[K, V] = {
-    def add(m: mutable.HashMap[K, V], kvs: IterableOnce[(K, V)])
-        : mutable.HashMap[K, V] = {
-      kvs.iterator.foreach { case (k, v) =>
-        m.update(k, m.get(k).fold(v)(merge(_, v)))
-      }
-      m
-    }
-    input.rdd.aggregate(mutable.HashMap.empty[K, V])(
-      (m, r) => add(m, decode(r)), add(_, _)).toMap
-  }
 
   /** Decode a projection row as one occurrence of its first column. */
   def tally[K](r: Row): Seq[(K, Long)] = Seq(r.get(0).asInstanceOf[K] -> 1L)

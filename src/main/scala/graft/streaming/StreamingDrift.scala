@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.MapSide
+
 /** Streaming face of X131 ([[graft.operators.CorpusOps.psi]]): the
   * PSI monitoring loop as it actually deploys — the BASELINE (band
   * boundaries + band counts) is fitted once from a reference
@@ -72,7 +74,7 @@ object StreamingDrift {
       .agg(percentile(col(valueCol).cast("double"),
         typedlit(probs)).as("__c"))
       .collect().head.getSeq[Double](0).toArray
-    val counts = DriverTracker.combine(bands(reference, valueCol, cuts),
+    val counts = MapSide.combine(bands(reference, valueCol, cuts).rdd,
       (a: Long, b: Long) => a + b)(DriverTracker.tally[Int])
     new Tracker(cuts, Array.tabulate(buckets)(counts.getOrElse(_, 0L)))
   }

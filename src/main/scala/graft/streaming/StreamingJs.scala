@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.MapSide
+
 /** Streaming face of X150 ([[graft.operators.CorpusOps.jsDivergence]]):
   * the baseline categorical distribution is frozen from a reference
   * snapshot, each micro-batch adds its category counts to the
@@ -64,7 +66,7 @@ object StreamingJs {
   /** Freeze the baseline distribution from a reference snapshot. */
   def fitBaseline(reference: DataFrame, categoryCol: String,
       maxCategories: Int = 10000): Tracker = {
-    val base = DriverTracker.combine(categories(reference, categoryCol),
+    val base = MapSide.combine(categories(reference, categoryCol).rdd,
       (a: Long, b: Long) => a + b)(DriverTracker.tally[String])
     require(base.size <= maxCategories,
       s"baseline has ${base.size} categories > cap $maxCategories")

@@ -55,7 +55,8 @@ class StreamingFoldSpec extends AnyFunSuite {
 
   /** Jobs `body` runs: (all jobs, fold jobs, shuffle bytes of all
     * jobs, shuffle bytes of the fold jobs). A fold job is one whose
-    * call site is in `DriverTracker`.
+    * call site is in `graft.MapSide`, where `DriverTracker.fold` runs
+    * its aggregate.
     */
   private def jobsOf(body: => Any): (Int, Int, Long, Long) = {
     val sc = spark.sparkContext
@@ -70,7 +71,7 @@ class StreamingFoldSpec extends AnyFunSuite {
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group) {
           jobs.incrementAndGet()
-          val fold = e.stageInfos.exists(_.name.contains("DriverTracker"))
+          val fold = e.stageInfos.exists(_.name.contains("MapSide"))
           if (fold) folds.incrementAndGet()
           e.stageIds.foreach(stages.put(_, fold))
         }
@@ -107,7 +108,7 @@ class StreamingFoldSpec extends AnyFunSuite {
       assert(jobs == 1 && allBytes == 0L,
         s"$jobs jobs, $allBytes shuffle bytes")
     assert(folds == 1 && foldBytes == 0L,
-      s"$folds jobs called from DriverTracker, $foldBytes shuffle bytes")
+      s"$folds jobs called from MapSide, $foldBytes shuffle bytes")
     val state = t.state
     val (replayJobs, replayFolds, _, _) =
       jobsOf(t.atBatch(0L)(law.update(t, batch)))

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{ListenerDrain, Success}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,6 +43,33 @@ class StreamingKmvMcNemarSpec extends AnyFunSuite {
     got.foreach { case (g, _, _) =>
       assert(t.state(g) == batchSets(g), s"bottom-k diverged for $g")
     }
+  }
+
+  test("StreamingKmv and batch Kmv both skip a null key, and no task " +
+    "fails") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq(("g", Some("a")), ("g", None), ("g", Some("b")))
+      .toDF("g", "k")
+    val sc = spark.sparkContext
+    val failedTasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success) failedTasks.incrementAndGet()
+    }
+    val t = StreamingKmv.tracker(k = 4, salt = "kmv")
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { t.update(rows, "g", "k"); ListenerDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    assert(failedTasks.get == 0)
+    val sk = Kmv.sketch(rows, "g", "k", k = 4, salt = "kmv")
+    val batch = Kmv.estimate(sk, "g", k = 4).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(t.report().map(x => (x._1, x._3)) == batch)
+    assert(t.report() == Seq(("g", 2, 2.0)))
+    assert(t.state("g") ==
+      sk.collect().map(_.getAs[Long]("h")).sorted.toVector)
   }
 
   test("StreamingMcNemar tracker == batch mcnemar over the " +
