@@ -13,8 +13,8 @@ import org.apache.spark.rdd.RDD
   * accumulators). The closures capture only `merge` and `decode`.
   *
   * The driver-side streaming trackers fold each micro-batch with it,
-  * and PageRank and HITS run each iteration with it while their score
-  * table fits on the driver.
+  * and HITS runs each half-step with it while its score tables fit on
+  * the driver.
   */
 object MapSide {
 
@@ -23,22 +23,28 @@ object MapSide {
       decode: T => IterableOnce[(K, V)]): Map[K, V] =
     combineAtMost(rdd, Long.MaxValue, merge)(decode).get
 
-  /** [[combine]], or None once more than `maxKeys` distinct keys show
-    * up: a partition that passes the bound sends no map, so neither an
-    * executor nor the driver holds more than about `maxKeys` entries.
+  /** [[combine]], or None when the partitions could send the driver
+    * more than `maxKeys` entries in all. Each partition may send at
+    * most `maxKeys / numPartitions` keys, and one that passes that
+    * sends no map, so neither the task results in flight nor the
+    * merged map hold more than `maxKeys` entries. The bound is on what
+    * is sent, not on the distinct keys: the same key counts once per
+    * partition that sees it, and a skewed RDD gives up with fewer
+    * than `maxKeys` distinct keys.
     */
   def combineAtMost[T, K, V](rdd: RDD[T], maxKeys: Long,
       merge: (V, V) => V)(decode: T => IterableOnce[(K, V)])
       : Option[Map[K, V]] = {
+    val perPartition = maxKeys / math.max(1, rdd.getNumPartitions)
     def add(acc: Option[mutable.HashMap[K, V]], kvs: IterableOnce[(K, V)])
-        : Option[mutable.HashMap[K, V]] = acc.flatMap { m =>
+        : Option[mutable.HashMap[K, V]] = acc.map { m =>
       kvs.iterator.foreach { case (k, v) =>
         m.update(k, m.get(k).fold(v)(merge(_, v)))
       }
-      if (m.size > maxKeys) None else Some(m)
+      m
     }
     rdd.aggregate(Option(mutable.HashMap.empty[K, V]))(
-      (m, t) => add(m, decode(t)),
+      (m, t) => add(m, decode(t)).filter(_.size <= perPartition),
       (a, b) => b.flatMap(m => add(a, m))).map(_.toMap)
   }
 }

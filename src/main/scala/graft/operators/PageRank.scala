@@ -28,22 +28,21 @@ import graft.{MapSide, Materialize}
   * O(1) units of mass per node per iteration; that bias is identical
   * everywhere and irrelevant for ranking.
   *
-  * Scale shape: [[run]] and [[hits]] keep the narrow (src, dst) edge
-  * list for the call and split on `broadcastNodeLimit`. While the
-  * graph has at most that many nodes, the score table lives on the
-  * driver as a plain map: each iteration (each HITS half-step) is ONE
-  * map-side aggregate job over the kept edges ([[graft.MapSide]]),
-  * whose closures read a broadcast of the previous scores, and the
-  * driver applies the integer update. The |E| rows never move, no
-  * iteration adds to a plan, and the result is a local relation that
-  * reads no cached or checkpointed block. The first job also yields
-  * the node set, so the node count, the empty-graph check and
-  * PageRank's degrees and dangling check cost no job of their own.
-  * Past the limit a score table must not reach the driver, and the
-  * loop stays relational: the score table is shuffle-joined into the
-  * edges, summed by a groupBy shuffle, and cut once per iteration
-  * (the [[Dedup.resolveClusters]] pattern), so 10 iterations over
-  * 100 TB of edges never build a 10-deep plan.
+  * Scale shape: [[run]] is the classic Pregel layout expressed
+  * relationally. Each iteration joins the |V|-row share table into
+  * the cached NARROW (src, dst) edge list (broadcast under
+  * `broadcastNodeLimit` nodes, shuffle join above it) and runs one
+  * groupBy(dst) partial-agg shuffle of skinny (dst, share) rows — the
+  * |E| rows themselves never move. Lineage is truncated with a
+  * `Materialize.cut` per iteration (the [[Dedup.resolveClusters]]
+  * pattern) — 10 iterations over 100 TB of edges never builds a
+  * 10-deep plan. Driver state is two longs (n, base).
+  *
+  * [[hits]] holds its score tables on the driver while the graph is
+  * small enough (see its doc): each half-step is ONE map-side
+  * aggregate job over the kept edges ([[graft.MapSide]]) whose
+  * closures read a broadcast of the previous scores, and the result
+  * is a local relation that reads no cached or checkpointed block.
   *
   * Dangling nodes (out-degree 0) would silently lose their mass, so
   * by default the operator fails loudly if any exist; symmetrized
@@ -55,24 +54,24 @@ object PageRank {
   private val plus = (a: Long, b: Long) => a + b
 
   /** Ranks after `iters` iterations: (node, rank) with rank on the
-    * `scale` integer grid. `edges` is a directed edge list; duplicate
-    * edges count once each toward the out-degree and the sums. Pass
-    * the symmetrized union for undirected ranking and set `symmetric`:
-    * the node set is then the source set, and a node no edge reaches
-    * drops out after the first iteration (a symmetric graph has none).
+    * `scale` integer grid. `edges` is a directed edge list; pass the
+    * symmetrized union for undirected ranking and set `symmetric` —
+    * then the node set and the "no inbound mass" left join both
+    * collapse into the degree table (src set = dst set = node set),
+    * which cut setup from 3.7 s to 1.5 s at sf0.1.
     *
-    * A null endpoint is a node of its own that no edge reaches and
-    * that sends nothing: it counts in n, is dangling, and, when
-    * dangling nodes are allowed, is returned with rank `base`. An edge
-    * (u, null) still counts in u's out-degree.
-    *
-    * At most `broadcastNodeLimit` nodes: one job yields the degrees,
-    * the node set and the dangling check, then each iteration is one
-    * job (see the object doc). Past it: the degree table is joined
-    * onto the kept edge list once, then each iteration shuffle-joins
-    * the rank table into it and runs one groupBy(dst) partial-agg
-    * shuffle of skinny (dst, share) pairs, with a `Materialize.cut`
-    * per iteration.
+    * Iteration shape (measured fastest of four layouts at sf0.1):
+    * the |V|-row share table (ranks ⋈ degrees, both skinny) is
+    * explicitly BROADCAST into the kept NARROW (src, dst) edge
+    * table — AQE cannot pick the broadcast itself because a
+    * checkpointed side has no stats — then one map-side-combined
+    * groupBy(dst) shuffle of skinny pairs. The |E| rows never move.
+    * Past `broadcastNodeLimit` nodes the share join degrades to a
+    * plain shuffle join against the kept edge partitioning (a
+    * billion-node share table must not be collected). A
+    * `Materialize.cut` per iteration truncates lineage (the
+    * [[Dedup.resolveClusters]] pattern); spacing checkpoints out
+    * measured SLOWER — the deep tail re-executes broadcast subplans.
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000000L, dampNum: Long = 17L,
@@ -82,66 +81,11 @@ object PageRank {
       Materialize.scoped { keep =>
     require(iters >= 0 && iters <= 100, s"iters=$iters out of [0,100]")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < damping < 1")
+    val spark = edges.sparkSession
+    import spark.implicits._
+
     val e = keep(edges.select(col(srcCol).as("__src"),
       col(dstCol).as("__dst")))
-    // out-degree of every node, 0 for one that is only a target; in a
-    // symmetric graph the sources are the node set
-    MapSide.combineAtMost(e.rdd, broadcastNodeLimit, plus) { r =>
-      if (symmetric) Iterator.single(r.get(0) -> 1L)
-      else Iterator(r.get(0) -> 1L, r.get(1) -> 0L)
-    } match {
-      case Some(deg) => runOnDriver(e, deg, iters, scale, dampNum, dampDen,
-        requireNoDangling, symmetric)
-      case None => runRelational(e, keep, iters, scale, dampNum, dampDen,
-        requireNoDangling, symmetric)
-    }
-  }
-
-  /** [[run]] on a driver-held rank table, given the out-degree of
-    * every node (of every source, in a symmetric graph).
-    */
-  private def runOnDriver(e: DataFrame, deg: Map[Any, Long], iters: Int,
-      scale: Long, dampNum: Long, dampDen: Long,
-      requireNoDangling: Boolean, symmetric: Boolean): DataFrame = {
-    val nodes = deg.keys.toSeq
-    if (!symmetric && requireNoDangling) {
-      val danglingCount = deg.count { case (k, d) => k == null || d == 0 }
-      require(danglingCount == 0,
-        s"$danglingCount dangling node(s) (out-degree 0) — symmetrize " +
-          "the graph or handle their mass explicitly")
-    }
-    val n = nodes.size.toLong
-    require(n > 0, "empty graph")
-    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    var ranks: Map[Any, Long] = nodes.map(_ -> scale / n).toMap
-    for (_ <- 1 to iters) {
-      // only a node with out-edges sends; null never does
-      val shares = ranks.collect {
-        case (u, r) if u != null && deg.getOrElse(u, 0L) > 0 =>
-          u -> r / deg(u)
-      }
-      val sums = sumAlong(e, shares, 0, 1)
-      def rank(s: Long): Long = base + (dampNum * s) / dampDen
-      ranks =
-        if (symmetric) sums.map { case (v, s) => v -> rank(s) }
-        else nodes.map { v =>
-          v -> rank(if (v == null) 0L else sums.getOrElse(v, 0L))
-        }.toMap
-    }
-    val node =
-      if (symmetric) e.schema("__src")
-      else nodeColumn(e).schema.head
-    local(e, StructType(Seq(node.copy(name = "node"),
-      StructField("rank", LongType, nullable = iters > 0))),
-      ranks.toSeq.map { case (v, r) => Row(v, r) })
-  }
-
-  /** [[run]] past `broadcastNodeLimit`: the relational loop. */
-  private def runRelational(e: DataFrame, keep: Materialize.Keep,
-      iters: Int, scale: Long, dampNum: Long, dampDen: Long,
-      requireNoDangling: Boolean, symmetric: Boolean): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
     val deg = keep(e.groupBy($"__src").agg(count(lit(1)).as("__deg")))
 
     // symmetric + no dangling ⇒ src set = node set; otherwise build
@@ -149,7 +93,8 @@ object PageRank {
     val nodes =
       if (symmetric) deg.select($"__src".as("node"))
       else {
-        val ns = keep(nodeColumn(e).distinct())
+        val ns = keep(e.select($"__src".as("node"))
+          .union(e.select($"__dst".as("node"))).distinct())
         if (requireNoDangling) {
           val danglingCount = ns
             .join(deg.select($"__src".as("node")), Seq("node"), "left_anti")
@@ -164,15 +109,22 @@ object PageRank {
     val n = if (symmetric) deg.count() else nodes.count()
     require(n > 0, "empty graph")
     val base = ((dampDen - dampNum) * scale) / (dampDen * n)
+    val bcastShares = n <= broadcastNodeLimit
 
-    // the out-degree rides on the kept edge list, so share(u) =
-    // rank div deg evaluates per edge: the same integer division on
-    // the same operands as per node
-    val e2 = keep(e.join(deg, Seq("__src")))
+    // r15: attach the out-degree to the cached edge list ONCE, so
+    // each iteration needs a single broadcast (the |V|-row rank
+    // table) instead of two (degrees into ranks, then shares into
+    // edges) — the per-iteration broadcast-build jobs were half the
+    // iteration cost at sf0.1. share(u) = rank div deg now evaluates
+    // per EDGE instead of per node: the identical integer division
+    // on the identical operands, so every partial sum is unchanged.
+    val degSide0 = if (bcastShares) broadcast(deg) else deg
+    val e2 = keep(e.join(degSide0, Seq("__src")))
     var ranks =
       Materialize.cut(nodes.select($"node", lit(scale / n).as("rank")))
     for (_ <- 1 to iters) {
-      val sums = e2.join(ranks, $"node" === $"__src")
+      val rSide = if (bcastShares) broadcast(ranks) else ranks
+      val sums = e2.join(rSide, $"node" === $"__src")
         .groupBy($"__dst".as("node"))
         .agg(sum(expr("rank div __deg")).as("__s"))
       val next =
@@ -206,7 +158,7 @@ object PageRank {
     * groupBy(node, label) count with an argmax via max(struct(count,
     * -label)) — per-node aggregation, never a global window.
     *
-    * Scale shape: the relational Pregel layout — per iteration one
+    * Scale shape: [[run]]'s Pregel layout — per iteration one
     * broadcast-or-shuffle join of the |V|-row label table into the
     * kept narrow edge list plus one (node, label) partial agg;
     * `Materialize.cut` truncates lineage. Driver state is nothing.
@@ -267,16 +219,26 @@ object PageRank {
     * exceeds a long). Nodes with no in-edges hold authority 0, no
     * out-edges hub 0; the oracle replays the identical integer chain
     * unrolled. An edge with a null endpoint adds nothing, its other
-    * endpoint is still a node, and null is not one.
+    * endpoint is still a node, and null is not one. A half-step whose
+    * total is 0 (no edge has two endpoints, or `scale` is too small
+    * for the node count) fails the call.
     *
-    * At most `broadcastNodeLimit` nodes: each half-step is one job
-    * and the renormalization runs on the driver in `BigInt` (see the
-    * object doc). Past it: each half-step shuffle-joins the score
-    * table into the kept edges and groups by the other endpoint, then
-    * `Materialize.cutObserving` stores the raw scores and observes
-    * their total in the same job, and the renormalization is a lazy
-    * `decimal(38,0)` projection over the cut, so the join and
-    * aggregate run once per half-step.
+    * Scale shape: the edge list is kept. The first half-step is one
+    * capped map-side aggregate job in which each edge sends `scale` to
+    * its target and 0 to its source, so its keys are the node set and
+    * the empty-graph check costs no job. If that job sends the driver
+    * at most `broadcastNodeLimit` entries (node keys summed over the
+    * partitions, see [[graft.MapSide.combineAtMost]]), the score
+    * tables stay on the driver: each later half-step is one job over
+    * the kept edges with no exchange, whose partitions send at most
+    * the keys the first job's did, and the renormalization runs on the
+    * driver in `BigInt`. Otherwise each half-step joins the score
+    * table into the kept edges (broadcast while the graph has at most
+    * `broadcastNodeLimit` nodes, a shuffle join above) and groups by
+    * the other endpoint, then `Materialize.cutObserving` stores the
+    * raw scores and observes their total in the same job, and the
+    * renormalization is a lazy `decimal(38,0)` projection over the
+    * cut, so the join and aggregate run once per half-step.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000L,
@@ -285,18 +247,19 @@ object PageRank {
     require(iters >= 1 && iters <= 100, s"iters=$iters out of [1,100]")
     val e = keep(edges.select(col(srcCol).as("__src"),
       col(dstCol).as("__dst")).distinct())
-    // first authority half-step under uniform hubs: each edge sends
-    // `scale` to its target and 0 to its source, so its keys are the
-    // node set
     MapSide.combineAtMost(e.rdd, broadcastNodeLimit, plus) { r =>
       val (u, v) = (r.get(0), r.get(1))
       Iterator(u -> 0L, v -> (if (u == null) 0L else scale))
         .filter(_._1 != null)
     } match {
       case Some(a0) => hitsOnDriver(e, a0, iters, scale)
-      case None => hitsRelational(e, keep, iters, scale)
+      case None => hitsRelational(e, keep, iters, scale, broadcastNodeLimit)
     }
   }
+
+  private def requirePositive(total: BigInt): Unit =
+    require(total > 0, "HITS scores sum to 0: no edge has two non-null " +
+      "endpoints, or `scale` is below the node count")
 
   /** [[hits]] on driver-held score tables, given the raw authorities
     * of the first half-step.
@@ -304,10 +267,9 @@ object PageRank {
   private def hitsOnDriver(e: DataFrame, a0: Map[Any, Long], iters: Int,
       scale: Long): DataFrame = {
     require(a0.nonEmpty, "empty graph")
-    // null is no node: what an edge sends it is dropped
-    def renorm(sums: Map[Any, Long]): Map[Any, Long] = {
-      val raw = sums.filter(_._1 != null)
+    def renorm(raw: Map[Any, Long]): Map[Any, Long] = {
       val total = BigInt(raw.values.sum)
+      requirePositive(total)
       raw.map { case (k, x) => k -> (BigInt(x) * scale / total).toLong }
     }
     var auths = renorm(a0)
@@ -318,28 +280,38 @@ object PageRank {
     }
     val hitsSchema = StructType(Seq(nodeColumn(e).schema.head,
       StructField("hub", LongType), StructField("authority", LongType)))
-    local(e, hitsSchema, a0.keys.toSeq.map { v =>
+    e.sparkSession.createDataFrame(a0.keys.toSeq.map { v =>
       Row(v, hubs.getOrElse(v, 0L), auths.getOrElse(v, 0L))
-    })
+    }.asJava, hitsSchema)
   }
 
-  /** [[hits]] past `broadcastNodeLimit`: the relational loop. */
+  /** [[hits]] when the first half-step sent the driver too much: the
+    * relational loop. The score table is still broadcast into the
+    * edges while the graph has at most `broadcastNodeLimit` nodes
+    * (spread over many partitions, it can send more entries than
+    * that).
+    */
   private def hitsRelational(e: DataFrame, keep: Materialize.Keep,
-      iters: Int, scale: Long): DataFrame = {
+      iters: Int, scale: Long, broadcastNodeLimit: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     val dec = "decimal(38,0)"
     val nodes = keep(nodeColumn(e).distinct())
-    def renormLit(raw: DataFrame, c: String, tot: Long): DataFrame =
+    val bcastScores = nodes.count() <= broadcastNodeLimit
+    def scoreSide(df: DataFrame): DataFrame =
+      if (bcastScores) broadcast(df) else df
+    def renormLit(raw: DataFrame, c: String, tot: Long): DataFrame = {
+      requirePositive(tot)
       raw.select($"node", expr(
         s"cast((cast($c as $dec) * ${scale}L) div cast(${tot}L as $dec) " +
           s"as bigint)").as(c))
+    }
 
     var hubs = Materialize.cut(nodes.select($"node", lit(scale).as("hub")))
     var auths: DataFrame = null
     for (_ <- 1 to iters) {
       val (aRaw, aTot) = Materialize.cutObserving(nodes.join(
-        e.join(hubs, $"__src" === $"node")
+        e.join(scoreSide(hubs), $"__src" === $"node")
           .groupBy($"__dst").agg(sum($"hub").as("__a"))
           .select($"__dst".as("node"), $"__a"),
         Seq("node"), "left")
@@ -347,7 +319,7 @@ object PageRank {
         sum($"auth"))
       auths = renormLit(aRaw, "auth", aTot)
       val (hRaw, hTot) = Materialize.cutObserving(nodes.join(
-        e.join(auths, $"__dst" === $"node")
+        e.join(scoreSide(auths), $"__dst" === $"node")
           .groupBy($"__src").agg(sum($"auth").as("__h"))
           .select($"__src".as("node"), $"__h"),
         Seq("node"), "left")
@@ -362,13 +334,13 @@ object PageRank {
   /** Σ of `scores` along every kept edge, from its endpoint at column
     * `from` to the one at `to`: one map-side aggregate job whose
     * closures read only a broadcast of `scores`. An endpoint with no
-    * score sends nothing; a null target is summed under the null key.
+    * score sends nothing, and nothing is sent to a null endpoint.
     */
   private def sumAlong(e: DataFrame, scores: Map[Any, Long], from: Int,
       to: Int): Map[Any, Long] = {
     val b = e.sparkSession.sparkContext.broadcast(scores)
     try MapSide.combine(e.rdd, plus) { r =>
-      b.value.get(r.get(from)).map(r.get(to) -> _)
+      Option(r.get(to)).flatMap(v => b.value.get(r.get(from)).map(v -> _))
     } finally b.destroy()
   }
 
@@ -377,8 +349,4 @@ object PageRank {
     */
   private def nodeColumn(e: DataFrame): DataFrame =
     e.select(col("__src").as("node")).union(e.select(col("__dst").as("node")))
-
-  /** `rows` as a local relation under `schema`. */
-  private def local(e: DataFrame, schema: StructType, rows: Seq[Row])
-      : DataFrame = e.sparkSession.createDataFrame(rows.asJava, schema)
 }

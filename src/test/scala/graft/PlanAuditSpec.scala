@@ -613,15 +613,15 @@ class PlanAuditSpec extends AnyFunSuite {
       "centroid agg lost map-side combine")
   }
 
-  test("q_pagerank: lineage is cut — the plan scans the driver-held ranks") {
+  test("q_pagerank: lineage is truncated — the output reads the " +
+    "iteration checkpoint, not a 10-join-deep plan") {
     val p = plan("q_pagerank")
-    assert(p.contains("LocalTableScan") && !p.contains("ExistingRDD"),
-      s"the plan reads no local result of the iterations:\n${p.take(1500)}")
+    assert(p.contains("ExistingRDD"),
+      s"localCheckpoint gone — plan rebuilds the iterations:\n${p.take(1500)}")
     assert(!p.contains("CartesianProduct"))
-    // the work after the iterations is just the ordering of a skinny
-    // table
+    // the post-checkpoint work is just the ordering of a skinny table
     assert("Join".r.findAllIn(p).isEmpty,
-      "joins leaked past the iterations")
+      "joins leaked past the checkpoint boundary")
   }
 
   test("q_k_anonymity: level count tables broadcast back — document " +

@@ -15,10 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Materialize, SparkEntry, SparkHarness}
 
-/** [[PageRank.run]] and [[PageRank.hits]] on the driver-held score
-  * vector: parity with a plain-Scala integer reference and with the
-  * relational loop past `broadcastNodeLimit`, the job-count law, and
-  * results that survive losing every cached block.
+/** [[PageRank.hits]] on the driver-held score vector: parity with a
+  * plain-Scala integer reference and with the relational loop, the
+  * fallback when the partitions would send the driver too much, the
+  * job-count law, and results that survive losing every cached block.
+  * [[PageRank.run]]'s broadcast and shuffle-join branches are checked
+  * against the same kind of reference.
   */
 class PageRankVectorSpec extends AnyFunSuite {
   private lazy val spark = SparkHarness.spark
@@ -117,6 +119,22 @@ class PageRankVectorSpec extends AnyFunSuite {
   private def rankMap(df: DataFrame): Map[Any, Long] =
     df.collect().map(r => r.get(0) -> r.getLong(1)).toMap
 
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The final plan of a collected frame. */
+  private def planOf(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
+
   // ---- parity -----------------------------------------------------------
 
   test("hits equals the integer reference and the relational loop on " +
@@ -136,31 +154,60 @@ class PageRankVectorSpec extends AnyFunSuite {
   }
 
   test("hits keeps an endpoint of a null edge as a node and leaves " +
-    "null out") {
+    "null out; with no edge of two endpoints both branches fail alike") {
     val (df, _) = frame(Seq((1, 2), (3, null), (null, 4)), StringType)
-    val out = hitsMap(PageRank.hits(df, "src", "dst", iters = 2))
-    assert(out.keySet == Set("n1", "n2", "n3", "n4"))
-    assert(out("n1") == ((scale, 0L)) && out("n2") == ((0L, scale)))
-    assert(out("n3") == ((0L, 0L)) && out("n4") == ((0L, 0L)))
+    for (limit <- Seq(0L, 10000000L)) {
+      val out = hitsMap(PageRank.hits(df, "src", "dst", iters = 2,
+        broadcastNodeLimit = limit))
+      assert(out.keySet == Set("n1", "n2", "n3", "n4"), limit)
+      assert(out("n1") == ((scale, 0L)) && out("n2") == ((0L, scale)))
+      assert(out("n3") == ((0L, 0L)) && out("n4") == ((0L, 0L)))
+    }
+    val (lone, _) = frame(Seq((1, null)), LongType)
+    val messages = Seq(0L, 10000000L).map { limit =>
+      intercept[IllegalArgumentException](PageRank.hits(lone, "src", "dst",
+        iters = 2, broadcastNodeLimit = limit)).getMessage
+    }
+    assert(messages.distinct.size == 1, messages)
+    assert(messages.head.contains("HITS scores sum to 0"), messages)
   }
 
-  test("PageRank.run equals the integer reference and the relational " +
-    "loop, dangling nodes allowed") {
+  test("hits falls back to the relational loop when its partitions " +
+    "would send the driver more than broadcastNodeLimit entries") {
+    // 40 distinct edges over 10 nodes, kept in 4 partitions: each
+    // partition sees more than 12 / 4 nodes, though 10 <= 12
+    val (df, edges) = frame((0 until 10).flatMap(i =>
+      (1 to 4).map(d => (i, (i + d) % 10))), LongType)
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val capped = PageRank.hits(df, "src", "dst", iters = 2,
+        broadcastNodeLimit = 12L)
+      val vector = PageRank.hits(df, "src", "dst", iters = 2,
+        broadcastNodeLimit = 40L)
+      assert(planOf(capped).contains("ExistingRDD"))
+      assert(!planOf(vector).contains("ExistingRDD"))
+      assert(planOf(vector).contains("LocalTableScan"))
+      assert(rows(capped) == rows(vector))
+      assert(hitsMap(vector) == refHits(edges, 2))
+    }
+  }
+
+  test("PageRank.run equals the integer reference in both its broadcast " +
+    "and shuffle-join branches, dangling nodes allowed") {
     for (seed <- 1 to 4; t <- Seq(StringType, LongType)) {
       val (df, edges) = frame(graph(seed, 25, 80, nulls = seed - 1), t)
       val iters = 2 * seed - 2
       def pr(limit: Long) = PageRank.run(df, "src", "dst", iters,
         requireNoDangling = false, broadcastNodeLimit = limit)
-      val vector = pr(10000000L)
-      assert(rankMap(vector) == refRank(edges, iters), s"seed $seed $t")
-      val relational = pr(0L)
-      assert(rows(vector) == rows(relational), s"seed $seed $t")
-      assert(vector.schema == relational.schema)
+      val bcast = pr(10000000L)
+      assert(rankMap(bcast) == refRank(edges, iters), s"seed $seed $t")
+      val shuffled = pr(0L)
+      assert(rows(bcast) == rows(shuffled), s"seed $seed $t")
+      assert(bcast.schema == shuffled.schema)
     }
   }
 
-  test("PageRank.run on symmetrized graphs equals the reference and the " +
-    "relational loop, and both reject a dangling node") {
+  test("PageRank.run on symmetrized graphs equals the reference in both " +
+    "branches, and both reject a dangling node") {
     for (seed <- 5 to 7; t <- Seq(StringType, LongType)) {
       val one = graph(seed, 20, 50, nulls = 0)
       val sym = one ++ one.map(_.swap)
@@ -168,9 +215,9 @@ class PageRankVectorSpec extends AnyFunSuite {
       for (symmetric <- Seq(false, true)) {
         def pr(limit: Long) = PageRank.run(df, "src", "dst", 10,
           symmetric = symmetric, broadcastNodeLimit = limit)
-        val vector = pr(10000000L)
-        assert(rankMap(vector) == refRank(edges, 10), s"seed $seed $t")
-        assert(rows(vector) == rows(pr(0L)), s"seed $seed $t")
+        val bcast = pr(10000000L)
+        assert(rankMap(bcast) == refRank(edges, 10), s"seed $seed $t")
+        assert(rows(bcast) == rows(pr(0L)), s"seed $seed $t")
       }
     }
     // the three pure authorities and the null endpoint are dangling
@@ -230,33 +277,16 @@ class PageRankVectorSpec extends AnyFunSuite {
     }
   }
 
-  test("PageRank.run(iters = k): at most k + 3 jobs; iters = 0 runs no " +
-    "loop job") {
-    val sym = edgeRange.union(edgeRange.select(col("dst").as("src"),
-      col("src").as("dst")))
-    for (k <- Seq(0, 2, 10)) {
-      val jobs = jobsOf(PageRank.run(sym, "src", "dst", iters = k,
-        symmetric = true).collect())
-      assert(jobs.size <= k + 3, jobs)
-      val loop = loopJobs(jobs)
-      // the first job yields degrees and nodes; each iteration one more
-      assert(loop.size == k + 1, jobs)
-      assert(loop.forall(_._2 == 0L), jobs)
-    }
-  }
-
   // ---- lost-block law ---------------------------------------------------
 
-  test("q_hits and q_pagerank return the same rows after every cached " +
-    "block is dropped between build and action") {
+  test("q_hits returns the same rows after every cached block is " +
+    "dropped between build and action") {
     val dir = "perfbench/data/sf0.001"
-    for (q <- Seq("q_hits", "q_pagerank")) {
-      val undisturbed = SparkEntry.queries(q)(spark, dir).collect().toSeq
-      Materialize.releaseAll(spark)
-      val df = SparkEntry.queries(q)(spark, dir)
-      Materialize.releaseAll(spark)
-      assert(df.collect().toSeq == undisturbed, q)
-      assert(undisturbed.nonEmpty, q)
-    }
+    val undisturbed = SparkEntry.queries("q_hits")(spark, dir).collect().toSeq
+    Materialize.releaseAll(spark)
+    val df = SparkEntry.queries("q_hits")(spark, dir)
+    Materialize.releaseAll(spark)
+    assert(df.collect().toSeq == undisturbed)
+    assert(undisturbed.nonEmpty)
   }
 }
