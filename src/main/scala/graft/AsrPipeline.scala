@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.asr.WordRecognizer
@@ -86,8 +86,34 @@ object AsrPipeline {
       segment: String, reason: String, duration_ms: Long,
       confidence: Double)
 
+  /** `perDoc` is the cached per-document outcome table; `segments`,
+    * `rejections` and `summary` are narrow projections of it.
+    */
   final case class Result(segments: Dataset[SegmentRow],
-      rejections: Dataset[RejectionRow], summary: DataFrame)
+      rejections: Dataset[RejectionRow], summary: DataFrame,
+      perDoc: Dataset[DocOutcomes])
+
+  /** A [[RejectionRow]]'s columns, read from outcome struct `o`. */
+  private[graft] def rejectionColumns(o: Column): Seq[Column] = Seq(
+    o("doc_id").as("doc_id"), o("group_id").as("group_id"),
+    o("segment").as("segment"), o("reason").as("reason"),
+    o("duration_ms").as("duration_ms"), o("avg_conf").as("confidence"))
+
+  /** A5 summary (claude_research_optimal.py:684–694) + run counts, read
+    * from a per-document row; the summary holds the docs for which
+    * `hasOutcomes` is true.
+    */
+  private[graft] val summaryColumns: Seq[Column] = Seq(
+    col("doc_id"), col("exported"), col("rejected"), col("equal_runs"),
+    col("bridged_groups"),
+    round(col("rejected") * 100.0 / (col("exported") + col("rejected")), 2)
+      .as("rejection_rate_pct"),
+    // F7 — batch success gating (batch_processor.py:88–98): a doc
+    // "fails" when it exports zero segments
+    when(col("exported") > 0, "success").otherwise("failed").as("status"))
+
+  private[graft] val hasOutcomes: Column =
+    col("exported") + col("rejected") > 0
 
   // ------------------------------------------------------------ stages
 
@@ -336,30 +362,24 @@ object AsrPipeline {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val perDoc =
-      Materialize.share(docs.map(outcomesOf(_, base, validator, cfg)))
-    val outcomes = perDoc.select(explode($"outcomes").as("o")).select($"o.*")
-    val segments = outcomes.filter($"kept")
-      .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",
-        $"sample_rate", $"duration_s", $"words", $"pieces", $"avg_conf",
-        $"acoustic_quality")
+    project(
+      Materialize.share(docs.map(outcomesOf(_, base, validator, cfg))))
+  }
+
+  /** The [[Result]] frames of a per-document outcome table. */
+  private[graft] def project(perDoc: Dataset[DocOutcomes]): Result = {
+    val spark = perDoc.sparkSession
+    import spark.implicits._
+    val outcomes = perDoc.select(explode($"outcomes").as("o"))
+    val segments = outcomes.filter($"o.kept")
+      .select($"o.doc_id", $"o.group_id", $"o.segment", $"o.text", $"o.pcm",
+        $"o.sample_rate", $"o.duration_s", $"o.words", $"o.pieces",
+        $"o.avg_conf", $"o.acoustic_quality")
       .as[SegmentRow]
-    val rejections = outcomes.filter(!$"kept")
-      .select($"doc_id", $"group_id", $"segment",
-        $"reason", $"duration_ms", $"avg_conf".as("confidence"))
+    val rejections = outcomes.filter(!$"o.kept")
+      .select(rejectionColumns($"o"): _*)
       .as[RejectionRow]
-
-    // A5 summary (claude_research_optimal.py:684–694) + run counts, for
-    // the docs with at least one outcome
-    val summary = perDoc.filter($"exported" + $"rejected" > 0)
-      .select($"doc_id", $"exported", $"rejected", $"equal_runs",
-        $"bridged_groups",
-        round($"rejected" * 100.0 / ($"exported" + $"rejected"), 2)
-          .as("rejection_rate_pct"),
-        // F7 — batch success gating (batch_processor.py:88–98): a doc
-        // "fails" when it exports zero segments
-        when($"exported" > 0, "success").otherwise("failed").as("status"))
-
-    Result(segments, rejections, summary)
+    val summary = perDoc.filter(hasOutcomes).select(summaryColumns: _*)
+    Result(segments, rejections, summary, perDoc)
   }
 }

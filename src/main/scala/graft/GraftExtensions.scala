@@ -2,17 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, ExpressionInfo, InterpretedOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
 
 import graft.plans.{DotLong, DotProduct, GramHashExpression, MultisetOverlapExpression, NumToWordsExpression, ShingleHashExpression, SqDistLong, TokenNgramsExpression}
 
 /** Engine SQL surface: registers graft-native functions so
   * `spark.sql("SELECT num_to_words(n) ...")` works in any session
   * configured with
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * `spark.sql.extensions=graft.GraftExtensions`, and the
+  * [[SortLocalRelation]] optimizer rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectFunction((
       new FunctionIdentifier("num_to_words"),
       new ExpressionInfo(classOf[NumToWordsExpression].getName,
@@ -57,5 +62,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "multiset_overlap"),
       (children: Seq[Expression]) =>
         MultisetOverlapExpression(children(0), children(1))))
+  }
+}
+
+/** A global sort of rows the driver already holds runs on the driver:
+  * `Sort` over a non-streaming `LocalRelation`, with deterministic
+  * order expressions, becomes the relation with its rows sorted, so
+  * no range-partitioned exchange (and its sampling job) is planned.
+  * The ordering is the one `SortExec` evaluates.
+  */
+object SortLocalRelation extends Rule[LogicalPlan] {
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithPruning(
+      _.containsAllPatterns(SORT, LOCAL_RELATION)) {
+    case Sort(order, true, r: LocalRelation, _)
+        if !r.isStreaming && order.forall(_.deterministic) =>
+      val ordering = new InterpretedOrdering(
+        BindReferences.bindReferences(order, r.output))
+      r.copy(data = r.data.sorted(ordering))
   }
 }

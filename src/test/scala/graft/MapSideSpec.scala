@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[MapSide.combineAtMost]] bounds what the partitions send the
@@ -23,5 +25,41 @@ class MapSideSpec extends AnyFunSuite {
     assert(fold(rdd.coalesce(1), 2L).isEmpty)
     assert(fold(sc.emptyRDD[String], 0L).contains(Map.empty))
     assert(MapSide.combine(rdd, plus)(k => Iterator(k -> 1L)) == all)
+  }
+
+  test("a partition that passes its share stops decoding its rows there") {
+    val decoded = sc.longAccumulator("decoded")
+    // one partition of 1000 distinct keys; a share of 10 keys
+    val rdd = sc.parallelize(0 until 1000, 1)
+    val out = MapSide.combineAtMost(rdd, 10L, plus) { k =>
+      decoded.add(1L)
+      Iterator(k -> 1L)
+    }
+    assert(out.isEmpty)
+    assert(decoded.sum == 11L, decoded.sum)
+  }
+
+  test("the first partition past its share cancels the tasks not yet " +
+    "run") {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        started.incrementAndGet()
+    }
+    // 64 partitions of 20 distinct keys, 10 ms per row; a share of 10
+    val rdd = sc.parallelize(0 until 1280, 64)
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val o = MapSide.combineAtMost(rdd, 640L, plus) { k =>
+        Thread.sleep(10L)
+        Iterator(k -> 1L)
+      }
+      ListenerDrain(sc)
+      o
+    } finally sc.removeSparkListener(listener)
+    assert(out.isEmpty)
+    assert(started.get() < 32, s"${started.get()} of 64 tasks started")
+    assert(MapSide.combine(rdd, plus)(k => Iterator(k -> 1L)).size == 1280)
   }
 }

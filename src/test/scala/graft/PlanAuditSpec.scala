@@ -624,6 +624,14 @@ class PlanAuditSpec extends AnyFunSuite {
       "joins leaked past the checkpoint boundary")
   }
 
+  test("q_hits: the action sorts the driver-held result in place — no " +
+    "exchange") {
+    val df = SparkEntry.queries("q_hits")(spark, dir)
+    df.collect()
+    assert(ExplainPlans.exchangeCounts(df.queryExecution.executedPlan) ==
+      (0, 0), df.queryExecution.executedPlan.treeString)
+  }
+
   test("q_k_anonymity: level count tables broadcast back — document " +
     "rows never shuffle") {
     val p = plan("q_k_anonymity")

@@ -53,22 +53,22 @@ class PageRankVectorSpec extends AnyFunSuite {
   }
 
   /** PageRank with damping 17/20 over every edge (duplicates count).
-    * A null endpoint is a node of its own that no edge reaches and
-    * that sends nothing; an edge (u, null) still counts in u's degree.
+    * Null is no node: an edge with a null endpoint adds nothing, not
+    * even to its source's degree, and its other endpoint is a node.
     */
   private def refRank(edges: Seq[(Any, Any)], iters: Int): Map[Any, Long] = {
-    val nodes = edges.flatMap { case (u, v) => Seq(u, v) }.distinct
-    val deg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val nodes = edges.flatMap { case (u, v) => Seq(u, v) }.filter(_ != null)
+      .distinct
+    val live = edges.filter { case (u, v) => u != null && v != null }
+    val deg = live.groupMapReduce(_._1)(_ => 1L)(_ + _)
     val n = nodes.size.toLong
     val base = (3L * scale) / (20L * n)
     var rank: Map[Any, Long] = nodes.map(_ -> scale / n).toMap
     for (_ <- 1 to iters) {
-      val sums = edges.filter(_._1 != null)
+      val sums = live
         .groupMapReduce(_._2)(e => rank(e._1) / deg(e._1))(_ + _)
-      rank = nodes.map { v =>
-        v -> (base + 17L * (if (v == null) 0L else sums.getOrElse(v, 0L)) /
-          20L)
-      }.toMap
+      rank = nodes.map(v => v -> (base + 17L * sums.getOrElse(v, 0L) / 20L))
+        .toMap
     }
     rank
   }
@@ -193,13 +193,18 @@ class PageRankVectorSpec extends AnyFunSuite {
 
   test("PageRank.run equals the integer reference in both its broadcast " +
     "and shuffle-join branches, dangling nodes allowed") {
-    for (seed <- 1 to 4; t <- Seq(StringType, LongType)) {
-      val (df, edges) = frame(graph(seed, 25, 80, nulls = seed - 1), t)
-      val iters = 2 * seed - 2
+    // 3 and 4 are nodes whose only edge has a null endpoint
+    val nullOnly = Seq[(Any, Any)]((1, 2), (2, 1), (3, null), (null, 4))
+    for (seed <- 0 to 4; t <- Seq(StringType, LongType)) {
+      val (df, edges) = frame(
+        if (seed == 0) nullOnly else graph(seed, 25, 80, nulls = seed - 1), t)
+      val iters = if (seed == 0) 3 else 2 * seed - 2
       def pr(limit: Long) = PageRank.run(df, "src", "dst", iters,
         requireNoDangling = false, broadcastNodeLimit = limit)
       val bcast = pr(10000000L)
       assert(rankMap(bcast) == refRank(edges, iters), s"seed $seed $t")
+      assert(!rankMap(bcast).contains(null), s"seed $seed $t")
+      if (seed == 0) assert(rankMap(bcast).size == 4)
       val shuffled = pr(0L)
       assert(rows(bcast) == rows(shuffled), s"seed $seed $t")
       assert(bcast.schema == shuffled.schema)
@@ -220,7 +225,28 @@ class PageRankVectorSpec extends AnyFunSuite {
         assert(rows(bcast) == rows(pr(0L)), s"seed $seed $t")
       }
     }
-    // the three pure authorities and the null endpoint are dangling
+    // mirrored null edges: 99's only edges are (99, null) and
+    // (null, 99), so it is a dangling node under either flag
+    for (seed <- 8 to 9; t <- Seq(StringType, LongType)) {
+      val one = graph(seed, 20, 50, nulls = 4) :+ ((99, null))
+      val (df, edges) = frame(one ++ one.map(_.swap), t)
+      val expected = refRank(edges, 4)
+      assert(!expected.contains(null) &&
+        expected.keys.exists(_.toString.endsWith("99")))
+      for (symmetric <- Seq(false, true)) {
+        def pr(limit: Long, dangling: Boolean) = PageRank.run(df, "src",
+          "dst", 4, symmetric = symmetric, requireNoDangling = !dangling,
+          broadcastNodeLimit = limit)
+        val bcast = pr(10000000L, dangling = true)
+        assert(rankMap(bcast) == expected, s"seed $seed $t $symmetric")
+        assert(rows(bcast) == rows(pr(0L, dangling = true)),
+          s"seed $seed $t $symmetric")
+        val message = intercept[IllegalArgumentException](
+          pr(10000000L, dangling = false)).getMessage
+        assert(message.contains(": 1 dangling node(s)"), message)
+      }
+    }
+    // the three pure authorities are dangling; null is no node
     val (dangling, _) = frame(Seq((1, 2), (2, 1), (3, 1)) ++
       graph(1, 3, 0, nulls = 1).filter(_._1 != 1000), StringType)
     val messages = Seq(0L, 10000000L).map { limit =>
@@ -229,7 +255,7 @@ class PageRankVectorSpec extends AnyFunSuite {
         .getMessage
     }
     assert(messages.distinct.size == 1, messages)
-    assert(messages.head.contains(": 4 dangling node(s)"), messages)
+    assert(messages.head.contains(": 3 dangling node(s)"), messages)
   }
 
   // ---- job-count law ----------------------------------------------------
